@@ -6,20 +6,34 @@ Replaces the reference's delegated ``es.search`` term/match queries
 Execution model (scales to 1000 executors):
 1. query → terms via the *same* tokenizer as the build;
 2. tiny pruned reads: term_stats filtered to the query terms (directory
-   pruning on term_bucket + row-group min/max on term) → df map; stats → N,
-   avgdl — a few KB regardless of corpus size;
-3. postings rows for (term ∈ query) scanned in parallel, grouped per
-   segment (``applyInPandas``), scored with a vectorized **block-max
-   MaxScore** pruner (same dynamic-pruning family as WAND — Turtle & Flood
-   1995; Ding & Suel BMW 2011): terms are processed by descending max
+   pruning on term_bucket + row-group min/max on term) → delete-adjusted
+   df map; stats → N, avgdl — driver-side pyarrow, a few KB and zero Spark
+   jobs regardless of corpus size;
+3. postings rows for (term ∈ query), same pruning, grouped per segment and
+   scored by ``_score_segment``: a vectorized **block-max MaxScore**
+   pruner (same dynamic-pruning family as WAND — Turtle & Flood 1995;
+   Ding & Suel BMW 2011): terms are processed by descending max
    contribution; once the remaining terms' upper bounds can't lift a new
    doc past the running k-th score, only already-seen candidates are
    scored, and block-max metadata skips decoding blocks with no candidate
    overlap. Pruning is exact — surviving scores are identical to
    exhaustive evaluation;
 4. per-segment bounded top-k (min-heap semantics via np.argpartition) →
-   driver-side merge: global orderBy(score desc, doc_id asc).limit(k) over
-   n_segments·k tiny rows.
+   global merge by (score desc, doc_id asc) over n_segments·k tiny rows.
+
+Step 3 runs on one of two sides, chosen per query by Σdf of the query
+terms (known after step 2, before any posting is read):
+- **driver side** (Σdf ≤ ``_DRIVER_SCORE_MAX_DF``): one pyarrow read of
+  the pruned postings, the per-segment sidecar rows by point read, the
+  segments scored in-process and the merged top-k handed back as a local
+  relation — zero Spark jobs. Any Spark plan costs a scheduling and
+  python-worker round-trip (~0.2 s even for one tiny task), which is
+  most of a small query's latency;
+- **Spark side** (larger reads): the postings scan fans out across the
+  cluster and each segment scores in an ``applyInPandas`` task.
+Both sides call the same ``_score_segment`` with the same df, N, avgdl,
+bounds and tombstone blobs, so they are rank-identical; only where the
+work runs differs.
 
 Determinism contract: per-term contributions accumulate in ascending-term
 order in float64 and final scores round to 9 decimals — identical to the
@@ -122,8 +136,30 @@ _SIDECAR_BC_MAX_BYTES = 256 * 1024 * 1024
 # parallelism cap and scale out normally
 _SEGMENTS_PER_SCORE_TASK = 8
 
+# search() scores on the driver when the query terms' summed df is at or
+# under this many postings, and plans the Spark scorer above it. From the
+# driver-vs-Spark crossover scripts/topk_crossover.py measures (200k-doc
+# webtext index, local[4] on a 4-vCPU VM): the driver side is 0.2-0.3× the
+# Spark side's p50 up to Σdf 200k, 0.67× at 1-2M, and reaches parity at
+# 3-5M. The cap sits at the last band the driver still wins clearly;
+# re-derive it with that script on other hardware.
+_DRIVER_SCORE_MAX_DF = 2_000_000
+
 # fallback when an old stats sidecar predates the docs_per_segment column
 DEFAULT_DOCS_PER_SEGMENT_HINT = 8192
+
+
+class MissingSidecarError(LookupError):
+    """A matched doc_id has no doclens sidecar entry: its segment is absent
+    from the sidecar, or the segment's lens array is too short for it."""
+
+
+def _empty_topk(spark: SparkSession) -> DataFrame:
+    """Zero-row TOPK_SCHEMA frame whose collect runs no Spark job: the
+    optimizer folds limit(0) over a local relation to an empty local
+    relation, while ``createDataFrame([])`` (or an empty pandas frame)
+    goes through a parallelized RDD and costs one job."""
+    return spark.createDataFrame([(0, 0.0)], TOPK_SCHEMA).limit(0)
 
 
 def _select_topk(
@@ -157,11 +193,12 @@ def _score_segment(
     """Score one segment's query-term posting rows. ``pdf`` has one row per
     posting block: term, df, block_no, first/last_doc_id, max_impact,
     doc_deltas, tfs; ``sidecar`` is the segment's ONE doclens row (lens,
-    start_doc_id, and the optional tombstone blob) delivered via cogroup —
-    joining it onto the posting rows instead would replicate the multi-KB
-    lens blob onto EVERY block row crossing the shuffle (measured ~40×
-    the real posting payload for a stopword query).
-    Vectorized block-max MaxScore.
+    start_doc_id, and the optional tombstone blob), or no row when the
+    segment is missing from the sidecar (the segment then yields no hits).
+    It arrives separately from the postings — joining it onto every
+    posting row would replicate the multi-KB lens blob onto EVERY block
+    row crossing the shuffle (measured ~40× the real posting payload for
+    a stopword query). Vectorized block-max MaxScore.
 
     ``bound_scale``: stored max_impacts were computed against the BUILD
     avgdl; after a segment merge the query avgdl can be larger, growing
@@ -366,50 +403,44 @@ def _score_segment(
 class IndexReader:
     """Reads the on-disk index layout written by plans.index_build.
 
-    Latency design: one Spark action per search. Term buckets are computed
-    driver-side with a bit-exact Python xxhash64 (no planning job), the
-    per-term df is a broadcast join folded into the scoring plan (no
-    separate collect round-trip), and the source DataFrames are built once
-    per reader so file listings are reused across queries."""
+    Latency design: opening a reader and answering a small search run no
+    Spark job. Term buckets are computed driver-side with a bit-exact
+    Python xxhash64; stats, per-term df (with tombstone deltas) and, for
+    queries whose summed df is at or under ``_DRIVER_SCORE_MAX_DF``, the
+    pruned postings and their sidecar rows are pyarrow reads scored on
+    the driver (see the module docstring). Larger queries plan the Spark
+    scorer: one exchange, with the df as a literal map and the doclens
+    sidecar as a per-reader broadcast, or the df/sidecar join plan on
+    tombstoned readers. The Spark source DataFrames and the pyarrow
+    dataset handles are built on first use and kept per reader, so file
+    listings are reused across queries."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
+        import pyarrow.compute as pc
+
         from ..plans.live_pointer import resolve_live
+        from ..plans.tombstones import delete_stats, has_deletes
 
         self.spark = spark
         # a live-pointer file (or legacy symlink) resolves to the current
         # committed index dir at open time — the catalog-pointer pattern,
         # so a concurrent upsert's repoint never shifts an open reader
         self.dir = Path(resolve_live(index_dir) or index_dir)
-        st = spark.read.parquet(str(self.dir / "stats/data")).collect()[0]
+        # per-reader caches: pyarrow dataset handles and Spark source
+        # frames by sub-directory, each built on first use
+        self._pa_cache: dict = {}
+        self._frames: dict[str, DataFrame] = {}
+        st = self._pa("stats/data").to_table().to_pylist()[0]
         self.N = int(st["N"])
         self.avgdl = float(st["avgdl"])
-        build_avgdl = (
-            float(st["build_avgdl"]) if "build_avgdl" in st.__fields__
-            else self.avgdl
-        )
+        build_avgdl = float(st.get("build_avgdl") or self.avgdl)
         # conservative block-bound inflation for merged indexes (see
         # _score_segment); exactly 1.0 for a freshly-built index
         self.bound_scale = max(1.0, self.avgdl / build_avgdl)
         self.term_buckets = int(st["term_buckets"])
-        self.dps = (
-            int(st["docs_per_segment"])
-            if "docs_per_segment" in st.__fields__
-            else DEFAULT_DOCS_PER_SEGMENT_HINT
-        )
+        self.dps = int(st.get("docs_per_segment") or DEFAULT_DOCS_PER_SEGMENT_HINT)
         self.profile = st["profile"]
-        self.positions = (
-            bool(st["positions"]) if "positions" in st.__fields__ else False
-        )
-        self._postings = spark.read.parquet(str(self.dir / "postings/data"))
-        self._doclens = spark.read.parquet(str(self.dir / "doclens/data"))
-        self._term_stats = spark.read.parquet(str(self.dir / "term_stats/data"))
-        # lazy driver-side metadata caches (round 6 latency work): the
-        # per-query df lookup and the doclens sidecar are tiny pruned
-        # reads, but as Spark jobs they cost a scheduling round-trip each
-        # (a search ran 6 jobs; the two broadcast-subquery builds were
-        # ~40% of p50). pyarrow reads them driver-side instead — same
-        # bucket-directory + row-group pruning, zero jobs.
-        self._ts_dataset = None
+        self.positions = bool(st.get("positions") or False)
         self._sidecar_cache = None
         # scoring-exchange width for the broadcast-sidecar fast path;
         # None → defaultParallelism (tunable: each extra task costs a
@@ -421,22 +452,18 @@ class IndexReader:
         # corpus exactly — n_deleted/deleted_len are exact integers from
         # the delete sidecar; the index's total token count folds out of
         # the per-segment doclens sidecar (N/docs_per_segment rows, one
-        # tiny distributed agg, only when deletes exist). df adjusts per
-        # query term from the term_df delta sidecar (same term_bucket
+        # driver-side pyarrow sum, only when deletes exist). df adjusts
+        # per query term from the term_df delta sidecar (same term_bucket
         # pruning as term_stats), so scoring matches an index built over
         # the post-delete corpus — stricter than Lucene, which serves
         # stale stats until a merge.
-        self._del_ids = self._del_seg = self._del_termdf = None
-        from ..plans.tombstones import delete_stats, has_deletes
-
+        self.has_deletes = False
         if has_deletes(self.dir):
             ds_ = delete_stats(self.dir)
             if ds_["n_deleted"]:
-                total_len = int(
-                    self._doclens.agg(
-                        F.sum("sum_len").alias("s")
-                    ).collect()[0]["s"]
-                )
+                self.has_deletes = True
+                lens = self._pa("doclens/data").to_table(columns=["sum_len"])
+                total_len = int(pc.sum(lens["sum_len"]).as_py())
                 self.N -= ds_["n_deleted"]
                 self.avgdl = (
                     (total_len - ds_["deleted_len"]) / self.N
@@ -444,20 +471,46 @@ class IndexReader:
                     else 1.0
                 )
                 self.bound_scale = max(1.0, self.avgdl / build_avgdl)
-                self._del_ids = spark.read.parquet(
-                    str(self.dir / "deletes/doc_ids/data")
-                )
-                self._del_seg = spark.read.parquet(
-                    str(self.dir / "deletes/segments/data")
-                )
-                self._del_termdf = spark.read.parquet(
-                    str(self.dir / "deletes/term_df/data")
-                )
+
+    def _pa(self, sub: str):
+        """pyarrow dataset over an index sub-directory (hive partitions
+        become columns), listed once per reader."""
+        if sub not in self._pa_cache:
+            import pyarrow.dataset as ds
+
+            self._pa_cache[sub] = ds.dataset(
+                str(self.dir / sub), format="parquet", partitioning="hive"
+            )
+        return self._pa_cache[sub]
+
+    def _frame(self, sub: str) -> DataFrame:
+        """Spark source DataFrame over an index sub-directory, built on
+        first use: ``spark.read.parquet`` runs a schema-inference job, so
+        the reader pays it only for the Spark plans it actually runs."""
+        if sub not in self._frames:
+            self._frames[sub] = self.spark.read.parquet(str(self.dir / sub))
+        return self._frames[sub]
+
+    @property
+    def _postings(self) -> DataFrame:
+        return self._frame("postings/data")
+
+    @property
+    def _doclens(self) -> DataFrame:
+        return self._frame("doclens/data")
+
+    @property
+    def _term_stats(self) -> DataFrame:
+        return self._frame("term_stats/data")
+
+    @property
+    def _del_ids(self) -> DataFrame | None:
+        return self._frame("deletes/doc_ids/data") if self.has_deletes else None
 
     def _strip_deleted(self, df: DataFrame) -> DataFrame:
         """Anti-join tombstoned ids out of a doc-id result — AQE broadcasts
         the delete set when small, shuffle-joins when genuinely large."""
-        if self._del_ids is None:
+        if not self.has_deletes:
             return df
         return df.join(self._del_ids, "doc_id", "left_anti")
 
@@ -501,9 +554,7 @@ class IndexReader:
                 if size > _SIDECAR_BC_MAX_BYTES:
                     self._sidecar_cache = (None,)
                 else:
-                    import pyarrow.dataset as ds
-
-                    tbl = ds.dataset(str(root), format="parquet").to_table(
+                    tbl = self._pa("doclens/data").to_table(
                         columns=["segment_id", "start_doc_id", "lens"]
                     )
                     m = {
@@ -521,39 +572,92 @@ class IndexReader:
                 self._sidecar_cache = (None,)
         return self._sidecar_cache[0]
 
-    def term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """Per-term global df. Driver-side pyarrow read of the pruned
-        term_stats buckets (directory pruning on term_bucket, row-group
-        min/max pruning on term — files are term-sorted) — a few KB and
-        zero Spark jobs regardless of corpus size. The dataset handle
-        (file listing) builds once per reader."""
-        if not terms:
-            return {}
-        buckets = self._buckets_for(terms)
+    def _term_filter(self, terms: list[str]):
+        """pyarrow filter mirroring the Spark scans' pushdown: term_bucket
+        partition pruning plus the row-group min/max term predicate."""
         import pyarrow.dataset as ds
 
-        if self._ts_dataset is None:
-            self._ts_dataset = ds.dataset(
-                str(self.dir / "term_stats/data"),
-                format="parquet",
-                partitioning="hive",
-            )
-        filt = ds.field("term_bucket").isin(
-            sorted(set(buckets.values()))
-        ) & ds.field("term").isin(terms)
-        tbl = self._ts_dataset.to_table(columns=["term", "df"], filter=filt)
-        dfs = {
-            t: int(d)
-            for t, d in zip(tbl["term"].to_pylist(), tbl["df"].to_pylist())
-        }
-        if self._del_termdf is not None:
-            pred = F.col("term_bucket").isin(
-                list(set(buckets.values()))
-            ) & F.col("term").isin(terms)
-            for r in self._del_termdf.where(pred).collect():
-                if r["term"] in dfs:
-                    dfs[r["term"]] -= int(r["df_delta"])
+        buckets = sorted(set(self._buckets_for(terms).values()))
+        return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(terms)
+
+    def term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """Per-term global df, delete-adjusted on tombstoned readers.
+        Driver-side pyarrow reads of the pruned term_stats buckets and,
+        with tombstones, of the term_df delta sidecar (directory pruning on
+        term_bucket, row-group min/max pruning on term — files are
+        term-sorted) — a few KB and zero Spark jobs regardless of corpus
+        size."""
+        if not terms:
+            return {}
+        filt = self._term_filter(terms)
+        tbl = self._pa("term_stats/data").to_table(
+            columns=["term", "df"], filter=filt
+        )
+        dfs = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+        if self.has_deletes:
+            deltas = self._pa("deletes/term_df/data")
+            # a delete set whose docs held no terms writes no partitions
+            if "term_bucket" in deltas.schema.names:
+                tbl = deltas.to_table(columns=["term", "df_delta"], filter=filt)
+                for t, d in zip(
+                    tbl["term"].to_pylist(), tbl["df_delta"].to_pylist()
+                ):
+                    if t in dfs:
+                        dfs[t] -= d
         return dfs
+
+    def _driver_topk(
+        self,
+        terms: list[str],
+        dfs: dict[str, int],
+        k: int,
+        after: tuple[float, int] | None,
+    ) -> DataFrame:
+        """The driver side of ``search``: one pyarrow read of the pruned
+        postings, each segment scored by ``_score_segment`` with its
+        sidecar row (point read off the segment-sorted doclens files, plus
+        the tombstone blob when deletes exist), then the per-segment top-k
+        merged by (score desc, doc_id asc). A segment missing from the
+        sidecar yields no hits, as on the Spark side. The result is a
+        local relation: collecting it runs no Spark job."""
+        import pyarrow.dataset as ds
+
+        post = self._pa("postings/data").to_table(
+            columns=[
+                "segment_id", "term", "block_no", "first_doc_id",
+                "last_doc_id", "count", "max_impact", "doc_deltas", "tfs",
+            ],
+            filter=self._term_filter(terms),
+        ).to_pandas()
+        if not len(post):
+            return _empty_topk(self.spark)
+        post["df"] = post["term"].map(dfs)
+        seg_filt = ds.field("segment_id").isin(post["segment_id"].unique())
+        side = self._pa("doclens/data").to_table(
+            columns=["segment_id", "start_doc_id", "lens"], filter=seg_filt
+        ).to_pandas()
+        if self.has_deletes:
+            dele = self._pa("deletes/segments/data").to_table(
+                columns=["segment_id", "deleted"], filter=seg_filt
+            ).to_pandas()
+            side = side.merge(dele, on="segment_id", how="left")
+        side_of = dict(iter(side.groupby("segment_id")))
+        parts = [
+            _score_segment(
+                grp, side_of.get(sid, side.iloc[:0]), self.N, self.avgdl, k,
+                bound_scale=self.bound_scale, after=after,
+            )
+            for sid, grp in post.groupby("segment_id")
+        ]
+        hits = pd.concat(parts)
+        if not len(hits):
+            return _empty_topk(self.spark)
+        ids, scores = _select_topk(
+            hits["doc_id"].to_numpy(), hits["score"].to_numpy(), k
+        )
+        return self.spark.createDataFrame(
+            pd.DataFrame({"doc_id": ids, "score": scores}), TOPK_SCHEMA
+        )
 
     def _scored_per_segment(
         self,
@@ -561,11 +665,13 @@ class IndexReader:
         k: int,
         after: tuple[float, int] | None,
         per_term_round: bool = False,
+        dfs: dict[str, int] | None = None,
     ) -> DataFrame:
-        """The shared scoring plan: pruned posting read → broadcast
+        """The shared Spark scoring plan: pruned posting read → broadcast
         (delete-adjusted) df → block_no=0 sidecar attach → per-segment
         block-max scorer. No global sort/limit — callers add their own
         cut (top-k, cursor page, or none for exhaustive scoring).
+        ``dfs``: the query's ``term_dfs``, when the caller already has it.
 
         The doclens sidecar joins onto ONE row per (segment, term) — the
         block_no=0 row — never onto every posting block row: joined
@@ -596,10 +702,11 @@ class IndexReader:
         ) & F.col("term").isin(terms)
         postings = self._postings.where(bucket_pred)
         N, avgdl, bscale = self.N, self.avgdl, self.bound_scale
-        if self._del_ids is None:
+        if not self.has_deletes:
             bc = self._sidecar_bc()
             if bc is not None:
-                dfs = self.term_dfs(terms)
+                if dfs is None:
+                    dfs = self.term_dfs(terms)
                 if dfs:
                     df_map = F.create_map(
                         *[
@@ -656,11 +763,13 @@ class IndexReader:
                     .applyInPandas(score_bc, TOPK_SCHEMA)
                 )
         stats = self._term_stats.where(bucket_pred).select("term", "df")
-        if self._del_termdf is not None:
+        if self.has_deletes:
             # exact post-delete df: stored df minus docs-containing-term
             # count over the deleted set (same pruned read shape)
-            delta = self._del_termdf.where(bucket_pred).select(
-                "term", "df_delta"
+            delta = (
+                self._frame("deletes/term_df/data")
+                .where(bucket_pred)
+                .select("term", "df_delta")
             )
             stats = stats.join(delta, "term", "left").select(
                 "term",
@@ -673,16 +782,18 @@ class IndexReader:
             "segment_id",
             "left_semi",
         )
-        if self._del_seg is not None:
+        if self.has_deletes:
             # the per-segment tombstone blob rides the same sidecar row;
             # segments with no deletes get NULL and the scorer skips masking
             doclens = doclens.join(
-                self._del_seg.select("segment_id", "deleted"),
+                self._frame("deletes/segments/data").select(
+                    "segment_id", "deleted"
+                ),
                 "segment_id",
                 "left",
             )
         side_cols = ["segment_id", "start_doc_id", "lens"] + (
-            ["deleted"] if self._del_seg is not None else []
+            ["deleted"] if self.has_deletes else []
         )
         doclens_b0 = doclens.select(*side_cols).withColumn(
             "block_no", F.lit(0)
@@ -690,7 +801,6 @@ class IndexReader:
         joined = postings.join(F.broadcast(stats), "term").join(
             doclens_b0, ["segment_id", "block_no"], "left"
         )
-        N, avgdl, bscale = self.N, self.avgdl, self.bound_scale
 
         def score(pdf: pd.DataFrame) -> pd.DataFrame:
             side = pdf.loc[pdf["lens"].notna()]
@@ -713,11 +823,18 @@ class IndexReader:
         previous page's last hit; returns the next k docs strictly after
         it in (score desc, doc_id asc) order. Cursor paging disables
         block-max pruning (see ``_score_segment``) but never re-returns
-        or skips a doc, ES-exact."""
+        or skips a doc, ES-exact.
+
+        Runs on the driver side when the query terms' summed df is at or
+        under ``_DRIVER_SCORE_MAX_DF`` (zero Spark jobs), else as the Spark
+        plan; both sides are rank-identical (module docstring)."""
         terms = sorted(set(tokenize_py(query, self.profile)))
         if not terms or k < 1:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        per_seg = self._scored_per_segment(terms, k, after)
+            return _empty_topk(self.spark)
+        dfs = self.term_dfs(terms)
+        if sum(dfs.values()) <= _DRIVER_SCORE_MAX_DF:
+            return self._driver_topk(terms, dfs, k, after)
+        per_seg = self._scored_per_segment(terms, k, after, dfs=dfs)
         return per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def search_after(
@@ -738,7 +855,7 @@ class IndexReader:
         construction (k=∞ means the pruning threshold never arms)."""
         terms = sorted(set(tokenize_py(query, self.profile)))
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _empty_topk(self.spark)
         return self._scored_per_segment(terms, 1 << 62, None)
 
     def collapse_top_hits(
@@ -822,7 +939,7 @@ class IndexReader:
         )[:max_query_terms]
         terms = [t for _, t in ranked]
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _empty_topk(self.spark)
         hits = self.search(" ".join(terms), k=k + 1)
         return (
             hits.where(F.col("doc_id") != doc_id)
@@ -1409,7 +1526,7 @@ class IndexReader:
         node = qs.parse_query_string(q)
         filt = self._eval_qs(node)
         if filt is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _empty_topk(self.spark)
 
         leaves: list = []
 
@@ -1471,7 +1588,7 @@ class IndexReader:
                         )
                     )
         if not parts:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _empty_topk(self.spark)
         from functools import reduce
 
         allparts = reduce(DataFrame.unionByName, parts)
@@ -1497,7 +1614,7 @@ class IndexReader:
         union/groupBy plan computed the identical ladder values)."""
         terms = sorted(set(tokenize_py(query, self.profile)))
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _empty_topk(self.spark)
         return self._scored_per_segment(
             terms, 1 << 62, None, per_term_round=True
         )
@@ -1512,7 +1629,7 @@ class IndexReader:
         (same plan, same ladder)."""
         toks = tokenize_py(text, self.profile)
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _empty_topk(self.spark)
         q = " ".join(toks[:-1] + [toks[-1] + "*"])
         return self.query_string_search(q, k=k)
 
@@ -1537,7 +1654,7 @@ class IndexReader:
             if tokenize_py(c, self.profile)
         ]
         if not parts:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return _empty_topk(self.spark)
         allparts = reduce(DataFrame.unionByName, parts)
         scored = (
             allparts.groupBy("doc_id")
@@ -1725,7 +1842,7 @@ class IndexReader:
         matches = self.phrase_docs(phrase, with_freq=True, slop=slop)
         from ..functions.bm25 import bm25_cols
 
-        if self._del_ids is None:
+        if not self.has_deletes:
             bc = self._sidecar_bc()
             if bc is not None:
                 m = matches.localCheckpoint(eager=True)
@@ -1753,6 +1870,15 @@ class IndexReader:
                         )
                         lens_out = np.empty(len(ids), dtype=np.int64)
                         for s in np.unique(slot):
+                            mask = slot == s
+                            # slot −1 (before the first segment) would
+                            # wrap to the LAST segment, and an offset past
+                            # the lens array reads a neighbour's lengths
+                            if s < 0:
+                                raise MissingSidecarError(
+                                    f"doc_id {int(ids[mask][0])} precedes "
+                                    "every doclens sidecar segment"
+                                )
                             sid = sids[s]
                             arr = decoded.get(sid)
                             if arr is None:
@@ -1760,10 +1886,14 @@ class IndexReader:
                                     bc.value[sid][1]
                                 ).astype(np.int64)
                                 decoded[sid] = arr
-                            mask = slot == s
-                            lens_out[mask] = arr[
-                                ids[mask] - starts_arr[s]
-                            ]
+                            off = ids[mask] - starts_arr[s]
+                            if off.max() >= len(arr):
+                                raise MissingSidecarError(
+                                    f"doc_id {int(ids[mask][off.argmax()])} "
+                                    f"is past segment {sid}'s {len(arr)} "
+                                    "doclens entries"
+                                )
+                            lens_out[mask] = arr[off]
                         yield pdf.assign(doc_len=lens_out)
 
                 with_len = m.mapInPandas(
@@ -2455,7 +2585,7 @@ def naive_bm25_topk(
     explode → two-phase aggs → window-free top-k via orderBy.limit."""
     terms = sorted(set(tokenize_py(query, profile)))
     if not terms:
-        return docs.sparkSession.createDataFrame([], TOPK_SCHEMA)
+        return _empty_topk(docs.sparkSession)
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         tokenize_col(text_col, profile).alias("toks"),

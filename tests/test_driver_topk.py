@@ -1,0 +1,180 @@
+"""BM25 top-k on both sides of the driver/Spark selection.
+
+Contracts:
+- ``search`` (and ``search_after`` through it) is rank-identical to the
+  exhaustive oracle whether the query scores on the driver (Σdf at or
+  under ``_DRIVER_SCORE_MAX_DF``) or in the Spark plan, on clean and
+  tombstoned indexes, for k ∈ {1, 10, 10^6} and for cursor pages;
+- opening a reader and answering a small search run zero Spark jobs;
+- a segment missing from the doclens sidecar yields no hits on either
+  side, and the phrase scorer's lens lookup raises a named error instead
+  of reading a neighbouring segment's lengths.
+"""
+
+from __future__ import annotations
+
+import itertools
+import shutil
+
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+import pytest
+
+from aether_elasticsearch_consumer_spark.fixtures.webtext import webtext_df
+from aether_elasticsearch_consumer_spark.functions.tokenizer import tokenize_py
+from aether_elasticsearch_consumer_spark.operators import topk
+from aether_elasticsearch_consumer_spark.operators.topk import IndexReader
+from aether_elasticsearch_consumer_spark.oracle.engine import (
+    build_oracle_index,
+    score_query,
+)
+from aether_elasticsearch_consumer_spark.plans.index_build import IndexBuilder
+from aether_elasticsearch_consumer_spark.plans.tombstones import apply_deletes
+
+KW = dict(docs_per_segment=64, term_buckets=8)
+DEAD = [0, 5, 63, 64, 100, 190, 250, 251, 299]
+QUERIES = ["keta", "keta gera", "the", "ba ke zo ri", "keta zzabsent"]
+SIDES = {"driver": 10**18, "spark": 0}
+
+
+def _docs(spark, idx: str) -> list[tuple[int, str]]:
+    return [
+        (r["doc_id"], r["text"])
+        for r in spark.read.parquet(f"{idx}/docs/data")
+        .select("doc_id", "text")
+        .collect()
+    ]
+
+
+@pytest.fixture(scope="module")
+def indexes(spark, tmp_path_factory):
+    """A 300-doc index and a tombstoned copy, each with its oracle."""
+    root = tmp_path_factory.mktemp("drvtopk")
+    clean = str(root / "clean")
+    IndexBuilder(spark, clean, **KW).build(
+        webtext_df(spark, 300, partitions=4), fingerprint_extra="drv300"
+    )
+    tomb = str(root / "tomb")
+    shutil.copytree(clean, tomb)
+    apply_deletes(spark, tomb, DEAD)
+    docs = _docs(spark, clean)
+    live = [(i, t) for i, t in docs if i not in set(DEAD)]
+    return {
+        "clean": (clean, build_oracle_index(docs)),
+        "tomb": (tomb, build_oracle_index(live)),
+    }
+
+
+def _rows(df) -> list[tuple[int, float]]:
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+@pytest.mark.parametrize("side", list(SIDES))
+@pytest.mark.parametrize("which", ["clean", "tomb"])
+@pytest.mark.parametrize("k", [1, 10, 10**6])
+def test_search_matches_oracle_on_both_sides(
+    spark, indexes, monkeypatch, side, which, k
+):
+    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", SIDES[side])
+    idx, oracle = indexes[which]
+    rd = IndexReader(spark, idx)
+    assert rd.has_deletes == (which == "tomb")
+    for q in QUERIES:
+        assert _rows(rd.search(q, k=k)) == score_query(oracle, q, k=k), q
+
+
+@pytest.mark.parametrize("side", list(SIDES))
+@pytest.mark.parametrize("which", ["clean", "tomb"])
+def test_search_after_page_matches_oracle(
+    spark, indexes, monkeypatch, side, which
+):
+    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", SIDES[side])
+    idx, oracle = indexes[which]
+    rd = IndexReader(spark, idx)
+    q = "the keta"  # head term: page boundaries fall inside score ties
+    want = score_query(oracle, q, k=25)
+    s, d = want[9][1], want[9][0]
+    assert _rows(rd.search_after(q, s, d, k=15)) == want[10:25]
+
+
+_groups = itertools.count()
+
+
+def _jobs_in(spark, fn) -> int:
+    """Spark jobs run by ``fn()``, counted through a fresh job group."""
+    sc = spark.sparkContext
+    group = f"drvtopk-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("which", ["clean", "tomb"])
+def test_open_and_small_search_run_no_spark_job(spark, indexes, which):
+    idx, oracle = indexes[which]
+    readers = []
+    assert _jobs_in(spark, lambda: readers.append(IndexReader(spark, idx))) == 0
+    rd = readers[0]
+    cap = topk._DRIVER_SCORE_MAX_DF
+    assert sum(rd.term_dfs(["keta", "gera"]).values()) <= cap
+    for q, k in [("keta gera", 10), ("zzabsent", 10), ("", 10), ("keta", 0)]:
+        rows = []
+        n_jobs = _jobs_in(spark, lambda: rows.extend(_rows(rd.search(q, k=k))))
+        assert n_jobs == 0, q
+        assert rows == (score_query(oracle, q, k=k) if k else []), q
+
+
+def test_missing_sidecar_segment_scores_alike_on_both_sides(
+    spark, indexes, monkeypatch, tmp_path
+):
+    """A segment absent from the doclens sidecar yields no hits on the
+    driver side, exactly like the Spark side's ``score_bc``."""
+    idx = str(tmp_path / "nodl")
+    shutil.copytree(indexes["clean"][0], idx)
+    dl_dir = tmp_path / "nodl" / "doclens" / "data"
+    tbl = ds.dataset(str(dl_dir), format="parquet").to_table()
+    for f in dl_dir.glob("*.parquet"):
+        f.unlink()
+    pq.write_table(
+        tbl.filter(ds.field("segment_id") != 1), str(dl_dir / "part-0.parquet")
+    )
+    rd = IndexReader(spark, idx)
+    got = {}
+    for side, cap in SIDES.items():
+        monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", cap)
+        got[side] = _rows(rd.search("the keta", k=1000))
+    assert got["driver"] == got["spark"]
+    assert got["driver"] and not [d for d, _ in got["driver"] if d // 64 == 1]
+
+
+@pytest.fixture(scope="module")
+def positional(spark, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("drvpos") / "idx")
+    IndexBuilder(spark, idx, with_positions=True, **KW).build(
+        webtext_df(spark, 200, partitions=4), fingerprint_extra="drvpos200"
+    )
+    return idx
+
+
+@pytest.mark.parametrize("dropped", [0, 1])
+def test_phrase_lens_lookup_raises_on_missing_sidecar_segment(
+    spark, positional, dropped
+):
+    """Drop one segment from the phrase fast path's sidecar broadcast: a
+    matched doc in it must raise MissingSidecarError. Unchecked, segment
+    0's docs land on slot −1 (the last segment's lens) and segment 1's
+    index past the end of segment 0's."""
+    rd = IndexReader(spark, positional)
+    text = dict(_docs(spark, positional))[dropped * 64]
+    phrase = " ".join(tokenize_py(text, rd.profile)[:2])
+    full = rd._sidecar_bc().value
+    rd._sidecar_cache = (
+        spark.sparkContext.broadcast(
+            {s: v for s, v in full.items() if s != dropped}
+        ),
+    )
+    with pytest.raises(Exception, match="MissingSidecarError"):
+        rd.phrase_scores(phrase).collect()

@@ -3,7 +3,9 @@ story depends on, asserted on the actual executed plans (not docstrings).
 
 - a term query's postings scan must carry a PartitionFilter on
   term_bucket (directory pruning to 1/B of files) and a pushed term
-  filter (row-group min/max pruning);
+  filter (row-group min/max pruning); the search() plans are pinned on
+  the Spark side (forced past the driver-side Σdf cap), and the driver
+  side's pyarrow reads must open only the query's term_bucket dirs;
 - the per-query df lookup joins via broadcast, never a shuffle;
 - ANN index queries list only the probed partition directories.
 """
@@ -13,6 +15,7 @@ from __future__ import annotations
 import pytest
 
 from aether_elasticsearch_consumer_spark.fixtures.webtext import webtext_df
+from aether_elasticsearch_consumer_spark.operators import topk
 from aether_elasticsearch_consumer_spark.operators.topk import IndexReader
 from aether_elasticsearch_consumer_spark.plans.index_build import IndexBuilder
 
@@ -30,7 +33,9 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_search_plan_prunes_and_broadcasts(reader):
+def test_search_plan_prunes_and_broadcasts(reader, monkeypatch):
+    # the Spark side of search(): force it past the driver-side cap
+    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
     plan = _plan(reader.search("keta gera", k=5))
     # directory pruning: the scan's PartitionFilters must constrain
     # term_bucket (never a full-directory listing)
@@ -48,9 +53,12 @@ def test_search_plan_prunes_and_broadcasts(reader):
     assert plan.count("Exchange") == 1
 
 
-def test_search_plan_with_deletes_keeps_join_shape(spark, tmp_path_factory):
+def test_search_plan_with_deletes_keeps_join_shape(
+    spark, tmp_path_factory, monkeypatch
+):
     """The tombstone path must keep the proven broadcast-join plan: df
     broadcast + block_no=0 sidecar attach, never a shuffle join."""
+    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
     from aether_elasticsearch_consumer_spark.plans.tombstones import (
         apply_deletes,
     )
@@ -67,6 +75,31 @@ def test_search_plan_with_deletes_keeps_join_shape(spark, tmp_path_factory):
     plan = _plan(rd.search("keta gera", k=5))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_driver_search_reads_only_query_buckets(spark, reader, tmp_path):
+    """The driver side's pyarrow reads prune like the Spark scan: only the
+    query terms' term_bucket directories of postings and term_stats are
+    opened. Every other bucket's files are overwritten with garbage after
+    the reader has listed them, and the answer must not change."""
+    import shutil
+
+    idx = tmp_path / "idx"
+    shutil.copytree(reader.dir, idx)
+    rd = IndexReader(spark, str(idx))
+    q = "keta gera"
+    want = rd.search(q, k=5).collect()
+    keep = set(rd._buckets_for(["keta", "gera"]).values())
+    assert len(keep) < rd.term_buckets
+    n_bad = 0
+    for sub in ("postings", "term_stats"):
+        for f in (idx / sub / "data").glob("term_bucket=*/*.parquet"):
+            if int(f.parent.name.split("=")[1]) not in keep:
+                f.write_bytes(b"not parquet")
+                n_bad += 1
+    assert n_bad
+    assert sum(rd.term_dfs(["keta", "gera"]).values()) <= topk._DRIVER_SCORE_MAX_DF
+    assert want and rd.search(q, k=5).collect() == want
 
 
 def test_match_docs_plan_prunes(reader):

@@ -8,12 +8,14 @@ batch dataflow:
              → deterministic dense doc_id → parquet
   doclens:   per-segment varbyte array of doc lengths (scorer sidecar)
   stats:     N, avgdl folded out of the doclens sidecar (no extra scan)
-  postings:  explode(tokens) → ONE shuffle to (segment_id, term_bucket)
-             groups → applyInArrow assembly (dictionary-encoded terms,
-             run-length tf counting, batch varbyte, flat one-row-per-block
-             output with exact idf-free block-max metadata) → parquet
-             partitioned by term_bucket, written straight from the group
-             tasks (no re-shuffle)
+  postings:  mapInArrow tokenize + map-side tf count → one row of byte
+             blobs (doc ids, tfs, token offsets when positional) per
+             (segment, term) per batch → ONE hash shuffle on
+             (segment_id, term_bucket) → whole-partition mapInArrow
+             assembly (one numpy lexsort, batch varbyte, flat
+             one-row-per-block output with exact idf-free block-max
+             metadata) → parquet partitioned by term_bucket, written
+             straight from the assembly tasks (no re-shuffle)
   term_stats: per-term global df → parquet partitioned by term_bucket
 
 Scale design (10^12 docs):
@@ -26,7 +28,7 @@ Scale design (10^12 docs):
   exceed ``docs_per_segment`` rows, so "the" is split across segments by
   construction — long-posting-list splitting without a special case.
 - **Zero per-row Python**: assembly is Arrow C++ dictionary encode +
-  numpy; the only Python loop slices pre-encoded byte buffers per block.
+  numpy over posting-level arrays exploded from the shuffle's blobs.
 - Incremental ingest: a delta index built at a ``doc_id_offset`` merges
   with the base by pure union (plans/segments.py) — no decode, no rewrite.
 - postings partitioned by ``term_bucket`` (pmod(xxhash64(term), B)) and
@@ -56,21 +58,6 @@ from .doc_ids import assign_doc_ids
 
 DEFAULT_DOCS_PER_SEGMENT = 8192
 DEFAULT_TERM_BUCKETS = 16
-
-# bench-only toggle: re-adds the round-3 docs-sidecar range exchange so
-# the saved shuffle can be A/B-measured in one session; never set in code
-_FORCE_RANGE_EXCHANGE = False
-
-# A/B toggle for the round-6 map-side tf pre-aggregation (see
-# postings_stage): True forces the old token-instance shuffle so the
-# byte-identity of both paths can be asserted in one session
-# (tests/test_assembly_edges.py); never set in production code
-_FORCE_TOKEN_LEVEL = False
-
-# A/B toggle for the round-6 blob-group shuffle: True forces the
-# (doc, term, tf) row pre-aggregation shape so all three postings
-# pipelines can be byte-compared in one session; never set in production
-_FORCE_ROW_PREAGG = False
 
 # one row per 128-posting block, fully flat — rows build from numpy arrays
 # with zero per-row Python objects, and the query side reads plain columns
@@ -131,101 +118,53 @@ DL_BITS = 20  # doc_len < 2^20 packs into the low bits of one int64;
 DL_MASK = (1 << DL_BITS) - 1
 
 
-TOKEN_PAIRS_SCHEMA = T.StructType(
-    [
-        T.StructField("packed", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("tf", T.IntegerType(), False),
-    ]
-)
-
-
-def make_token_pairs_arrow(profile: str = "ascii"):
-    """``(packed, text)`` batches → ``(packed, term, tf)`` rows: the SPEC
-    tokenizer (``tokenize_py`` — bit-identical to the Column tokenizer,
-    pinned by the oracle-parity suite) plus a per-batch
-    factorize/lexsort/run-length, all numpy.
-
-    Round-6 shuffle win (guide §2.3 "aggregate before you shuffle", §4.2
-    native code inside the UDF): the postings exchange used to carry one
-    row per TOKEN INSTANCE (103M rows on the 400k-doc bench corpus) and
-    count tf reduce-side; distinct (doc, term) pairs are 0.58× of that,
-    so tf-counting map-side drops ~42% of the rows and string bytes from
-    the build's one wide shuffle and from the reduce-side lexsort/Arrow
-    feed. A pure-Column rewrite (array_sort + HOF run-length) was tried
-    first and measured 2.25× SLOWER end-to-end — interpreted per-element
-    lambda evaluation over 10^8 tokens dwarfs the shuffle savings — so
-    this is the Arrow path; per-doc regex is the tokenizer spec itself,
-    everything after it is batch-vectorized."""
-    from ..functions.tokenizer import tokenize_py
-
-    def gen(batches):
-        for batch in batches:
-            n = batch.num_rows
-            if not n:
-                continue
-            packed = batch.column("packed").to_numpy(zero_copy_only=False)
-            toks = [tokenize_py(t, profile) for t in batch.column("text").to_pylist()]
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=n)
-            total = int(lens.sum())
-            if not total:
-                continue
-            flat = np.empty(total, dtype=object)
-            off = 0
-            for t in toks:
-                flat[off : off + len(t)] = t
-                off += len(t)
-            codes, uniq = pd.factorize(flat, sort=False)
-            doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-            order = np.lexsort((codes, doc_idx))
-            c, d = codes[order], doc_idx[order]
-            starts = np.empty(len(c), dtype=bool)
-            starts[0] = True
-            np.not_equal(c[1:], c[:-1], out=starts[1:])
-            starts[1:] |= d[1:] != d[:-1]
-            s_idx = np.flatnonzero(starts)
-            tf = np.diff(np.append(s_idx, len(c))).astype(np.int32)
-            yield pa.record_batch(
-                {
-                    "packed": pa.array(packed[d[s_idx]], pa.int64()),
-                    "term": pa.array(uniq[c[s_idx]], pa.string()),
-                    "tf": pa.array(tf, pa.int32()),
-                }
-            )
-
-    return gen
-
-
 POSTING_GROUPS_SCHEMA = T.StructType(
     [
         T.StructField("segment_id", T.LongType(), False),
         T.StructField("term", T.StringType(), False),
         T.StructField("packeds", T.BinaryType(), False),
         T.StructField("tfs_blob", T.BinaryType(), False),
+        # each posting's tf within-doc token offsets, ascending, int32 —
+        # empty bytes when the index is built without positions
+        T.StructField("positions_blob", T.BinaryType(), False),
     ]
 )
 
 
-def make_posting_group_blobs_arrow(profile: str = "ascii", dps: int = 8192):
-    """``(packed, text)`` batches → ONE row per (segment, term) per batch:
-    ``(segment_id, term, packeds, tfs_blob)`` where the blobs are the
-    group's per-posting packed int64s / tf int32s as raw little-endian
-    bytes.
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + n)`` for each (s, n) — the gather
+    index that moves variable-length runs in one fancy-index."""
+    excl = np.cumsum(lens) - lens
+    return np.repeat(starts - excl, lens) + np.arange(int(lens.sum()))
 
-    Round-6 shuffle-row collapse (guide §2.3, §4.2): the postings
-    exchange carried one row per (doc, term) posting — 60M rows on the
-    400k-doc bench corpus — and the reduce stage's dominant cost was the
-    JVM row↔Arrow conversion of those rows (~390 of 422 core-s), not the
-    numpy assembly. Grouping map-side by (segment, term) cuts the row
-    count ~25× (bounded by vocab × segments per batch) and turns the
-    payload into opaque byte blobs the JVM moves with bulk copies; the
-    assembler explodes them with ``np.frombuffer`` + ``np.repeat``.
-    Output blocks are byte-identical (pinned in
-    tests/test_assembly_edges.py): the assembler's lexsort is a total
-    order over unique (term, doc) pairs, so arrival granularity cannot
-    change any output row, and the writer's partition sort fixes file
-    order. Same-machine bytes → ``np.frombuffer`` round-trips exactly;
-    both ends of a shuffle share endianness by construction."""
+
+def make_posting_group_blobs_arrow(profile: str = "ascii", dps: int = 8192,
+                                   with_positions: bool = False):
+    """``(packed, text)`` batches → ONE row per (segment, term) per batch:
+    ``(segment_id, term, packeds, tfs_blob, positions_blob)`` where the
+    blobs are the group's per-posting packed int64s / tf int32s / token
+    offsets (int32, tf per posting) as raw little-endian bytes.
+
+    Tokenizing is the SPEC tokenizer (``tokenize_py`` — bit-identical to
+    the Column tokenizer, pinned by the oracle-parity suite); tf counting
+    and grouping are a per-batch factorize + lexsort + run-length, all
+    numpy (guide §2.3 "aggregate before you shuffle", §4.2 native code
+    inside the UDF). The postings exchange then carries ~25× fewer rows
+    than one per (doc, term) posting, and the payload moves as opaque
+    bytes the JVM copies in bulk; the reduce stage's cost was the JVM
+    row↔Arrow conversion, not the numpy assembly. A pure-Column
+    tf count (array_sort + HOF run-length) measured 2.25× slower.
+
+    Arrival granularity cannot change any output row: the assembler's
+    lexsort is a total order over unique (term, doc) postings, each
+    posting's offsets travel with it, and the writer's partition sort
+    fixes file order. Same-machine bytes → ``np.frombuffer`` round-trips
+    exactly; both ends of a shuffle share endianness by construction.
+
+    ``with_positions``: phrase keys pack (doc_id << DL_BITS | pos), so a
+    doc of 2^DL_BITS or more tokens cannot be stored exactly — it fails
+    the build here, before any shuffle. Such a doc's doc_len would also
+    exceed the DL_MASK cap of the packed column."""
     from ..functions.tokenizer import tokenize_py
 
     def gen(batches):
@@ -241,6 +180,12 @@ def make_posting_group_blobs_arrow(profile: str = "ascii", dps: int = 8192):
             lens = np.fromiter(
                 (len(t) for t in toks), dtype=np.int64, count=n
             )
+            if with_positions and int(lens.max()) >= 1 << DL_BITS:
+                raise ValueError(
+                    "positional index cannot store a doc with "
+                    f">= 2^{DL_BITS} tokens (phrase-key packing envelope); "
+                    "split or truncate the document"
+                )
             total = int(lens.sum())
             if not total:
                 continue
@@ -251,6 +196,7 @@ def make_posting_group_blobs_arrow(profile: str = "ascii", dps: int = 8192):
                 off += len(t)
             codes, uniq = pd.factorize(flat, sort=False)
             doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
+            # stable: a (doc, term) run keeps its tokens in offset order
             order = np.lexsort((codes, doc_idx))
             c, d = codes[order], doc_idx[order]
             starts = np.empty(len(c), dtype=bool)
@@ -278,53 +224,78 @@ def make_posting_group_blobs_arrow(profile: str = "ascii", dps: int = 8192):
             np.cumsum(counts * 8, out=off8[1:])
             off4 = np.zeros(len(gidx) + 1, dtype=np.int64)
             np.cumsum(counts * 4, out=off4[1:])
+            offp = np.zeros(len(gidx) + 1, dtype=np.int64)
+            pos_bytes = b""
+            if with_positions:
+                # within-doc offsets in token order, then each posting's
+                # tf-run gathered into group order
+                pos = _ranges(np.zeros_like(lens), lens)
+                pos_bytes = (
+                    pos[order][_ranges(s_idx[g_order], gt)]
+                    .astype(np.int32).tobytes()
+                )
+                np.cumsum(np.add.reduceat(gt.astype(np.int64), gidx) * 4,
+                          out=offp[1:])
             yield pa.record_batch(
                 {
                     "segment_id": pa.array(gs[gidx], pa.int64()),
                     "term": pa.array(uniq[gc[gidx]], pa.string()),
                     "packeds": _contiguous_binary(gp.tobytes(), off8),
                     "tfs_blob": _contiguous_binary(gt.tobytes(), off4),
+                    "positions_blob": _contiguous_binary(pos_bytes, offp),
                 }
             )
 
     return gen
 
 
-def _blob_concat(arr: "pa.Array", dtype) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenate a single-chunk pa binary column's values into one numpy
-    array of ``dtype`` plus per-row element counts — buffer math, no
-    per-row python objects."""
+def _blob_concat(col, dtype) -> tuple[np.ndarray, np.ndarray]:
+    """Concatenate a binary column's values into one numpy array of
+    ``dtype`` plus per-row element counts — buffer math, no per-row
+    python objects. Takes an Array or a ChunkedArray of ``binary`` or
+    ``large_binary`` and reads each chunk through its own offsets, so a
+    partition past 2 GiB never needs one int32-offset array."""
+    chunks = col.chunks if isinstance(col, pa.ChunkedArray) else [col]
     nbytes = np.dtype(dtype).itemsize
-    off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-        arr.offset : arr.offset + len(arr) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)
-    vals = np.ascontiguousarray(data[off[0] : off[-1]]).view(dtype)
-    counts = (np.diff(off) // nbytes).astype(np.int64)
-    return vals, counts
+    vals, counts = [np.empty(0, dtype)], [np.empty(0, np.int64)]
+    for arr in chunks:
+        if not len(arr):
+            # a zero-row batch may carry a zero-size offsets buffer
+            continue
+        otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        _, off_buf, data_buf = arr.buffers()
+        off = np.frombuffer(off_buf, dtype=otype)[
+            arr.offset : arr.offset + len(arr) + 1
+        ].astype(np.int64)
+        data = np.frombuffer(data_buf, dtype=np.uint8)
+        vals.append(data[off[0] : off[-1]].view(dtype))
+        counts.append(np.diff(off) // nbytes)
+    return np.concatenate(vals), np.concatenate(counts)
 
 
 def _explode_blob_table(
     tbl: "pa.Table",
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, ...]:
     """Blob-group shuffle rows → posting-level numpy arrays
-    (codes, dict_strs, term_buckets, packed, tfs) for the assembler."""
+    ``(codes, dict_strs, term_buckets, packed, tfs, positions)`` for the
+    assembler; ``positions`` is the flat token-offset stream (each
+    posting's tf offsets, in posting order), empty without positions."""
     enc = pc.dictionary_encode(tbl["term"].combine_chunks())
     codes_row = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
     dict_strs = enc.dictionary.to_numpy(zero_copy_only=False)
     tbs_row = (
         tbl["term_bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
     )
-    packed_all, counts = _blob_concat(
-        tbl["packeds"].combine_chunks(), np.int64
-    )
-    tf_all, _ = _blob_concat(tbl["tfs_blob"].combine_chunks(), np.int32)
+    packed_all, counts = _blob_concat(tbl["packeds"], np.int64)
+    tf_all, _ = _blob_concat(tbl["tfs_blob"], np.int32)
+    pos_all, _ = _blob_concat(tbl["positions_blob"], np.int32)
     return (
         np.repeat(codes_row, counts),
         dict_strs,
         np.repeat(tbs_row, counts),
         packed_all.astype(np.int64),
         tf_all.astype(np.int64),
+        pos_all.astype(np.int64),
     )
 
 
@@ -347,97 +318,29 @@ def _contiguous_binary(buf, off: np.ndarray) -> "pa.Array":
 
 
 def _assemble_postings_arrow(
-    tbl: "pa.Table", avgdl: float, dps: int,
-    code_dict: tuple[np.ndarray, np.ndarray] | None = None,
-    term_buckets: int | None = None,
-    pre: tuple[np.ndarray, ...] | None = None,
+    postings: tuple[np.ndarray, ...], avgdl: float, dps: int
 ) -> "pa.Table":
-    """A shuffle partition of **token-level** rows → one output row per
-    128-posting block. The partition may span MANY (segment, term_bucket)
-    groups: a term run breaks at every segment boundary, so block-max
-    metadata and delta encodings are always per-(segment, term) exactly as
-    the reader expects.
+    """A shuffle partition's postings (``_explode_blob_table``) → one
+    output row per 128-posting block. The partition may span MANY
+    (segment, term_bucket) groups: a term run breaks at every segment
+    boundary, so block-max metadata and delta encodings are always
+    per-(segment, term) exactly as the reader expects.
 
-    Everything is vectorized end-to-end: terms dictionary-encode in Arrow
-    C++ (strings never become Python objects), the whole partition sorts
-    with ONE numpy lexsort (this replaces Spark's per-row comparator sort
+    Everything is vectorized end-to-end: the whole partition sorts with
+    ONE numpy lexsort (this replaces Spark's per-row comparator sort
     that groupBy().applyInArrow would insert — the dominant reduce-side
-    cost at width, see BENCH/BASELINE.md), tf counting is run-length over
-    the (term, doc) order, per-block deltas build with a masked where, and
-    the partition's doc/tf streams varbyte-encode in two batch calls whose
-    per-value byte lengths slice the buffer into block payloads. The only
-    per-block Python work is a bytes slice.
-
-    ``code_dict=(codes_sorted, terms_sorted)``: dictionary-coded mode —
-    rows carry an int64 ``code`` instead of the term string (the shuffle
-    never moves strings; bucket = code mod term_buckets), and per-block
-    term strings resolve at the end via one vectorized searchsorted
-    against the broadcast dictionary."""
-    if pre is not None:
-        # blob-group mode (round 6): posting-level arrays already exploded
-        # from the (segment, term, packeds, tfs_blob) shuffle rows — see
-        # make_posting_group_blobs_arrow / _explode_blob_table
-        codes, dict_strs, tbs, packed, tf_in = pre
-        pos_all = None
-    else:
-        if code_dict is None:
-            enc = pc.dictionary_encode(tbl["term"].combine_chunks())
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            dict_strs = enc.dictionary.to_numpy(zero_copy_only=False)
-            tbs = tbl["term_bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
-        else:
-            codes = tbl["code"].to_numpy(zero_copy_only=False).astype(np.int64)
-            tbs = None
-            dict_strs = None
-        packed = tbl["packed"].to_numpy(zero_copy_only=False).astype(np.int64)
-        pos_all = (
-            tbl["pos"].to_numpy(zero_copy_only=False).astype(np.int64)
-            if "pos" in tbl.schema.names
-            else None
-        )
-        # tf-preagg mode (round 6): rows arrive as (doc, term, tf) POSTINGS
-        # (map-side run-length, see doc_term_tf_pairs) — no reduce-side tf
-        # counting, 0.58× the rows through the sort. Mutually exclusive with
-        # positions (those need the token-level stream).
-        tf_in = (
-            tbl["tf"].to_numpy(zero_copy_only=False).astype(np.int64)
-            if "tf" in tbl.schema.names
-            else None
-        )
+    cost at width, see BENCH/BASELINE.md), per-block deltas build with a
+    masked where, and the partition's doc/tf/position streams
+    varbyte-encode in batch calls whose per-value byte lengths slice the
+    buffer into block payloads. The only per-block Python work is the
+    fallback slice loop past 2 GiB."""
+    codes, dict_strs, tbs, packed, tfs_in, pos_in = postings
     doc_ids_all = packed >> DL_BITS
-    dls_all = packed & DL_MASK
-
-    if pos_all is None:
-        order = np.lexsort((doc_ids_all, codes))
-    else:
-        # positions ascending within each (term, doc) run — required for
-        # the gap encoding and the phrase verifier's sorted-key merge
-        order = np.lexsort((pos_all, doc_ids_all, codes))
-    c_sorted = codes[order]
-    d_sorted = doc_ids_all[order]
-    l_sorted = dls_all[order]
-    pos_sorted = pos_all[order] if pos_all is not None else None
-    tb_sorted = tbs[order] if tbs is not None else None
-
-    n_tok = len(c_sorted)
-    if tf_in is not None:
-        # one row per posting already: boundaries are trivial
-        p_start_tok = np.arange(n_tok, dtype=np.int64)
-        tfs = tf_in[order]
-        p_codes = c_sorted
-        p_docs = d_sorted
-        p_dls = l_sorted.astype(np.float64)
-    else:
-        # posting boundaries: first token of each (term, doc) run → tf
-        is_start = np.empty(n_tok, dtype=bool)
-        is_start[0] = True
-        np.not_equal(c_sorted[1:], c_sorted[:-1], out=is_start[1:])
-        is_start[1:] |= d_sorted[1:] != d_sorted[:-1]
-        p_start_tok = np.flatnonzero(is_start)
-        tfs = np.diff(np.append(p_start_tok, n_tok))
-        p_codes = c_sorted[p_start_tok]
-        p_docs = d_sorted[p_start_tok]
-        p_dls = l_sorted[p_start_tok].astype(np.float64)
+    order = np.lexsort((doc_ids_all, codes))
+    p_codes = codes[order]
+    p_docs = doc_ids_all[order]
+    p_dls = (packed[order] & DL_MASK).astype(np.float64)
+    tfs = tfs_in[order]
     p_segs = p_docs // dps
     P = len(p_codes)
 
@@ -481,9 +384,15 @@ def _assemble_postings_arrow(
     doc_blobs = _contiguous_binary(doc_buf, doc_off[b_bounds])
     tf_blobs = _contiguous_binary(tf_buf, tf_off[b_bounds])
 
-    if pos_sorted is not None:
-        # token-level position stream: absolute at each posting start,
-        # gap-1 within a posting (positions strictly increase per posting)
+    if len(pos_in):
+        # each posting's offsets follow it through the lexsort; the stream
+        # is absolute at each posting start, gap-1 within a posting
+        # (offsets strictly increase per posting)
+        p_start_tok = np.cumsum(tfs) - tfs
+        pos_sorted = pos_in[_ranges((np.cumsum(tfs_in) - tfs_in)[order], tfs)]
+        n_tok = len(pos_sorted)
+        is_start = np.zeros(n_tok, dtype=bool)
+        is_start[p_start_tok] = True
         prev_pos = np.empty(n_tok, dtype=np.int64)
         prev_pos[0] = 0
         prev_pos[1:] = pos_sorted[:-1]
@@ -501,22 +410,13 @@ def _assemble_postings_arrow(
     # per-block term linkage
     b_term_idx = np.searchsorted(t_starts, b_starts, side="right") - 1
     b_block_no = ((b_starts - t_starts[b_term_idx]) // BLOCK_SIZE).astype(np.int32)
-    b_codes = p_codes[b_starts]
-    if dict_strs is not None:
-        b_terms = dict_strs[b_codes]
-        b_tb = tb_sorted[p_start_tok[b_starts]].astype(np.int32)
-    else:
-        codes_sorted, terms_sorted = code_dict
-        b_terms = terms_sorted[np.searchsorted(codes_sorted, b_codes)]
-        b_tb = (b_codes % term_buckets).astype(np.int32)
-    b_df_seg = t_lens[b_term_idx].astype(np.int64)
 
     return pa.table(
         {
             "segment_id": pa.array(p_segs[b_starts]),
-            "term_bucket": pa.array(b_tb),
-            "term": pa.array(b_terms, type=pa.string()),
-            "df_seg": pa.array(b_df_seg),
+            "term_bucket": pa.array(tbs[order[b_starts]].astype(np.int32)),
+            "term": pa.array(dict_strs[p_codes[b_starts]], type=pa.string()),
+            "df_seg": pa.array(t_lens[b_term_idx].astype(np.int64)),
             "block_no": pa.array(b_block_no),
             "first_doc_id": pa.array(p_docs[b_starts]),
             "last_doc_id": pa.array(p_docs[b_ends - 1]),
@@ -567,51 +467,34 @@ class IndexBuilder:
         id_buckets: int = 64,
         doc_id_offset: int = 0,
         id_col: str | None = None,
-        term_coding: str = "strings",
-        max_vocab_broadcast: int = 4_000_000,
         postings_partitions: int | None = None,
         with_positions: bool = False,
     ):
-        """``term_coding``:
-
-        - ``"strings"`` (default): term strings ride the one wide shuffle.
-        - ``"dict"``: the shuffle carries an int64 term CODE instead. A
-          pre-pass computes the distinct vocabulary (map-side reduced via
-          per-doc array_distinct), ranks it per bucket, and broadcast-joins
-          codes onto the token stream map-side — the shuffle moves two
-          int64s per token, no strings. Falls back to ``"strings"`` when
-          the vocabulary exceeds ``max_vocab_broadcast``.
-
-          Measured (BENCH/BASELINE.md round 2): dict coding cuts shuffled
-          bytes 1.83× but leaves reduce-side core-seconds UNCHANGED — the
-          reduce cost is the per-row sort + Arrow transfer + assembly, not
-          byte volume — while paying an extra tokenize pass for the
-          vocabulary. ``"strings"`` is therefore the default; the option
-          stays for byte-constrained networks (a real cluster's shuffle
-          crosses NICs, where 1.83× fewer bytes IS the win).
+        """Every build runs the same postings pipeline: map-side tokenize
+        and tf count into one blob row per (segment, term) per batch
+        (``make_posting_group_blobs_arrow``), one hash exchange on
+        (segment_id, term_bucket), and whole-partition numpy assembly
+        (``_assemble_postings_arrow``).
 
         ``postings_partitions``: shuffle partition count for the postings
-        exchange; default max(48, 3 × defaultParallelism). Size it so a
-        partition's token rows (~16 B/row in Arrow) fit executor memory —
-        at 10^12 docs raise it with corpus size (tokens/partition ≈
-        total_tokens / partitions).
+        exchange; default max(48, 3 × defaultParallelism, total tokens /
+        2M). Size it so a partition's postings (12 B each in the blobs,
+        plus 4 B per token with positions) fit executor memory — at
+        10^12 docs raise it with corpus size.
 
         ``with_positions``: store within-doc token offsets per posting
         (gap-1 varbyte, per-block blobs) — enables exact index-backed
-        phrase queries (``IndexReader.phrase_docs``). Costs one extra int
-        per token in the shuffle and ~1 byte/token on disk; off by
-        default (ES analogue: index_options=docs|freqs vs positions).
+        phrase queries (``IndexReader.phrase_docs``). Costs one int32 per
+        token in the shuffle blobs and ~1 byte/token on disk, and rejects
+        any doc of 2^20 or more tokens; off by default (ES analogue:
+        index_options=docs|freqs vs positions).
         """
-        if term_coding not in ("dict", "strings"):
-            raise ValueError(f"unknown term_coding {term_coding!r}")
         self.spark = spark
         self.dir = Path(index_dir)
         self.profile = profile
         self.dps = docs_per_segment
         self.term_buckets = term_buckets
         self.id_buckets = id_buckets
-        self.term_coding = term_coding
-        self.max_vocab_broadcast = max_vocab_broadcast
         self.postings_partitions = postings_partitions
         self.with_positions = with_positions
         # delta builds start past the base index; must be a multiple of
@@ -678,7 +561,7 @@ class IndexBuilder:
             # Files then cover disjoint-but-interleaved bucket ranges; a
             # point id matches at most one row group per file, almost
             # always zero.
-            if self.id_col or _FORCE_RANGE_EXCHANGE:
+            if self.id_col:
                 # caller-supplied ids (compact/reindex) carry no such
                 # order — a range exchange is the only way to get a
                 # prunable layout
@@ -751,195 +634,65 @@ class IndexBuilder:
         avgdl = float(st["avgdl"])
 
         def postings_stage(tmp: str) -> dict:
-            # ONE wide shuffle either way: token-level rows group straight
-            # to their (segment, term_bucket) assembly task; tf counting
-            # happens vectorized inside the assembly UDF. avgdl rides the
-            # closure, never a per-row column. (doc_id, doc_len) pack into
-            # one int64 and the segment derives in the grouping expression.
+            # ONE wide shuffle: the map side tokenizes, counts tf and
+            # groups each batch's postings into one blob row per
+            # (segment, term) — ~25× fewer shuffle rows than one per
+            # posting, the payload opaque bytes, token offsets a third
+            # blob when positional (make_posting_group_blobs_arrow).
+            # (doc_id, doc_len) pack into one int64; the explicit
+            # 2-column select before the opaque Arrow stage keeps the
+            # scan pruned (guide §4.1). avgdl rides the closure, never a
+            # per-row column.
             dps = self.dps
-            B = self.term_buckets
             packed_col = (
                 F.shiftleft(F.col("doc_id"), DL_BITS)
                 + F.least(F.col("doc_len"), F.lit(DL_MASK))
             ).alias("packed")
-            seg_key = (
-                F.shiftright(F.col("packed"), DL_BITS) / dps
-            ).cast("long").alias("segment_id")
-
-            # token stream: positions ride along as ONE extra int column
-            # only when the index stores them
-            blob_mode = False
-            if self.with_positions:
-                # phrase keys pack (doc_id << DL_BITS | pos): a position at
-                # or past 2^DL_BITS would carry into the doc_id field and
-                # silently corrupt phrase matches — fail loudly at build
-                # instead (round-2 advisor finding). doc_len is CAPPED at
-                # DL_MASK (stats only degrade), but positions must be exact.
-                pe = F.posexplode(tokenize_col("text", self.profile))
-                exploded = docs.select(packed_col, pe.alias("pos", "term"))
-                exploded = exploded.withColumn(
-                    "pos",
-                    F.when(F.col("pos") < F.lit(1 << DL_BITS), F.col("pos"))
-                    .otherwise(
-                        F.raise_error(
-                            F.lit(
-                                "positional index cannot store a doc with "
-                                f">= 2^{DL_BITS} tokens (phrase-key packing "
-                                "envelope); split or truncate the document"
-                            )
-                        ).cast("int")
+            groups = (
+                docs.select(packed_col, "text")
+                .mapInArrow(
+                    make_posting_group_blobs_arrow(
+                        self.profile, dps, self.with_positions
                     ),
-                )
-                pos_cols = ["pos"]
-            elif _FORCE_TOKEN_LEVEL:
-                exploded = docs.select(
-                    packed_col,
-                    F.explode(tokenize_col("text", self.profile)).alias("term"),
-                )
-                pos_cols = []
-            elif self.term_coding == "dict" or _FORCE_ROW_PREAGG:
-                # map-side tf run-length (make_token_pairs_arrow): the
-                # wide shuffle carries one row per (doc, term) with its
-                # tf — 0.58× the rows of the token-instance stream;
-                # output blocks are byte-identical (pinned in
-                # tests/test_assembly_edges.py). Explicit 2-column select
-                # before the opaque Arrow stage keeps the scan pruned
-                # (guide §4.1). Dict coding keeps this shape — its
-                # broadcast code join needs per-posting term rows.
-                exploded = docs.select(packed_col, "text").mapInArrow(
-                    make_token_pairs_arrow(self.profile), TOKEN_PAIRS_SCHEMA
-                )
-                pos_cols = ["tf"]
-            else:
-                # default strings mode (round 6, second pass): one blob
-                # row per (segment, term) per map batch — ~25× fewer
-                # shuffle rows than (doc, term, tf) and the payload moves
-                # as opaque bytes, so the reduce stage's JVM row↔Arrow
-                # conversion (its dominant cost) collapses; see
-                # make_posting_group_blobs_arrow. Byte-identical output
-                # pinned in tests/test_assembly_edges.py.
-                blob_mode = True
-                exploded = docs.select(packed_col, "text").mapInArrow(
-                    make_posting_group_blobs_arrow(self.profile, dps),
                     POSTING_GROUPS_SCHEMA,
                 )
-                pos_cols = []
-
-            code_dict = None
-            if self.term_coding == "dict":
-                # vocabulary pre-pass: per-doc array_distinct collapses the
-                # token stream map-side, so the distinct shuffle moves
-                # ~sum(per-doc distinct terms) rows, a fraction of tokens
-                vocab = (
-                    docs.select(
-                        F.explode(
-                            F.array_distinct(tokenize_col("text", self.profile))
-                        ).alias("term")
-                    )
-                    .distinct()
-                    .withColumn(
-                        "term_bucket",
-                        F.pmod(F.xxhash64("term"), F.lit(B)).cast("int"),
-                    )
-                )
-                from pyspark.sql import Window
-
-                w = Window.partitionBy("term_bucket").orderBy("term")
-                coded = vocab.withColumn(
-                    "code",
-                    ((F.row_number().over(w) - 1).cast("long") * B
-                     + F.col("term_bucket")),
-                )
-                # guard BEFORE collecting (round-5 verdict): at web-corpus
-                # vocabulary sizes the driver would OOM materializing the
-                # vocab just to discover it is over the threshold — one
-                # cheap distributed count decides first
-                if coded.count() > self.max_vocab_broadcast:
-                    code_dict = None  # too big to broadcast — string path
-                else:
-                    vocab_pdf = coded.select("term", "code").toPandas()
-                    order = np.argsort(vocab_pdf["code"].to_numpy())
-                    codes_sorted = vocab_pdf["code"].to_numpy()[order]
-                    terms_sorted = vocab_pdf["term"].to_numpy()[order]
-                    code_dict = (codes_sorted, terms_sorted)
-
-            if code_dict is not None:
-                bc = self.spark.sparkContext.broadcast(code_dict)
-                # map-side code attach: broadcast hash join, no token
-                # shuffle; the wide shuffle then carries (packed, code) —
-                # two int64s, zero strings
-                vocab_map = self.spark.createDataFrame(
-                    pd.DataFrame(
-                        {"term": code_dict[1], "code": code_dict[0]}
-                    )
-                )
-                tokens = (
-                    exploded
-                    .join(F.broadcast(vocab_map), "term")
-                    .select("packed", "code", *pos_cols)
-                )
-                bucket_expr = F.pmod(F.col("code"), F.lit(B)).cast("int")
-
-                def assemble_tbl(tbl: pa.Table) -> pa.Table:
-                    return _assemble_postings_arrow(
-                        tbl, avgdl, dps, code_dict=bc.value, term_buckets=B
-                    )
-            else:
-                # term_bucket stays a JVM codegen expression either way —
-                # in blob mode it evaluates over the ~25×-smaller group
-                # rows instead of per posting
-                tokens = exploded.withColumn(
+                # a JVM codegen expression over the group rows, not per
+                # posting
+                .withColumn(
                     "term_bucket",
-                    F.pmod(F.xxhash64("term"), F.lit(B)).cast("int"),
+                    F.pmod(F.xxhash64("term"), F.lit(self.term_buckets))
+                    .cast("int"),
                 )
-                bucket_expr = F.col("term_bucket")
-
-                if blob_mode:
-
-                    def assemble_tbl(tbl: pa.Table) -> pa.Table:
-                        return _assemble_postings_arrow(
-                            None, avgdl, dps, pre=_explode_blob_table(tbl)
-                        )
-
-                else:
-
-                    def assemble_tbl(tbl: pa.Table) -> pa.Table:
-                        return _assemble_postings_arrow(tbl, avgdl, dps)
+            )
 
             def assemble_partition(batches):
                 bl = list(batches)
                 if not bl:
                     return
-                for b in assemble_tbl(pa.Table.from_batches(bl)).to_batches():
-                    yield b
+                tbl = pa.Table.from_batches(bl)
+                yield from _assemble_postings_arrow(
+                    _explode_blob_table(tbl), avgdl, dps
+                ).to_batches()
 
             # plain hash exchange + whole-partition Arrow assembly: a
             # groupBy().applyInArrow here would add a per-row comparator
-            # SORT of every token row in the JVM; instead the partition
-            # sorts ONCE in numpy inside the assembler (the multi-group
-            # form breaks term runs at segment boundaries, so output
-            # blocks are identical). Measured: ~20% postings-stage wall
-            # at 32 CPUs, better width-scaling (BENCH/BASELINE.md).
-            # Partition count scales with DATA (total tokens are known
-            # from the stats stage — N × avgdl), capped at ~2M tokens per
-            # assembly task so the per-task Arrow buffer + lexsort stay
-            # cache-friendly; a fixed count went 1.9× sublinear at 1M docs.
+            # SORT in the JVM; instead the partition sorts ONCE in numpy
+            # inside the assembler (the multi-group form breaks term runs
+            # at segment boundaries, so output blocks are identical).
+            # Measured: ~20% postings-stage wall at 32 CPUs, better
+            # width-scaling (BENCH/BASELINE.md). Partition count scales
+            # with DATA (total tokens are known from the stats stage —
+            # N × avgdl), capped at ~2M tokens per assembly task so the
+            # per-task Arrow buffer + lexsort stay cache-friendly; a fixed
+            # count went 1.9× sublinear at 1M docs.
             total_tokens = int(st["N"] * avgdl)
             n_parts = self.postings_partitions or max(
                 48,
                 3 * self.spark.sparkContext.defaultParallelism,
                 -(-total_tokens // 2_000_000),
             )
-            # identical exchange either way: the hash keys are the same
-            # (segment_id long, term_bucket int) VALUES whether computed
-            # per posting row (seg_key over packed) or carried on the
-            # blob-group rows, so (segment, bucket) → partition assignment
-            # — and therefore the output file set — is unchanged
-            part_seg = (
-                F.col("segment_id").cast("long") if blob_mode else seg_key
-            )
             (
-                tokens.repartition(n_parts, part_seg, bucket_expr)
+                groups.repartition(n_parts, "segment_id", "term_bucket")
                 .mapInArrow(assemble_partition, POSTINGS_SCHEMA)
                 # leading term_bucket: output ordering starts with the
                 # partition column, so FileFormatWriter reuses this sort

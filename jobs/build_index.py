@@ -36,11 +36,6 @@ def main(argv=None):
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--force", action="store_true")
     ap.add_argument(
-        "--term-coding", default="dict", choices=["dict", "strings"],
-        help="dict = int64 term codes in the postings shuffle (default); "
-             "strings = round-1 behaviour (term strings in the shuffle)",
-    )
-    ap.add_argument(
         "--with-positions", action="store_true",
         help="store per-posting token offsets (enables phrase/slop/"
              "prefix-phrase queries and positional highlight)",
@@ -89,7 +84,6 @@ def main(argv=None):
         profile=args.profile,
         docs_per_segment=args.docs_per_segment,
         term_buckets=args.term_buckets,
-        term_coding=args.term_coding,
         with_positions=args.with_positions,
     )
     manifests = builder.build(src, fingerprint_extra=fp, force=args.force)

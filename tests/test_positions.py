@@ -221,6 +221,23 @@ def test_build_rejects_doc_past_position_envelope(spark, tmp_path):
         b.build(src, fingerprint_extra="envelope")
 
 
+def test_build_rejects_doc_of_exactly_position_envelope(spark, tmp_path):
+    """Exactly 2^20 tokens: every offset fits 20 bits, but the packed
+    doc_len caps at 2^20 - 1 while the docs sidecar stores 2^20, so
+    readers would disagree on the doc's length — rejected too."""
+    big = "x " * (1 << 20)
+    src = spark.createDataFrame(
+        [("https://a.example/big", big), ("https://a.example/ok", "small doc")],
+        "url string, text string",
+    )
+    b = IndexBuilder(
+        spark, str(tmp_path / "idx"), docs_per_segment=4, term_buckets=2,
+        with_positions=True,
+    )
+    with pytest.raises(Exception, match="2\\^20 tokens"):
+        b.build(src, fingerprint_extra="envelope_exact")
+
+
 def test_highlight_fragments_match_python(pos_index):
     """ES highlight: fragment = ±window analyzed tokens around the FIRST
     occurrence, match wrapped in <em>…</em> — engine (index positions +

@@ -27,6 +27,9 @@ Scale design (10^12 docs):
   (segment_id, term_bucket); a term's postings within one group never
   exceed ``docs_per_segment`` rows, so "the" is split across segments by
   construction — long-posting-list splitting without a special case.
+- **Exchange width follows the data**: max(defaultParallelism, N·avgdl /
+  2M tokens) partitions, no fixed floor — each Python task pays a fixed
+  worker set-up, so a small build runs one assembly task per core.
 - **Zero per-row Python**: assembly is Arrow C++ dictionary encode +
   numpy over posting-level arrays exploded from the shuffle's blobs.
 - Incremental ingest: a delta index built at a ``doc_id_offset`` merges
@@ -58,6 +61,8 @@ from .doc_ids import assign_doc_ids
 
 DEFAULT_DOCS_PER_SEGMENT = 8192
 DEFAULT_TERM_BUCKETS = 16
+# per-task token cap of the postings exchange (see postings_stage)
+_POSTINGS_TOKENS_PER_TASK = 2_000_000
 
 # one row per 128-posting block, fully flat — rows build from numpy arrays
 # with zero per-row Python objects, and the query side reads plain columns
@@ -467,20 +472,16 @@ class IndexBuilder:
         id_buckets: int = 64,
         doc_id_offset: int = 0,
         id_col: str | None = None,
-        postings_partitions: int | None = None,
         with_positions: bool = False,
     ):
         """Every build runs the same postings pipeline: map-side tokenize
         and tf count into one blob row per (segment, term) per batch
         (``make_posting_group_blobs_arrow``), one hash exchange on
         (segment_id, term_bucket), and whole-partition numpy assembly
-        (``_assemble_postings_arrow``).
-
-        ``postings_partitions``: shuffle partition count for the postings
-        exchange; default max(48, 3 × defaultParallelism, total tokens /
-        2M). Size it so a partition's postings (12 B each in the blobs,
-        plus 4 B per token with positions) fit executor memory — at
-        10^12 docs raise it with corpus size.
+        (``_assemble_postings_arrow``). The exchange is
+        max(defaultParallelism, total tokens / ``_POSTINGS_TOKENS_PER_TASK``)
+        partitions wide, so it grows with the corpus and a small build
+        runs one assembly task per core.
 
         ``with_positions``: store within-doc token offsets per posting
         (gap-1 varbyte, per-block blobs) — enables exact index-backed
@@ -495,7 +496,6 @@ class IndexBuilder:
         self.dps = docs_per_segment
         self.term_buckets = term_buckets
         self.id_buckets = id_buckets
-        self.postings_partitions = postings_partitions
         self.with_positions = with_positions
         # delta builds start past the base index; must be a multiple of
         # docs_per_segment so segment ids never collide across a merge
@@ -682,14 +682,13 @@ class IndexBuilder:
             # Measured: ~20% postings-stage wall at 32 CPUs, better
             # width-scaling (BENCH/BASELINE.md). Partition count scales
             # with DATA (total tokens are known from the stats stage —
-            # N × avgdl), capped at ~2M tokens per assembly task so the
-            # per-task Arrow buffer + lexsort stay cache-friendly; a fixed
-            # count went 1.9× sublinear at 1M docs.
-            total_tokens = int(st["N"] * avgdl)
-            n_parts = self.postings_partitions or max(
-                48,
-                3 * self.spark.sparkContext.defaultParallelism,
-                -(-total_tokens // 2_000_000),
+            # N × avgdl): one task per core, more only past
+            # _POSTINGS_TOKENS_PER_TASK each. A fixed count went 1.9×
+            # sublinear at 1M docs, and no floor above the core count:
+            # every Python task pays ~250 ms of set-up, even when empty.
+            n_parts = max(
+                self.spark.sparkContext.defaultParallelism,
+                -(-int(st["N"] * avgdl) // _POSTINGS_TOKENS_PER_TASK),
             )
             (
                 groups.repartition(n_parts, "segment_id", "term_bucket")

@@ -11,14 +11,18 @@ import hashlib
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 
 from aether_elasticsearch_consumer_spark.functions.codec import decode_block
 from aether_elasticsearch_consumer_spark.functions.tokenizer import tokenize_py
 from aether_elasticsearch_consumer_spark.operators.topk import (
     _decode_positions_batch,
 )
+from aether_elasticsearch_consumer_spark.plans import index_build
 from aether_elasticsearch_consumer_spark.plans.index_build import (
     DL_BITS,
+    IndexBuilder,
     _assemble_postings_arrow,
     _blob_concat,
     _explode_blob_table,
@@ -186,28 +190,67 @@ def _rows_sha256(spark, path, key):
     return h.hexdigest()
 
 
-def test_tf_preagg_build_is_byte_identical(spark, tmp_path_factory):
-    """Plain and positional builds write postings/term_stats rows that
-    hash to the goldens above."""
+@pytest.fixture(scope="module")
+def golden_src(spark, tmp_path_factory):
     from aether_elasticsearch_consumer_spark.fixtures.webtext import webtext_df
-    from aether_elasticsearch_consumer_spark.plans.index_build import IndexBuilder
 
     root = tmp_path_factory.mktemp("golden")
-    src = webtext_df(spark, 800, partitions=4)
-    src.write.mode("overwrite").parquet(str(root / "src"))
-    src = spark.read.parquet(str(root / "src"))
+    webtext_df(spark, 800, partitions=4).write.parquet(str(root / "src"))
+    return root, spark.read.parquet(str(root / "src"))
+
+
+# (segment, term_bucket) groups of the fixture: 800 docs / 256 per
+# segment → 4 segments, times 8 term buckets
+_GROUPS = 4 * 8
+
+
+def _build(spark, src, out, kind):
+    IndexBuilder(
+        spark, str(out), docs_per_segment=256, term_buckets=8,
+        with_positions=kind == "pos",
+    ).build(src, fingerprint_extra=kind)
+
+
+def _task_indices(data_dir):
+    """Partition ids of the tasks that wrote ``data_dir``'s part files
+    (``part-<id>-<uuid>...``): the postings are written straight from
+    the assembly tasks, so these are exchange partition ids."""
+    return {int(f.name.split("-")[1]) for f in data_dir.rglob("part-*")}
+
+
+def test_tf_preagg_build_is_byte_identical(spark, golden_src, monkeypatch):
+    """Plain and positional builds write postings/term_stats rows that
+    hash to the goldens above, at the default exchange width and at one
+    wider than the fixture's (segment, term_bucket) groups."""
+    root, src = golden_src
     keys = {
         "postings": ["term_bucket", "term", "segment_id", "block_no"],
         "term_stats": ["term_bucket", "term"],
     }
-    got = {}
-    for kind in ("plain", "pos"):
-        IndexBuilder(
-            spark, str(root / kind), docs_per_segment=256, term_buckets=8,
-            with_positions=kind == "pos",
-        ).build(src, fingerprint_extra=kind)
-        for part, key in keys.items():
-            got[kind, part] = _rows_sha256(
-                spark, str(root / f"{kind}/{part}/data"), key
+    for width in ("default", "wide"):
+        if width == "wide":
+            st = pq.read_table(root / "default/plain/stats/data").to_pylist()[0]
+            monkeypatch.setattr(
+                index_build, "_POSTINGS_TOKENS_PER_TASK",
+                int(st["N"] * st["avgdl"]) // (2 * _GROUPS),
             )
-    assert got == GOLDEN
+        got = {}
+        for kind in ("plain", "pos"):
+            _build(spark, src, root / width / kind, kind)
+            for part, key in keys.items():
+                got[kind, part] = _rows_sha256(
+                    spark, str(root / f"{width}/{kind}/{part}/data"), key
+                )
+        assert got == GOLDEN, width
+    assert max(_task_indices(root / "wide/plain/postings/data")) >= _GROUPS
+
+
+def test_postings_exchange_runs_one_task_per_core(spark, golden_src):
+    """A build far under the per-task token cap runs its postings
+    assembly on defaultParallelism tasks — no fixed floor of extra,
+    mostly empty Python tasks."""
+    root, src = golden_src
+    # resumes the golden test's default-width build when that ran first
+    _build(spark, src, root / "default/plain", "plain")
+    ids = _task_indices(root / "default/plain/postings/data")
+    assert ids == set(range(spark.sparkContext.defaultParallelism))

@@ -24,16 +24,22 @@ Execution model (scales to 1000 executors):
 Step 3 runs on one of two sides, chosen per query by Σdf of the query
 terms (known after step 2, before any posting is read):
 - **driver side** (Σdf ≤ ``_DRIVER_SCORE_MAX_DF``): one pyarrow read of
-  the pruned postings, the per-segment sidecar rows by point read, the
-  segments scored in-process and the merged top-k handed back as a local
-  relation — zero Spark jobs. Any Spark plan costs a scheduling and
-  python-worker round-trip (~0.2 s even for one tiny task), which is
-  most of a small query's latency;
-- **Spark side** (larger reads): the postings scan fans out across the
-  cluster and each segment scores in an ``applyInPandas`` task.
-Both sides call the same ``_score_segment`` with the same df, N, avgdl,
-bounds and tombstone blobs, so they are rank-identical; only where the
-work runs differs.
+  the pruned postings, scored in-process and the merged top-k handed
+  back as a local relation — zero Spark jobs. Any Spark plan costs a
+  scheduling and python-worker round-trip (~0.2 s even for one tiny
+  task), which is most of a small query's latency;
+- **Spark side** (larger reads): the pruned postings scan fans out
+  across the cluster, one exchange groups rows by segment, and each
+  task scores its segments in a ``mapInPandas`` step — no join, the
+  same plan with and without tombstones.
+Both sides hand their postings to the same ``_score_segments``, which
+point-reads those segments' sidecar rows (doclens lens blob plus the
+tombstone blob) straight from the index files with pyarrow and calls
+``_score_segment`` per segment, with the same df, N, avgdl and bounds —
+so they are rank-identical; only where the work runs differs. Lens bytes
+never cross an exchange, a broadcast or a join. The executor-side read
+assumes the index dir is a POSIX path visible to the workers, as the
+driver-side reads already do.
 
 Determinism contract: per-term contributions accumulate in ascending-term
 order in float64 and final scores round to 9 decimals — identical to the
@@ -124,13 +130,9 @@ def _decode_positions_batch(
 # index layout.
 POS_BITS = 20
 
-# doclens-sidecar broadcast cap (see IndexReader._sidecar_bc): past this
-# the reader keeps the semi-join + block_no=0 join plan
-_SIDECAR_BC_MAX_BYTES = 256 * 1024 * 1024
-
-# scoring-exchange sizing for the broadcast-sidecar fast path: each task
-# pays a fixed python-worker round-trip (~0.1-0.3 s measured), so width
-# derives from WORK (segments / this) capped at the cluster width — a
+# scoring-exchange sizing (see IndexReader._by_segment): each task pays a
+# fixed python-worker round-trip (~0.1-0.3 s measured), so width derives
+# from WORK (segments / this) capped at the cluster width — a
 # width-32 plan for a 49-segment query measured p50 0.57 s vs 0.44 s at
 # the derived 7 (probe in OPTIMIZATION_r06.md); large corpora hit the
 # parallelism cap and scale out normally
@@ -400,6 +402,104 @@ def _score_segment(
     return pd.DataFrame({"doc_id": (cand + start).astype(np.int64), "score": scores})
 
 
+# the posting columns the scorer reads (never the positions blob)
+_SCORE_COLS = [
+    "segment_id", "term", "block_no", "first_doc_id", "last_doc_id",
+    "count", "max_impact", "doc_deltas", "tfs",
+]
+
+
+def _sidecar_rows(doclens, deletes, segment_ids) -> pd.DataFrame:
+    """Point read of the given segments' sidecar rows from the reader's
+    ``doclens/data`` dataset: one (segment_id, start_doc_id, lens) row
+    per segment, plus the segment's tombstone blob as ``deleted`` when a
+    ``deletes/segments/data`` dataset is given (NaN for a segment without
+    deletes). A segment missing from the doclens files has no row. The
+    datasets pickle with their file listing, so executors read the same
+    files the reader listed without listing again."""
+    import pyarrow.dataset as ds
+
+    filt = ds.field("segment_id").isin(np.asarray(segment_ids, np.int64))
+    side = doclens.to_table(
+        columns=["segment_id", "start_doc_id", "lens"], filter=filt
+    ).to_pandas()
+    if deletes is not None:
+        dele = deletes.to_table(
+            columns=["segment_id", "deleted"], filter=filt
+        ).to_pandas()
+        side = side.merge(dele, on="segment_id", how="left")
+    return side
+
+
+def _score_segments(
+    post: pd.DataFrame,
+    doclens,
+    deletes,
+    N: int,
+    avgdl: float,
+    k: int,
+    bound_scale: float = 1.0,
+    after: tuple[float, int] | None = None,
+    per_term_round: bool = False,
+) -> pd.DataFrame:
+    """Score the pruned posting rows of any number of segments (the
+    ``_SCORE_COLS`` plus the query df as ``df``): one ``_sidecar_rows``
+    point read for all of them, then ``_score_segment`` per segment.
+    Returns every segment's hits, concatenated. Both sides of
+    ``IndexReader`` score through here — the driver in-process, the
+    Spark side once per task — so a segment missing from the sidecar
+    yields no hits on either."""
+    if not len(post):
+        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                             "score": pd.Series(dtype="float64")})
+    side = _sidecar_rows(doclens, deletes, post["segment_id"].unique())
+    side_of = dict(iter(side.groupby("segment_id")))
+    return pd.concat(
+        [
+            _score_segment(
+                grp, side_of.get(sid, side.iloc[:0]), N, avgdl, k,
+                bound_scale=bound_scale, after=after,
+                per_term_round=per_term_round,
+            )
+            for sid, grp in post.groupby("segment_id")
+        ]
+    )
+
+
+def _doc_lens(doclens, ids: np.ndarray, dps: int) -> np.ndarray:
+    """Doc lengths of ``ids`` from their segments' doclens rows (the same
+    ``_sidecar_rows`` point read as the scorer). A doc's segment is
+    doc_id // docs_per_segment, the assignment the build, merges and
+    tombstones all use. A doc whose segment has no row, or that falls
+    outside its segment's lens array, raises ``MissingSidecarError``
+    instead of reading a neighbour's lengths."""
+    seg = ids // dps
+    side = _sidecar_rows(doclens, None, np.unique(seg))
+    rows = dict(
+        zip(side["segment_id"].tolist(),
+            zip(side["start_doc_id"].tolist(), side["lens"].tolist()))
+    )
+    out = np.empty(len(ids), dtype=np.int64)
+    for s in np.unique(seg):
+        mask = seg == s
+        if int(s) not in rows:
+            raise MissingSidecarError(
+                f"doc_id {int(ids[mask][0])}: segment {int(s)} has no "
+                "doclens sidecar row"
+            )
+        start, blob = rows[int(s)]
+        arr = varbyte_decode(blob).astype(np.int64)
+        off = ids[mask] - start
+        bad = (off < 0) | (off >= len(arr))
+        if bad.any():
+            raise MissingSidecarError(
+                f"doc_id {int(ids[mask][bad][0])} is outside segment "
+                f"{int(s)}'s {len(arr)} doclens entries"
+            )
+        out[mask] = arr[off]
+    return out
+
+
 class IndexReader:
     """Reads the on-disk index layout written by plans.index_build.
 
@@ -409,11 +509,11 @@ class IndexReader:
     queries whose summed df is at or under ``_DRIVER_SCORE_MAX_DF``, the
     pruned postings and their sidecar rows are pyarrow reads scored on
     the driver (see the module docstring). Larger queries plan the Spark
-    scorer: one exchange, with the df as a literal map and the doclens
-    sidecar as a per-reader broadcast, or the df/sidecar join plan on
-    tombstoned readers. The Spark source DataFrames and the pyarrow
-    dataset handles are built on first use and kept per reader, so file
-    listings are reused across queries."""
+    scorer: one exchange, the df as a literal map, and each task
+    point-reading its own segments' sidecar rows — the same plan on
+    clean and tombstoned readers. The Spark source DataFrames and the
+    pyarrow dataset handles are built on first use and kept per reader,
+    so file listings are reused across queries."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         import pyarrow.compute as pc
@@ -441,12 +541,6 @@ class IndexReader:
         self.dps = int(st.get("docs_per_segment") or DEFAULT_DOCS_PER_SEGMENT_HINT)
         self.profile = st["profile"]
         self.positions = bool(st.get("positions") or False)
-        self._sidecar_cache = None
-        # scoring-exchange width for the broadcast-sidecar fast path;
-        # None → defaultParallelism (tunable: each extra task costs a
-        # python-worker round-trip, so low-latency setups may prefer
-        # fewer, larger scoring tasks)
-        self.score_width: int | None = None
 
         # tombstones (plans/tombstones.py): adjust N/avgdl to the LIVE
         # corpus exactly — n_deleted/deleted_len are exact integers from
@@ -496,10 +590,6 @@ class IndexReader:
         return self._frame("postings/data")
 
     @property
-    def _doclens(self) -> DataFrame:
-        return self._frame("doclens/data")
-
-    @property
     def _term_stats(self) -> DataFrame:
         return self._frame("term_stats/data")
 
@@ -517,11 +607,12 @@ class IndexReader:
     def _by_segment(self, postings: DataFrame) -> DataFrame:
         """Pin the per-segment decode exchange width: AQE's byte-based
         coalescing folds the few-MB pruned posting shuffles to a single
-        partition, serializing every applyInPandas decode — but each
-        task also costs a python round-trip, so width derives from WORK
-        (segments / _SEGMENTS_PER_SCORE_TASK, same sizing as the
-        scorer) capped at cluster width. Execution width only, values
-        unchanged (round 6)."""
+        partition, serializing every per-segment decode — but each task
+        also costs a python round-trip, so width derives from WORK
+        (segments / _SEGMENTS_PER_SCORE_TASK) capped at cluster width.
+        An explicit repartition on segment_id is exempt from AQE
+        coalescing, and a groupBy on the same key reuses it (no second
+        exchange). Execution width only, values unchanged."""
         n_segments = max(1, -(-self.N // self.dps))
         width = max(
             1,
@@ -536,41 +627,11 @@ class IndexReader:
         # driver-side, bit-exact with F.pmod(F.xxhash64(term), B)
         return {t: spark_pmod_bucket(t, self.term_buckets) for t in terms}
 
-    def _sidecar_bc(self):
-        """The doclens sidecar as a per-reader Spark broadcast:
-        {segment_id: (start_doc_id, lens_blob)}. Built lazily from one
-        driver-side pyarrow read, shipped once, reused by every query —
-        replaces two per-query joins (semi-join prune + block_no=0
-        attach) and their broadcast-build jobs. Guarded by on-disk size:
-        past ``_SIDECAR_BC_MAX_BYTES`` (≈200M docs at ~1.2 B/doc) the
-        reader keeps the join plan, which scales to 10^12 docs.
-        Returns None when too big (or unreadable)."""
-        if self._sidecar_cache is None:
-            root = self.dir / "doclens/data"
-            try:
-                size = sum(
-                    f.stat().st_size for f in root.rglob("*.parquet")
-                )
-                if size > _SIDECAR_BC_MAX_BYTES:
-                    self._sidecar_cache = (None,)
-                else:
-                    tbl = self._pa("doclens/data").to_table(
-                        columns=["segment_id", "start_doc_id", "lens"]
-                    )
-                    m = {
-                        int(s): (int(st), ln)
-                        for s, st, ln in zip(
-                            tbl["segment_id"].to_pylist(),
-                            tbl["start_doc_id"].to_pylist(),
-                            tbl["lens"].to_pylist(),
-                        )
-                    }
-                    self._sidecar_cache = (
-                        self.spark.sparkContext.broadcast(m),
-                    )
-            except OSError:
-                self._sidecar_cache = (None,)
-        return self._sidecar_cache[0]
+    def _sidecars(self):
+        """The ``_sidecar_rows`` datasets: doclens, and the per-segment
+        tombstone blobs on a tombstoned reader (else None)."""
+        deletes = self._pa("deletes/segments/data") if self.has_deletes else None
+        return self._pa("doclens/data"), deletes
 
     def _term_filter(self, terms: list[str]):
         """pyarrow filter mirroring the Spark scans' pushdown: term_bucket
@@ -614,42 +675,17 @@ class IndexReader:
         after: tuple[float, int] | None,
     ) -> DataFrame:
         """The driver side of ``search``: one pyarrow read of the pruned
-        postings, each segment scored by ``_score_segment`` with its
-        sidecar row (point read off the segment-sorted doclens files, plus
-        the tombstone blob when deletes exist), then the per-segment top-k
-        merged by (score desc, doc_id asc). A segment missing from the
-        sidecar yields no hits, as on the Spark side. The result is a
-        local relation: collecting it runs no Spark job."""
-        import pyarrow.dataset as ds
-
+        postings, scored in-process by ``_score_segments``, then the
+        per-segment top-k merged by (score desc, doc_id asc). The result
+        is a local relation: collecting it runs no Spark job."""
         post = self._pa("postings/data").to_table(
-            columns=[
-                "segment_id", "term", "block_no", "first_doc_id",
-                "last_doc_id", "count", "max_impact", "doc_deltas", "tfs",
-            ],
-            filter=self._term_filter(terms),
+            columns=_SCORE_COLS, filter=self._term_filter(terms)
         ).to_pandas()
-        if not len(post):
-            return _empty_topk(self.spark)
         post["df"] = post["term"].map(dfs)
-        seg_filt = ds.field("segment_id").isin(post["segment_id"].unique())
-        side = self._pa("doclens/data").to_table(
-            columns=["segment_id", "start_doc_id", "lens"], filter=seg_filt
-        ).to_pandas()
-        if self.has_deletes:
-            dele = self._pa("deletes/segments/data").to_table(
-                columns=["segment_id", "deleted"], filter=seg_filt
-            ).to_pandas()
-            side = side.merge(dele, on="segment_id", how="left")
-        side_of = dict(iter(side.groupby("segment_id")))
-        parts = [
-            _score_segment(
-                grp, side_of.get(sid, side.iloc[:0]), self.N, self.avgdl, k,
-                bound_scale=self.bound_scale, after=after,
-            )
-            for sid, grp in post.groupby("segment_id")
-        ]
-        hits = pd.concat(parts)
+        hits = _score_segments(
+            post, *self._sidecars(), self.N, self.avgdl, k,
+            bound_scale=self.bound_scale, after=after,
+        )
         if not len(hits):
             return _empty_topk(self.spark)
         ids, scores = _select_topk(
@@ -667,149 +703,46 @@ class IndexReader:
         per_term_round: bool = False,
         dfs: dict[str, int] | None = None,
     ) -> DataFrame:
-        """The shared Spark scoring plan: pruned posting read → broadcast
-        (delete-adjusted) df → block_no=0 sidecar attach → per-segment
-        block-max scorer. No global sort/limit — callers add their own
-        cut (top-k, cursor page, or none for exhaustive scoring).
-        ``dfs``: the query's ``term_dfs``, when the caller already has it.
-
-        The doclens sidecar joins onto ONE row per (segment, term) — the
-        block_no=0 row — never onto every posting block row: joined
-        per-row, the multi-KB per-segment lens blob replicates across the
-        groupBy exchange at blocks-per-term multiplicity (~64×; measured
-        ~390 MB of duplicated lens bytes for a 5-stopword query at 1M
-        docs — the round-2 p99 tail). A cogroup would move it exactly
-        once but costs an extra exchange+sort and a two-stream python
-        worker feed (measured 3× worse on mid-freq queries); the
-        block_no=0 equi-join keeps the single-exchange plan shape.
-        doclens is pruned to segments that actually hold query-term
-        postings first — at 10^12 docs the sidecar is ~10^8 rows, while
-        the pruned segment list is tiny (broadcast semi-join, no
-        shuffle).
-
-        Latency fast path (round 6): without tombstones, the per-query df
-        folds in as a LITERAL map (driver-side pyarrow term_stats read —
-        no broadcast-build job) and the doclens sidecar ships once per
-        reader as a Spark broadcast keyed by segment_id (when it fits —
-        ``_SIDECAR_BC_MAX_BYTES``), so a search plan is scan → groupBy →
-        score: one exchange, zero joins, zero broadcast-subquery jobs
-        (was 6 jobs/query, ~40% of p50 on the bench index). Values are
-        identical — same df ints, same lens blobs — only the delivery
-        changes; the tombstone path keeps the proven join plan."""
+        """The Spark scoring plan: pruned posting read (the ``_SCORE_COLS``)
+        → the delete-adjusted df as a literal map → one ``_by_segment``
+        exchange → ``_score_segments`` over each task's rows. Each task
+        point-reads its own segments' sidecar rows, so the plan is scan →
+        exchange → score on clean and tombstoned readers alike: no join,
+        no broadcast. No global sort/limit — callers add their own cut
+        (top-k, cursor page, or none for exhaustive scoring). ``dfs``:
+        the query's ``term_dfs``, when the caller already has it."""
+        if dfs is None:
+            dfs = self.term_dfs(terms)
+        if dfs:
+            df_col = F.create_map(
+                *[x for t in sorted(dfs) for x in (F.lit(t), F.lit(int(dfs[t])))]
+            )[F.col("term")].cast("long")
+        else:
+            # no query term exists in the index — the pruned scan yields
+            # zero rows anyway; a null literal keeps the plan shape
+            df_col = F.lit(None).cast("long")
         buckets = self._buckets_for(terms)
-        bucket_pred = F.col("term_bucket").isin(
-            list(set(buckets.values()))
-        ) & F.col("term").isin(terms)
-        postings = self._postings.where(bucket_pred)
+        postings = (
+            self._postings.where(
+                F.col("term_bucket").isin(list(set(buckets.values())))
+                & F.col("term").isin(terms)
+            )
+            .select(*_SCORE_COLS)
+            .withColumn("df", df_col)
+        )
+        doclens, deletes = self._sidecars()
         N, avgdl, bscale = self.N, self.avgdl, self.bound_scale
-        if not self.has_deletes:
-            bc = self._sidecar_bc()
-            if bc is not None:
-                if dfs is None:
-                    dfs = self.term_dfs(terms)
-                if dfs:
-                    df_map = F.create_map(
-                        *[
-                            x
-                            for t in sorted(dfs)
-                            for x in (F.lit(t), F.lit(int(dfs[t])))
-                        ]
-                    )
-                    df_col = df_map[F.col("term")].cast("long")
-                else:
-                    # no query term exists in the index — the pruned scan
-                    # yields zero rows anyway; a null literal keeps the
-                    # plan shape (pinned pruning contracts) without a map
-                    df_col = F.lit(None).cast("long")
-                lit_joined = postings.withColumn("df", df_col)
 
-                def score_bc(pdf: pd.DataFrame) -> pd.DataFrame:
-                    ent = bc.value.get(int(pdf["segment_id"].iloc[0]))
-                    if ent is None:
-                        return pd.DataFrame(
-                            {
-                                "doc_id": pd.Series(dtype="int64"),
-                                "score": pd.Series(dtype="float64"),
-                            }
-                        )
-                    side = pd.DataFrame(
-                        {"start_doc_id": [ent[0]], "lens": [ent[1]]}
-                    )
-                    return _score_segment(
-                        pdf, side, N, avgdl, k, bound_scale=bscale,
-                        after=after, per_term_round=per_term_round,
-                    )
-
-                # pin the scoring exchange's width: the pruned shuffle is
-                # ~1 MB, so AQE's byte-based coalescing folds it to ONE
-                # partition and every segment scores serially in one
-                # python task (measured: the whole post-exchange stage =
-                # one 0.6-0.8 s task). An explicit repartition on the
-                # group key is exempt from AQE coalescing and the groupBy
-                # reuses it (same key → no second exchange, guide §2.4);
-                # width = min(cores, segments) affects scheduling only —
-                # per-segment scores are partitioning-independent.
-                n_score = max(
-                    1,
-                    min(
-                        self.score_width
-                        or self.spark.sparkContext.defaultParallelism,
-                        -(-len(bc.value) // _SEGMENTS_PER_SCORE_TASK),
-                    ),
+        def score(it):
+            batches = list(it)
+            if batches:
+                yield _score_segments(
+                    pd.concat(batches), doclens, deletes, N, avgdl, k,
+                    bound_scale=bscale, after=after,
+                    per_term_round=per_term_round,
                 )
-                return (
-                    lit_joined.repartition(n_score, "segment_id")
-                    .groupBy("segment_id")
-                    .applyInPandas(score_bc, TOPK_SCHEMA)
-                )
-        stats = self._term_stats.where(bucket_pred).select("term", "df")
-        if self.has_deletes:
-            # exact post-delete df: stored df minus docs-containing-term
-            # count over the deleted set (same pruned read shape)
-            delta = (
-                self._frame("deletes/term_df/data")
-                .where(bucket_pred)
-                .select("term", "df_delta")
-            )
-            stats = stats.join(delta, "term", "left").select(
-                "term",
-                (
-                    F.col("df") - F.coalesce(F.col("df_delta"), F.lit(0))
-                ).alias("df"),
-            )
-        doclens = self._doclens.join(
-            F.broadcast(postings.select("segment_id").distinct()),
-            "segment_id",
-            "left_semi",
-        )
-        if self.has_deletes:
-            # the per-segment tombstone blob rides the same sidecar row;
-            # segments with no deletes get NULL and the scorer skips masking
-            doclens = doclens.join(
-                self._frame("deletes/segments/data").select(
-                    "segment_id", "deleted"
-                ),
-                "segment_id",
-                "left",
-            )
-        side_cols = ["segment_id", "start_doc_id", "lens"] + (
-            ["deleted"] if self.has_deletes else []
-        )
-        doclens_b0 = doclens.select(*side_cols).withColumn(
-            "block_no", F.lit(0)
-        )
-        joined = postings.join(F.broadcast(stats), "term").join(
-            doclens_b0, ["segment_id", "block_no"], "left"
-        )
 
-        def score(pdf: pd.DataFrame) -> pd.DataFrame:
-            side = pdf.loc[pdf["lens"].notna()]
-            return _score_segment(
-                pdf, side, N, avgdl, k, bound_scale=bscale, after=after,
-                per_term_round=per_term_round,
-            )
-
-        return joined.groupBy("segment_id").applyInPandas(score, TOPK_SCHEMA)
+        return self._by_segment(postings).mapInPandas(score, TOPK_SCHEMA)
 
     def search(
         self,
@@ -1810,15 +1743,13 @@ class IndexReader:
     def search_phrase(self, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
         """SCORED phrase query (ES match_phrase, optional slop): candidates
         come from the positional verifier with their phrase frequency
-        (number of valid start positions), then BM25 scores the phrase as if it were a
-        term — tf = phrase freq, df = number of matching docs — entirely
-        in Catalyst: the phrase df is a 1-row scalar count broadcast back
-        onto the match set (a common phrase like "of the" can match
-        millions of docs; a global window would move them all to one
-        partition just to learn their count — the round-2 judge's 100×
-        scale flag), doc lengths join from the docs sidecar, constants
-        (N, avgdl) ride the plan. Determinism contract as everywhere:
-        float64, 9-dp round, (score desc, doc_id asc)."""
+        (number of valid start positions), then BM25 scores the phrase as
+        if it were a term — tf = phrase freq, df = number of matching docs
+        (see ``phrase_scores``). Like ``phrase_scores``, this runs Spark
+        jobs at call time: the match set is checkpointed and counted
+        eagerly, before the returned DataFrame is collected. Determinism
+        contract as everywhere: float64, 9-dp round, (score desc, doc_id
+        asc)."""
         scored = self.phrase_scores(phrase, slop=slop)
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
@@ -1826,115 +1757,44 @@ class IndexReader:
         """BM25 phrase score for EVERY phrase-matching doc (the un-cut
         form of ``search_phrase``; also the rescore-query primitive).
 
-        Latency fast path (round 6, same conditions as the flagship
-        scorer): without tombstones and with the doclens sidecar
-        broadcast available, the positional decode runs ONCE — the match
-        set is eagerly local-checkpointed, the phrase df is a driver-side
-        ``count()`` of the checkpointed blocks folded in as a literal,
-        and doc_len reads out of the broadcast lens blobs in the same
-        map step.  The lazy form underneath re-executed the ENTIRE
-        phrase verification a second time for the df-count subquery
-        branch and paid a docs-sidecar join for doc_len (28-node plan,
-        6 jobs/query).  Values are identical — same matches, same df,
-        same lens — only the delivery changes; tombstoned readers and
-        over-cap sidecars keep the proven two-branch plan, which never
-        materializes the match set."""
-        matches = self.phrase_docs(phrase, with_freq=True, slop=slop)
+        Eager at call time, for every reader: the match set (live docs
+        only — ``phrase_docs`` strips tombstoned ids) is local-checkpointed
+        and counted for the phrase df before this returns, so the
+        positional decode runs once. Each task of the scoring step then
+        point-reads its own docs' doclens rows (``_doc_lens``, the
+        scorer's ``_sidecar_rows`` read) for doc_len; N and avgdl are the
+        reader's live values. The checkpoint is not released when the
+        result is dropped."""
         from ..functions.bm25 import bm25_cols
 
-        if not self.has_deletes:
-            bc = self._sidecar_bc()
-            if bc is not None:
-                m = matches.localCheckpoint(eager=True)
-                df_val = int(m.count())
-                seg_items = sorted(
-                    (ent[0], sid) for sid, ent in bc.value.items()
-                )
-                starts_arr = np.array(
-                    [s for s, _ in seg_items], dtype=np.int64
-                )
-                sids = [sid for _, sid in seg_items]
-
-                def attach_len(it):
-                    decoded: dict[int, np.ndarray] = {}
-                    for pdf in it:
-                        if not len(pdf):
-                            yield pdf.assign(
-                                doc_len=pd.Series(dtype="int64")
-                            )
-                            continue
-                        ids = pdf["doc_id"].to_numpy()
-                        slot = (
-                            np.searchsorted(starts_arr, ids, side="right")
-                            - 1
-                        )
-                        lens_out = np.empty(len(ids), dtype=np.int64)
-                        for s in np.unique(slot):
-                            mask = slot == s
-                            # slot −1 (before the first segment) would
-                            # wrap to the LAST segment, and an offset past
-                            # the lens array reads a neighbour's lengths
-                            if s < 0:
-                                raise MissingSidecarError(
-                                    f"doc_id {int(ids[mask][0])} precedes "
-                                    "every doclens sidecar segment"
-                                )
-                            sid = sids[s]
-                            arr = decoded.get(sid)
-                            if arr is None:
-                                arr = varbyte_decode(
-                                    bc.value[sid][1]
-                                ).astype(np.int64)
-                                decoded[sid] = arr
-                            off = ids[mask] - starts_arr[s]
-                            if off.max() >= len(arr):
-                                raise MissingSidecarError(
-                                    f"doc_id {int(ids[mask][off.argmax()])} "
-                                    f"is past segment {sid}'s {len(arr)} "
-                                    "doclens entries"
-                                )
-                            lens_out[mask] = arr[off]
-                        yield pdf.assign(doc_len=lens_out)
-
-                with_len = m.mapInPandas(
-                    attach_len,
-                    "doc_id long, phrase_freq long, doc_len long",
-                )
-                return with_len.select(
-                    "doc_id",
-                    F.round(
-                        bm25_cols(
-                            F.col("phrase_freq"),
-                            F.lit(df_val),
-                            F.col("doc_len"),
-                            F.lit(self.N),
-                            F.lit(self.avgdl),
-                        ),
-                        9,
-                    ).alias("score"),
-                )
-
-        docs = self.spark.read.parquet(str(self.dir / "docs/data")).select(
-            "doc_id", "doc_len"
+        m = self.phrase_docs(phrase, with_freq=True, slop=slop).localCheckpoint(
+            eager=True
         )
-        df_count = matches.agg(F.count("*").alias("_df"))
-        return (
-            matches.join(docs, "doc_id")
-            .crossJoin(F.broadcast(df_count))
-            .withColumn(
-                "score",
-                F.round(
-                    bm25_cols(
-                        F.col("phrase_freq"),
-                        F.col("_df"),
-                        F.col("doc_len"),
-                        F.lit(self.N),
-                        F.lit(self.avgdl),
-                    ),
-                    9,
+        df_val = int(m.count())
+        doclens, dps = self._pa("doclens/data"), self.dps
+
+        def attach_len(it):
+            batches = list(it)
+            if batches:
+                pdf = pd.concat(batches)
+                yield pdf.assign(
+                    doc_len=_doc_lens(doclens, pdf["doc_id"].to_numpy(), dps)
+                )
+
+        return m.mapInPandas(
+            attach_len, "doc_id long, phrase_freq long, doc_len long"
+        ).select(
+            "doc_id",
+            F.round(
+                bm25_cols(
+                    F.col("phrase_freq"),
+                    F.lit(df_val),
+                    F.col("doc_len"),
+                    F.lit(self.N),
+                    F.lit(self.avgdl),
                 ),
-            )
-            .select("doc_id", "score")
+                9,
+            ).alias("score"),
         )
 
     def rescore_phrase(
@@ -1952,7 +1812,9 @@ class IndexReader:
         match set. final = query_weight·bm25 + rescore_weight·phrase_bm25
         (0 for window docs without the exact phrase), rounded to 9 dp,
         (score desc, doc_id asc). The window cut uses the same total order
-        as everything else, so membership is deterministic."""
+        as everything else, so membership is deterministic. The phrase
+        side runs Spark jobs at call time: ``phrase_scores`` checkpoints
+        and counts its match set eagerly."""
         base = self.search(query, k=window)
         ph = self.phrase_scores(phrase).withColumnRenamed("score", "_ph")
         combined = (

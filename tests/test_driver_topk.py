@@ -8,7 +8,9 @@ Contracts:
 - opening a reader and answering a small search run zero Spark jobs;
 - a segment missing from the doclens sidecar yields no hits on either
   side, and the phrase scorer's lens lookup raises a named error instead
-  of reading a neighbouring segment's lengths.
+  of reading a neighbouring segment's lengths;
+- no reader operation creates a Spark broadcast (the sidecar is a
+  per-task point read, so nothing per reader outlives a query).
 """
 
 from __future__ import annotations
@@ -127,20 +129,26 @@ def test_open_and_small_search_run_no_spark_job(spark, indexes, which):
         assert rows == (score_query(oracle, q, k=k) if k else []), q
 
 
-def test_missing_sidecar_segment_scores_alike_on_both_sides(
-    spark, indexes, monkeypatch, tmp_path
-):
-    """A segment absent from the doclens sidecar yields no hits on the
-    driver side, exactly like the Spark side's ``score_bc``."""
-    idx = str(tmp_path / "nodl")
-    shutil.copytree(indexes["clean"][0], idx)
-    dl_dir = tmp_path / "nodl" / "doclens" / "data"
+def _drop_doclens_row(idx, segment_id: int) -> None:
+    """Rewrite an index's doclens sidecar without one segment's row."""
+    dl_dir = idx / "doclens" / "data"
     tbl = ds.dataset(str(dl_dir), format="parquet").to_table()
     for f in dl_dir.glob("*.parquet"):
         f.unlink()
     pq.write_table(
-        tbl.filter(ds.field("segment_id") != 1), str(dl_dir / "part-0.parquet")
+        tbl.filter(ds.field("segment_id") != segment_id),
+        str(dl_dir / "part-0.parquet"),
     )
+
+
+def test_missing_sidecar_segment_scores_alike_on_both_sides(
+    spark, indexes, monkeypatch, tmp_path
+):
+    """A segment absent from the doclens sidecar yields no hits on either
+    side: both score through ``_score_segments``."""
+    idx = str(tmp_path / "nodl")
+    shutil.copytree(indexes["clean"][0], idx)
+    _drop_doclens_row(tmp_path / "nodl", 1)
     rd = IndexReader(spark, idx)
     got = {}
     for side, cap in SIDES.items():
@@ -152,29 +160,54 @@ def test_missing_sidecar_segment_scores_alike_on_both_sides(
 
 @pytest.fixture(scope="module")
 def positional(spark, tmp_path_factory):
-    idx = str(tmp_path_factory.mktemp("drvpos") / "idx")
-    IndexBuilder(spark, idx, with_positions=True, **KW).build(
+    """A 200-doc positional index and a tombstoned copy."""
+    root = tmp_path_factory.mktemp("drvpos")
+    clean = str(root / "clean")
+    IndexBuilder(spark, clean, with_positions=True, **KW).build(
         webtext_df(spark, 200, partitions=4), fingerprint_extra="drvpos200"
     )
-    return idx
+    tomb = str(root / "tomb")
+    shutil.copytree(clean, tomb)
+    apply_deletes(spark, tomb, [d for d in DEAD if d < 200])
+    return {"clean": clean, "tomb": tomb}
 
 
 @pytest.mark.parametrize("dropped", [0, 1])
 def test_phrase_lens_lookup_raises_on_missing_sidecar_segment(
-    spark, positional, dropped
+    spark, positional, dropped, tmp_path
 ):
-    """Drop one segment from the phrase fast path's sidecar broadcast: a
-    matched doc in it must raise MissingSidecarError. Unchecked, segment
-    0's docs land on slot −1 (the last segment's lens) and segment 1's
-    index past the end of segment 0's."""
-    rd = IndexReader(spark, positional)
-    text = dict(_docs(spark, positional))[dropped * 64]
+    """Drop one segment's doclens row on disk: a phrase match in it must
+    raise MissingSidecarError, never score with a neighbouring segment's
+    lengths."""
+    shutil.copytree(positional["clean"], tmp_path / "idx")
+    _drop_doclens_row(tmp_path / "idx", dropped)
+    rd = IndexReader(spark, str(tmp_path / "idx"))
+    text = dict(_docs(spark, rd.dir))[dropped * 64]
     phrase = " ".join(tokenize_py(text, rd.profile)[:2])
-    full = rd._sidecar_bc().value
-    rd._sidecar_cache = (
-        spark.sparkContext.broadcast(
-            {s: v for s, v in full.items() if s != dropped}
-        ),
-    )
     with pytest.raises(Exception, match="MissingSidecarError"):
         rd.phrase_scores(phrase).collect()
+
+
+def test_reader_operations_create_no_broadcast(spark, positional, monkeypatch):
+    """Opening readers on a clean and a tombstoned index and running the
+    Spark-side ``search``, ``or_scores`` and ``phrase_scores`` creates no
+    Spark broadcast, so a long-lived session holds none per reader."""
+    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
+    sc = spark.sparkContext
+    calls = []
+    real = sc.broadcast
+
+    def counting(value):
+        calls.append(type(value).__name__)
+        return real(value)
+
+    monkeypatch.setattr(sc, "broadcast", counting)
+    for which, idx in positional.items():
+        rd = IndexReader(spark, idx)
+        assert rd.has_deletes == (which == "tomb")
+        text = dict(_docs(spark, idx))[70]
+        phrase = " ".join(tokenize_py(text, rd.profile)[:2])
+        assert rd.search("the keta", k=5).collect(), which
+        assert rd.or_scores("keta gera").collect(), which
+        assert rd.phrase_scores(phrase).collect(), which
+    assert calls == []

@@ -6,7 +6,9 @@ story depends on, asserted on the actual executed plans (not docstrings).
   filter (row-group min/max pruning); the search() plans are pinned on
   the Spark side (forced past the driver-side Σdf cap), and the driver
   side's pyarrow reads must open only the query's term_bucket dirs;
-- the per-query df lookup joins via broadcast, never a shuffle;
+- a search() plan is one exchange and no join, on clean and tombstoned
+  readers alike (the df is a literal map, the sidecar a per-task point
+  read);
 - ANN index queries list only the probed partition directories.
 """
 
@@ -33,32 +35,8 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_search_plan_prunes_and_broadcasts(reader, monkeypatch):
-    # the Spark side of search(): force it past the driver-side cap
-    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
-    plan = _plan(reader.search("keta gera", k=5))
-    # directory pruning: the scan's PartitionFilters must constrain
-    # term_bucket (never a full-directory listing)
-    assert "PartitionFilters" in plan
-    assert "term_bucket" in plan.split("PartitionFilters")[1][:200]
-    # row-group pruning: the term predicate reaches the parquet scan
-    assert "PushedFilters" in plan
-    pushed = plan.split("PushedFilters")[1][:300]
-    assert "term" in pushed and ("In(" in pushed or "EqualTo" in pushed)
-    # round 6: the per-query df folds in as a LITERAL map (driver-side
-    # term_stats read) and the doclens sidecar ships as a broadcast
-    # variable — a tombstone-free search plan has NO join and exactly one
-    # exchange (the pinned-width scoring repartition)
-    assert "Join" not in plan
-    assert plan.count("Exchange") == 1
-
-
-def test_search_plan_with_deletes_keeps_join_shape(
-    spark, tmp_path_factory, monkeypatch
-):
-    """The tombstone path must keep the proven broadcast-join plan: df
-    broadcast + block_no=0 sidecar attach, never a shuffle join."""
-    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
+@pytest.fixture(scope="module")
+def tomb_reader(spark, tmp_path_factory):
     from aether_elasticsearch_consumer_spark.plans.tombstones import (
         apply_deletes,
     )
@@ -70,11 +48,29 @@ def test_search_plan_with_deletes_keeps_join_shape(
     ).build(webtext_df(spark, 300, partitions=4), fingerprint_extra="ppd")
     docs = spark.read.parquet(f"{idx}/docs/data").select("doc_id").limit(3)
     apply_deletes(spark, idx, docs)
-    rd = IndexReader(spark, idx)
-    assert rd._del_ids is not None
+    return IndexReader(spark, idx)
+
+
+@pytest.mark.parametrize("which", ["clean", "tomb"])
+def test_search_plan_prunes_one_exchange_no_join(request, monkeypatch, which):
+    """The Spark side of search() (forced past the driver-side cap) has
+    one plan shape with and without tombstones: a pruned postings scan,
+    the df as a literal map, one pinned-width exchange by segment, and
+    the per-task scorer reading its own sidecar rows — no join."""
+    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
+    rd = request.getfixturevalue("reader" if which == "clean" else "tomb_reader")
+    assert rd.has_deletes == (which == "tomb")
     plan = _plan(rd.search("keta gera", k=5))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    # directory pruning: the scan's PartitionFilters must constrain
+    # term_bucket (never a full-directory listing)
+    assert "PartitionFilters" in plan
+    assert "term_bucket" in plan.split("PartitionFilters")[1][:200]
+    # row-group pruning: the term predicate reaches the parquet scan
+    assert "PushedFilters" in plan
+    pushed = plan.split("PushedFilters")[1][:300]
+    assert "term" in pushed and ("In(" in pushed or "EqualTo" in pushed)
+    assert "Join" not in plan
+    assert plan.count("Exchange") == 1
 
 
 def test_driver_search_reads_only_query_buckets(spark, reader, tmp_path):

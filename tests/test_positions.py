@@ -483,29 +483,86 @@ def test_slop_and_prefix_random_adversarial(spark, tmp_path_factory):
         assert got == want, (head, pfx, slop)
 
 
-def test_phrase_scores_fast_path_matches_join_path(pos_index):
-    """Round-6 latency fast path: phrase_scores with the broadcast
-    doclens sidecar (checkpoint-once + literal df + blob doc_len) must
-    return byte-identical (doc_id, score) rows to the lazy
-    join+crossJoin form, and its plan must carry no join."""
+@pytest.fixture(scope="module")
+def pos_tomb(spark, pos_index, tmp_path_factory):
+    """A tombstoned copy of ``pos_index`` and its live docs."""
+    import shutil
+
+    from aether_elasticsearch_consumer_spark.plans.tombstones import (
+        apply_deletes,
+    )
+
     reader, docs = pos_index
-    toks0 = tokenize_py(docs[0][1])
-    phrase = " ".join(toks0[3:5])
+    idx = tmp_path_factory.mktemp("postomb") / "idx"
+    shutil.copytree(reader.dir, idx)
+    dead = {d for d, _ in docs if d % 7 == 0}
+    apply_deletes(spark, str(idx), sorted(dead))
+    return IndexReader(spark, str(idx)), [x for x in docs if x[0] not in dead]
 
-    fast = reader.phrase_scores(phrase)
-    plan = fast._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
 
-    # force the fallback (sidecar "too big"), same values expected
-    saved = reader._sidecar_cache
-    try:
-        reader._sidecar_cache = (None,)
-        slow = reader.phrase_scores(phrase)
-        slow_plan = slow._jdf.queryExecution().executedPlan().toString()
-        assert "Join" in slow_plan  # it really took the other path
-        got = sorted(fast.collect())
-        want = sorted(slow.collect())
-    finally:
-        reader._sidecar_cache = saved
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    assert len(got) > 0, "fixture bigram never matched — weak test"
+def _phrase_scores_py(docs: list[tuple[int, str]], phrase: str) -> dict:
+    """Brute-force phrase BM25: phrase freq = start positions found by the
+    ``_scan_phrase`` token walk, df = matching docs, N/avgdl over ``docs``;
+    the ``bm25_cols`` operation order, then Spark's HALF_UP 9-dp round."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from aether_elasticsearch_consumer_spark import B, K1
+
+    terms = tokenize_py(phrase)
+    toks = {d: tokenize_py(t) for d, t in docs}
+    N = len(toks)
+    avgdl = sum(map(len, toks.values())) / N
+    freq = {}
+    for d, ts in toks.items():
+        f = sum(
+            ts[i : i + len(terms)] == terms
+            for i in range(len(ts) - len(terms) + 1)
+        )
+        if f:
+            freq[d] = f
+    df = len(freq)
+    idf = math.log(1.0 + (float(N) - df + 0.5) / (df + 0.5))
+
+    def r9(x: float) -> float:
+        return float(Decimal(repr(x)).quantize(Decimal("1e-9"), ROUND_HALF_UP))
+
+    return {
+        d: r9(
+            idf * float(f)
+            / (float(f) + K1 * (1.0 - B + B * float(len(toks[d])) / avgdl))
+        )
+        for d, f in freq.items()
+    }
+
+
+@pytest.mark.parametrize("which", ["clean", "tomb"])
+def test_phrase_scores_match_brute_force(request, which):
+    """phrase_scores on a clean and a tombstoned positional index equals a
+    Python brute force over the live docs: same match set, phrase freq,
+    df, doc_len and live N/avgdl, same 9-dp scores."""
+    from collections import Counter
+
+    reader, docs = request.getfixturevalue(
+        "pos_index" if which == "clean" else "pos_tomb"
+    )
+    all_docs = request.getfixturevalue("pos_index")[1]
+    toks0 = tokenize_py(all_docs[0][1])
+    # the corpus' most frequent bigram (matches in live and dead docs),
+    # a bigram and a trigram out of doc 0 (dead on the tombstoned index)
+    bigrams = Counter(
+        " ".join(ts[i : i + 2])
+        for ts in (tokenize_py(t) for _, t in all_docs)
+        for i in range(len(ts) - 1)
+    )
+    phrases = [
+        bigrams.most_common(1)[0][0],
+        " ".join(toks0[3:5]),
+        " ".join(toks0[10:13]),
+    ]
+    n_hits = 0
+    for phrase in phrases:
+        got = {r["doc_id"]: r["score"] for r in reader.phrase_scores(phrase).collect()}
+        assert got == _phrase_scores_py(docs, phrase), phrase
+        n_hits += len(got)
+    assert n_hits > len(phrases), "fixture phrases barely matched — weak test"

@@ -41,6 +41,17 @@ never cross an exchange, a broadcast or a join. The executor-side read
 assumes the index dir is a POSIX path visible to the workers, as the
 driver-side reads already do.
 
+The unscored posting operators (``match_docs``, ``term_freqs``,
+``term_positions`` and the phrase/span verifier under ``phrase_docs``)
+share one plan, built by ``IndexReader._per_segment``: the same pruned
+scan as the Spark scorer (``_postings_scan``), one ``_by_segment``
+exchange, then the operator's set-algebra function per segment, with
+tombstoned ids stripped once at the end. Every site — the scorer
+included — decodes through the same two column-fed decoders,
+``_decode_blocks_batch`` and ``_decode_positions_batch``, which read the
+posting rows' columns directly. An operator whose input yields no terms
+returns an empty local relation that runs no Spark job (``_empty``).
+
 Determinism contract: per-term contributions accumulate in ascending-term
 order in float64 and final scores round to 9 decimals — identical to the
 oracle — so ranking is reproducible across parallelism levels.
@@ -59,7 +70,7 @@ from pyspark.sql import types as T
 from .. import B as BM25_B
 from .. import K1
 from ..functions.bm25 import bm25_cols, idf_np
-from ..functions.codec import decode_block, varbyte_decode
+from ..functions.codec import varbyte_decode
 from ..functions.tokenizer import tokenize_col, tokenize_py
 from ..functions.xxhash import spark_pmod_bucket
 
@@ -69,22 +80,25 @@ TOPK_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
+_DOC_IDS = T.StructType([T.StructField("doc_id", T.LongType(), False)])
 
 
-def _decode_blocks_batch(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray]:
-    """Decode MANY posting blocks in one shot → (doc_ids, tfs).
+def _decode_blocks_batch(rows) -> tuple[np.ndarray, np.ndarray]:
+    """Decode MANY posting blocks in one shot → (doc_ids, tfs), block by
+    block in row order. ``rows`` holds the posting rows' columns — a
+    pandas frame, or any mapping of column name → per-block sequence —
+    of which this reads ``first_doc_id``, ``count``, ``doc_deltas`` and
+    ``tfs``.
 
     Per-block Python loops cost ~1 ms/block, which dominates latency for
     mid-frequency terms (thousands of blocks). Here the concatenated
     varbyte streams decode in one vectorized call each, and the per-block
     delta cumsum runs as a single 2D row-cumsum over a padded
     (n_blocks × max_count) matrix."""
-    n = len(blocks)
-    counts = np.fromiter((b["count"] for b in blocks), dtype=np.int64, count=n)
-    doc_buf = b"".join(b["doc_deltas"] for b in blocks)
-    tf_buf = b"".join(b["tfs"] for b in blocks)
-    vals = varbyte_decode(doc_buf).astype(np.int64)
-    tfs = varbyte_decode(tf_buf).astype(np.int64) + 1
+    counts = np.asarray(rows["count"], dtype=np.int64)
+    n = len(counts)
+    vals = varbyte_decode(b"".join(rows["doc_deltas"])).astype(np.int64)
+    tfs = varbyte_decode(b"".join(rows["tfs"])).astype(np.int64) + 1
     starts = np.zeros(n, dtype=np.int64)
     np.cumsum(counts[:-1], out=starts[1:])
     width = int(counts.max())
@@ -92,36 +106,34 @@ def _decode_blocks_batch(blocks: list[dict]) -> tuple[np.ndarray, np.ndarray]:
     # row-cumsum, then add each block's absolute first doc id
     w = vals + 1
     w[starts] = 0
-    rows = np.repeat(np.arange(n), counts)
-    cols = np.arange(len(vals)) - starts[rows]
+    blk = np.repeat(np.arange(n), counts)
+    cols = np.arange(len(vals)) - starts[blk]
     mat = np.zeros((n, width), dtype=np.int64)
-    mat[rows, cols] = w
-    ids2d = np.cumsum(mat, axis=1) + np.fromiter(
-        (b["first_doc_id"] for b in blocks), dtype=np.int64, count=n
+    mat[blk, cols] = w
+    ids2d = np.cumsum(mat, axis=1) + np.asarray(
+        rows["first_doc_id"], dtype=np.int64
     )[:, None]
-    return ids2d[rows, cols], tfs
+    return ids2d[blk, cols], tfs
 
 
-def _decode_positions_batch(
-    blocks: list[dict], tfs: np.ndarray
-) -> np.ndarray:
-    """Decode the per-block position blobs → absolute within-doc token
-    offsets, one per token, aligned with the (doc, tf) decode order.
-    The stream restarts (absolute value) at every posting start, gap-1
-    deltas inside a posting — same padded-matrix row-cumsum trick as the
-    doc-delta decode."""
-    buf = b"".join(b["positions"] for b in blocks)
-    vals = varbyte_decode(buf).astype(np.int64)
+def _decode_positions_batch(rows, tfs: np.ndarray) -> np.ndarray:
+    """Decode the ``positions`` blobs of the posting rows ``rows`` (same
+    column input as ``_decode_blocks_batch``) → absolute within-doc token
+    offsets, one per token, aligned with the (doc, tf) decode order of
+    those rows. The stream restarts (absolute value) at every posting
+    start, gap-1 deltas inside a posting — same padded-matrix row-cumsum
+    trick as the doc-delta decode."""
+    vals = varbyte_decode(b"".join(rows["positions"])).astype(np.int64)
     n = len(tfs)
     starts = np.zeros(n, dtype=np.int64)
     np.cumsum(tfs[:-1], out=starts[1:])
     w = vals + 1
     w[starts] = vals[starts]
-    rows = np.repeat(np.arange(n), tfs)
-    cols = np.arange(len(vals)) - starts[rows]
+    post = np.repeat(np.arange(n), tfs)
+    cols = np.arange(len(vals)) - starts[post]
     mat = np.zeros((n, int(tfs.max())), dtype=np.int64)
-    mat[rows, cols] = w
-    return np.cumsum(mat, axis=1)[rows, cols]
+    mat[post, cols] = w
+    return np.cumsum(mat, axis=1)[post, cols]
 
 
 # phrase keys pack (doc_id, position) into one int64: doc_id << POS_BITS |
@@ -156,12 +168,22 @@ class MissingSidecarError(LookupError):
     from the sidecar, or the segment's lens array is too short for it."""
 
 
-def _empty_topk(spark: SparkSession) -> DataFrame:
-    """Zero-row TOPK_SCHEMA frame whose collect runs no Spark job: the
-    optimizer folds limit(0) over a local relation to an empty local
-    relation, while ``createDataFrame([])`` (or an empty pandas frame)
-    goes through a parallelized RDD and costs one job."""
-    return spark.createDataFrame([(0, 0.0)], TOPK_SCHEMA).limit(0)
+def _empty(spark: SparkSession, schema) -> DataFrame:
+    """Zero-row frame of ``schema`` (a StructType or DDL string) whose
+    collect runs no Spark job: ``createDataFrame([])`` alone goes through
+    a parallelized RDD and costs one job, while the optimizer folds
+    limit(0) over it to an empty local relation."""
+    return spark.createDataFrame([], schema).limit(0)
+
+
+def _no_hits() -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                         "score": pd.Series(dtype="float64")})
+
+
+def _take(cols: dict, idx: np.ndarray) -> dict:
+    """The posting rows ``idx`` of a column-array dict (decoder input)."""
+    return {c: v[idx] for c, v in cols.items()}
 
 
 def _select_topk(
@@ -182,7 +204,7 @@ def _select_topk(
 
 def _score_segment(
     pdf: pd.DataFrame,
-    sidecar: pd.DataFrame,
+    sidecar: tuple | None,
     N: int,
     avgdl: float,
     k: int,
@@ -194,9 +216,11 @@ def _score_segment(
 ) -> pd.DataFrame:
     """Score one segment's query-term posting rows. ``pdf`` has one row per
     posting block: term, df, block_no, first/last_doc_id, max_impact,
-    doc_deltas, tfs; ``sidecar`` is the segment's ONE doclens row (lens,
-    start_doc_id, and the optional tombstone blob), or no row when the
-    segment is missing from the sidecar (the segment then yields no hits).
+    doc_deltas, tfs; each term's rows feed ``_decode_blocks_batch`` as
+    column arrays, block selections as index arrays. ``sidecar`` is the
+    segment's ``(start_doc_id, lens, deleted)`` from ``_sidecar_rows``
+    (``deleted`` None without tombstones), or None when the segment is
+    missing from the sidecar (the segment then yields no hits).
     It arrives separately from the postings — joining it onto every
     posting row would replicate the multi-KB lens blob onto EVERY block
     row crossing the shuffle (measured ~40× the real posting payload for
@@ -230,39 +254,29 @@ def _score_segment(
     page-2 hit. Deep paging therefore evaluates the query terms'
     postings exhaustively — the same cost profile as Lucene's
     searchAfter — and stays exact."""
-    if not len(pdf) or not len(sidecar):
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
-    lens_arr = varbyte_decode(sidecar["lens"].iloc[0]).astype(np.float64)
-    start = int(sidecar["start_doc_id"].iloc[0])
+    if not len(pdf) or sidecar is None:
+        return _no_hits()
+    start, lens_blob, deleted = sidecar
+    lens_arr = varbyte_decode(lens_blob).astype(np.float64)
+    n_docs = len(lens_arr)
     alive = None
-    if "deleted" in sidecar.columns:
-        blob = sidecar["deleted"].iloc[0]
-        # NaN (not None) when the join left this segment's blob null
-        if isinstance(blob, (bytes, bytearray)) and len(blob):
-            from ..plans.tombstones import decode_id_set
+    if deleted:
+        from ..plans.tombstones import decode_id_set
 
-            alive = np.ones(len(lens_arr), dtype=bool)
-            dpos = decode_id_set(bytes(blob)) - start
-            alive[dpos[(dpos >= 0) & (dpos < len(lens_arr))]] = False
+        alive = np.ones(n_docs, dtype=bool)
+        dpos = decode_id_set(bytes(deleted)) - start
+        alive[dpos[(dpos >= 0) & (dpos < n_docs)]] = False
 
+    # per term: its block columns as arrays and its scaled block bounds
     terms = []
     for t, grp in pdf.sort_values(["term", "block_no"]).groupby("term", sort=True):
-        # NB: not itertuples() — a column named 'count' collides with the
-        # namedtuple method and gets positionally renamed
-        blocks = [
-            {
-                "first_doc_id": int(f), "last_doc_id": int(l), "count": int(c),
-                "max_impact": float(m) * bound_scale, "doc_deltas": dd, "tfs": tf,
-            }
-            for f, l, c, m, dd, tf in zip(
-                grp["first_doc_id"], grp["last_doc_id"], grp["count"],
-                grp["max_impact"], grp["doc_deltas"], grp["tfs"],
-            )
-        ]
+        cols = {
+            c: grp[c].to_numpy()
+            for c in ("first_doc_id", "last_doc_id", "count", "doc_deltas", "tfs")
+        }
+        bound = grp["max_impact"].to_numpy(np.float64) * bound_scale
         idf = float(idf_np(N, float(grp["df"].iloc[0])))
-        sigma = idf * max(blk["max_impact"] for blk in blocks)
-        terms.append((t, idf, sigma, blocks))
+        terms.append((t, idf, idf * bound.max(), cols, bound))
 
     # single-term fast path: impact-ordered block traversal with exact
     # early termination (Lucene-style impact iterator) — process blocks by
@@ -270,8 +284,8 @@ def _score_segment(
     # idf·max_impact of every remaining block, no remaining posting can
     # enter the top-k. Dominates head-term ("the") p99 latency.
     if len(terms) == 1:
-        t, idf, _sigma, blocks = terms[0]
-        ordered = sorted(blocks, key=lambda blk: -blk["max_impact"])
+        _, idf, _sigma, cols, bound = terms[0]
+        ordered = np.argsort(-bound, kind="stable")
         pos_parts, sc_parts = [], []
         kth = -np.inf
         n_cand = 0
@@ -285,10 +299,10 @@ def _score_segment(
             if (
                 after is None
                 and n_cand >= k
-                and idf * chunk[0]["max_impact"] < kth - 1e-9
+                and idf * bound[chunk[0]] < kth - 1e-9
             ):
                 break
-            ids, tfs_ = _decode_blocks_batch(chunk)
+            ids, tfs_ = _decode_blocks_batch(_take(cols, chunk))
             pos = ids - start
             if alive is not None:
                 m = alive[pos]
@@ -307,8 +321,7 @@ def _score_segment(
             if len(best) >= k:
                 kth = float(np.partition(best, -k)[-k])
         if not pos_parts:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
+            return _no_hits()
         cand = np.concatenate(pos_parts)
         scores = np.round(np.concatenate(sc_parts), 9)
         if after is not None:
@@ -326,9 +339,9 @@ def _score_segment(
     # threshold (final output re-accumulates in term-asc order for the
     # determinism contract) — partial sums of nonnegative contributions
     # are a valid lower bound of the final k-th score
-    acc = np.zeros(len(lens_arr), dtype=np.float64)
-    acc_run = np.zeros(len(lens_arr), dtype=np.float64)
-    seen = np.zeros(len(lens_arr), dtype=bool)
+    acc = np.zeros(n_docs, dtype=np.float64)
+    acc_run = np.zeros(n_docs, dtype=np.float64)
+    seen = np.zeros(n_docs, dtype=bool)
     threshold = -np.inf
 
     def score_blocks(blks, idf):
@@ -348,23 +361,23 @@ def _score_segment(
     by_sigma = sorted(terms, key=lambda x: -x[2])
     remaining = sum(t[2] for t in by_sigma)
     contribs: list[tuple[str, np.ndarray, np.ndarray]] = []
-    for t, idf, sigma, blocks in by_sigma:
+    for t, idf, sigma, cols, _bound in by_sigma:
         # 1e-9 margin mirrors the single-term path: a doc may only be
         # treated as non-viable when its upper bound clears the running
         # k-th score even after the 9-decimal ranking round
         or_phase = remaining >= threshold - 1e-9 or not np.isfinite(threshold)
         remaining -= sigma
         if or_phase:
-            todo = blocks
+            todo = cols
         else:
             # AND phase: only docs already seen can still make top-k —
-            # block-range skipping before any decode happens
-            todo = [
-                blk
-                for blk in blocks
-                if seen[blk["first_doc_id"] - start : blk["last_doc_id"] - start + 1].any()
-            ]
-        if not todo:
+            # block-range skipping before any decode happens: a block is
+            # kept when its [first, last] doc range holds a seen doc
+            n_seen = np.concatenate(([0], np.cumsum(seen)))
+            lo = np.clip(cols["first_doc_id"] - start, 0, n_docs)
+            hi = np.clip(cols["last_doc_id"] - start + 1, 0, n_docs)
+            todo = _take(cols, np.flatnonzero(n_seen[hi] > n_seen[lo]))
+        if not len(todo["count"]):
             continue
         p, s = score_blocks(todo, idf)
         if per_term_round:
@@ -387,8 +400,7 @@ def _score_segment(
                 )
 
     if not contribs:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
+        return _no_hits()
     for t, p, s in sorted(contribs, key=lambda c: c[0]):
         acc[p] += s
     cand = np.flatnonzero(seen)
@@ -402,33 +414,40 @@ def _score_segment(
     return pd.DataFrame({"doc_id": (cand + start).astype(np.int64), "score": scores})
 
 
-# the posting columns the scorer reads (never the positions blob)
+# the posting columns the scorer and the decode operators read (the
+# positions blob only when an operator asks for it)
 _SCORE_COLS = [
     "segment_id", "term", "block_no", "first_doc_id", "last_doc_id",
     "count", "max_impact", "doc_deltas", "tfs",
 ]
 
 
-def _sidecar_rows(doclens, deletes, segment_ids) -> pd.DataFrame:
+def _sidecar_rows(doclens, deletes, segment_ids) -> dict[int, tuple]:
     """Point read of the given segments' sidecar rows from the reader's
-    ``doclens/data`` dataset: one (segment_id, start_doc_id, lens) row
-    per segment, plus the segment's tombstone blob as ``deleted`` when a
-    ``deletes/segments/data`` dataset is given (NaN for a segment without
-    deletes). A segment missing from the doclens files has no row. The
-    datasets pickle with their file listing, so executors read the same
-    files the reader listed without listing again."""
+    ``doclens/data`` dataset → {segment_id: (start_doc_id, lens, deleted)}:
+    ``deleted`` is the segment's tombstone blob, looked up by segment id
+    in ``deletes/segments/data`` when that dataset is given, else None.
+    A segment missing from the doclens files has no entry. The datasets
+    pickle with their file listing, so executors read the same files the
+    reader listed without listing again."""
     import pyarrow.dataset as ds
 
     filt = ds.field("segment_id").isin(np.asarray(segment_ids, np.int64))
     side = doclens.to_table(
         columns=["segment_id", "start_doc_id", "lens"], filter=filt
-    ).to_pandas()
+    ).to_pydict()
+    dele = {}
     if deletes is not None:
-        dele = deletes.to_table(
+        d = deletes.to_table(
             columns=["segment_id", "deleted"], filter=filt
-        ).to_pandas()
-        side = side.merge(dele, on="segment_id", how="left")
-    return side
+        ).to_pydict()
+        dele = dict(zip(d["segment_id"], d["deleted"]))
+    return {
+        sid: (start, lens, dele.get(sid))
+        for sid, start, lens in zip(
+            side["segment_id"], side["start_doc_id"], side["lens"]
+        )
+    }
 
 
 def _score_segments(
@@ -450,14 +469,12 @@ def _score_segments(
     Spark side once per task — so a segment missing from the sidecar
     yields no hits on either."""
     if not len(post):
-        return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                             "score": pd.Series(dtype="float64")})
+        return _no_hits()
     side = _sidecar_rows(doclens, deletes, post["segment_id"].unique())
-    side_of = dict(iter(side.groupby("segment_id")))
     return pd.concat(
         [
             _score_segment(
-                grp, side_of.get(sid, side.iloc[:0]), N, avgdl, k,
+                grp, side.get(int(sid)), N, avgdl, k,
                 bound_scale=bound_scale, after=after,
                 per_term_round=per_term_round,
             )
@@ -474,11 +491,7 @@ def _doc_lens(doclens, ids: np.ndarray, dps: int) -> np.ndarray:
     outside its segment's lens array, raises ``MissingSidecarError``
     instead of reading a neighbour's lengths."""
     seg = ids // dps
-    side = _sidecar_rows(doclens, None, np.unique(seg))
-    rows = dict(
-        zip(side["segment_id"].tolist(),
-            zip(side["start_doc_id"].tolist(), side["lens"].tolist()))
-    )
+    rows = _sidecar_rows(doclens, None, np.unique(seg))
     out = np.empty(len(ids), dtype=np.int64)
     for s in np.unique(seg):
         mask = seg == s
@@ -487,7 +500,7 @@ def _doc_lens(doclens, ids: np.ndarray, dps: int) -> np.ndarray:
                 f"doc_id {int(ids[mask][0])}: segment {int(s)} has no "
                 "doclens sidecar row"
             )
-        start, blob = rows[int(s)]
+        start, blob, _ = rows[int(s)]
         arr = varbyte_decode(blob).astype(np.int64)
         off = ids[mask] - start
         bad = (off < 0) | (off >= len(arr))
@@ -511,9 +524,15 @@ class IndexReader:
     the driver (see the module docstring). Larger queries plan the Spark
     scorer: one exchange, the df as a literal map, and each task
     point-reading its own segments' sidecar rows — the same plan on
-    clean and tombstoned readers. The Spark source DataFrames and the
-    pyarrow dataset handles are built on first use and kept per reader,
-    so file listings are reused across queries."""
+    clean and tombstoned readers.
+
+    Every Spark-side posting read starts from ``_postings_scan`` (the
+    pruning predicate lives there and, for pyarrow, in ``_term_filter``);
+    the unscored operators all plan through ``_per_segment``, the one
+    place that groups by segment and strips tombstoned ids. The Spark
+    source DataFrames and the pyarrow dataset handles are built on first
+    use and kept per reader, so file listings are reused across
+    queries."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         import pyarrow.compute as pc
@@ -593,17 +612,6 @@ class IndexReader:
     def _term_stats(self) -> DataFrame:
         return self._frame("term_stats/data")
 
-    @property
-    def _del_ids(self) -> DataFrame | None:
-        return self._frame("deletes/doc_ids/data") if self.has_deletes else None
-
-    def _strip_deleted(self, df: DataFrame) -> DataFrame:
-        """Anti-join tombstoned ids out of a doc-id result — AQE broadcasts
-        the delete set when small, shuffle-joins when genuinely large."""
-        if not self.has_deletes:
-            return df
-        return df.join(self._del_ids, "doc_id", "left_anti")
-
     def _by_segment(self, postings: DataFrame) -> DataFrame:
         """Pin the per-segment decode exchange width: AQE's byte-based
         coalescing folds the few-MB pruned posting shuffles to a single
@@ -640,6 +648,44 @@ class IndexReader:
 
         buckets = sorted(set(self._buckets_for(terms).values()))
         return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(terms)
+
+    def _postings_scan(self, terms: list[str], positions: bool = False) -> DataFrame:
+        """The pruned postings scan of every Spark-side posting read, the
+        twin of ``_term_filter``: term_bucket partition pruning plus the
+        pushed term predicate (row-group min/max on the term-sorted
+        files), reading the ``_SCORE_COLS`` and, when asked, the
+        positions blob."""
+        buckets = sorted(set(self._buckets_for(terms).values()))
+        cols = _SCORE_COLS + ["positions"] if positions else _SCORE_COLS
+        return self._postings.where(
+            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+        ).select(*cols)
+
+    def _per_segment(
+        self, terms: list[str], fn, schema, positions: bool = False
+    ) -> DataFrame:
+        """The one plan of every unscored posting operator: the pruned scan
+        of ``terms`` → one ``_by_segment`` exchange → ``fn`` per segment
+        (``groupBy("segment_id").applyInPandas``) → tombstoned ids
+        stripped. ``fn`` gets one segment's posting rows (all its query
+        terms — a doc's postings for every term live in one segment, so
+        set algebra never crosses segments), decodes them through
+        ``_decode_blocks_batch`` / ``_decode_positions_batch`` and returns
+        rows of ``schema``. One segment per call keeps peak memory per
+        segment when positions blobs are large. Tombstoned ids leave by
+        one anti-join on the delete set (AQE broadcasts it when small,
+        shuffle-joins when genuinely large). No terms → an empty frame
+        that runs no Spark job."""
+        if not terms:
+            return _empty(self.spark, schema)
+        out = (
+            self._by_segment(self._postings_scan(terms, positions))
+            .groupBy("segment_id")
+            .applyInPandas(fn, schema)
+        )
+        if not self.has_deletes:
+            return out
+        return out.join(self._frame("deletes/doc_ids/data"), "doc_id", "left_anti")
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Per-term global df, delete-adjusted on tombstoned readers.
@@ -687,7 +733,7 @@ class IndexReader:
             bound_scale=self.bound_scale, after=after,
         )
         if not len(hits):
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         ids, scores = _select_topk(
             hits["doc_id"].to_numpy(), hits["score"].to_numpy(), k
         )
@@ -721,15 +767,7 @@ class IndexReader:
             # no query term exists in the index — the pruned scan yields
             # zero rows anyway; a null literal keeps the plan shape
             df_col = F.lit(None).cast("long")
-        buckets = self._buckets_for(terms)
-        postings = (
-            self._postings.where(
-                F.col("term_bucket").isin(list(set(buckets.values())))
-                & F.col("term").isin(terms)
-            )
-            .select(*_SCORE_COLS)
-            .withColumn("df", df_col)
-        )
+        postings = self._postings_scan(terms).withColumn("df", df_col)
         doclens, deletes = self._sidecars()
         N, avgdl, bscale = self.N, self.avgdl, self.bound_scale
 
@@ -763,7 +801,7 @@ class IndexReader:
         plan; both sides are rank-identical (module docstring)."""
         terms = sorted(set(tokenize_py(query, self.profile)))
         if not terms or k < 1:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         dfs = self.term_dfs(terms)
         if sum(dfs.values()) <= _DRIVER_SCORE_MAX_DF:
             return self._driver_topk(terms, dfs, k, after)
@@ -788,7 +826,7 @@ class IndexReader:
         construction (k=∞ means the pruning threshold never arms)."""
         terms = sorted(set(tokenize_py(query, self.profile)))
         if not terms:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         return self._scored_per_segment(terms, 1 << 62, None)
 
     def collapse_top_hits(
@@ -872,7 +910,7 @@ class IndexReader:
         )[:max_query_terms]
         terms = [t for _, t in ranked]
         if not terms:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         hits = self.search(" ".join(terms), k=k + 1)
         return (
             hits.where(F.col("doc_id") != doc_id)
@@ -885,21 +923,12 @@ class IndexReader:
         doc ids containing ALL (``mode="and"``) or ANY (``mode="or"``) of
         the analyzed query terms — no tokenize-the-corpus scan, no scoring.
 
-        Same pruned read as ``search``: term-bucket directory pruning +
-        row-group min/max on term; set algebra runs per segment (a doc's
-        postings for every term live in one segment by construction, so
-        intersection/union never crosses segments)."""
+        Runs through ``_per_segment`` (the same pruned read as ``search``);
+        the per-segment step intersects or unions the terms' decoded doc
+        ids."""
         if mode not in ("and", "or"):
             raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
         terms = sorted(set(tokenize_py(query, self.profile)))
-        out_schema = T.StructType([T.StructField("doc_id", T.LongType(), False)])
-        if not terms:
-            return self.spark.createDataFrame([], out_schema)
-        buckets = self._buckets_for(terms)
-        postings = self._postings.where(
-            F.col("term_bucket").isin(list(set(buckets.values())))
-            & F.col("term").isin(terms)
-        )
         n_terms = len(terms)
         conj = mode == "and"
 
@@ -908,34 +937,19 @@ class IndexReader:
             # conjunction — check BEFORE decoding the terms it does have
             if conj and pdf["term"].nunique() < n_terms:
                 return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-            per_term: list[np.ndarray] = []
-            for _, grp in pdf.groupby("term", sort=True):
-                blocks = [
-                    {"first_doc_id": int(f), "count": int(c),
-                     "doc_deltas": dd, "tfs": tf}
-                    for f, c, dd, tf in zip(
-                        grp["first_doc_id"], grp["count"],
-                        grp["doc_deltas"], grp["tfs"],
-                    )
-                ]
-                ids, _ = _decode_blocks_batch(blocks)
-                per_term.append(ids)
+            per_term = [
+                _decode_blocks_batch(grp)[0]
+                for _, grp in pdf.groupby("term", sort=True)
+            ]
             if conj:
-                # a segment missing any query term can't satisfy AND
-                if len(per_term) < n_terms:
-                    return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
                 acc = per_term[0]
                 for ids in per_term[1:]:
                     acc = np.intersect1d(acc, ids, assume_unique=True)
             else:
                 acc = np.unique(np.concatenate(per_term))
-            return pd.DataFrame({"doc_id": acc.astype(np.int64)})
+            return pd.DataFrame({"doc_id": acc})
 
-        return self._strip_deleted(
-            self._by_segment(postings)
-            .groupBy("segment_id")
-            .applyInPandas(collect_ids, out_schema)
-        )
+        return self._per_segment(terms, collect_ids, _DOC_IDS)
 
     def expand_prefix(self, prefix: str, max_terms: int = 1024) -> list[str]:
         """ES prefix-query term expansion off the term dictionary: the
@@ -957,69 +971,16 @@ class IndexReader:
         return sorted(r["term"] for r in rows)
 
     def _docs_for_terms(self, terms: list[str]) -> DataFrame:
-        if not terms:
-            return self.spark.createDataFrame(
-                [], T.StructType([T.StructField("doc_id", T.LongType(), False)])
-            )
+        """Docs holding any of the dictionary ``terms`` (a multi-term
+        expansion) — the pruned OR posting union of ``match_docs``."""
         return self.match_docs(" ".join(terms), "or")
 
-    def _docs_term_pairs(self, terms: list[str]) -> DataFrame:
-        """(doc_id, term) pairs off ONE pruned postings pass — the
-        primitive under minimum_should_match clause counting."""
-        out_schema = T.StructType(
-            [
-                T.StructField("doc_id", T.LongType(), False),
-                T.StructField("term", T.StringType(), False),
-            ]
-        )
-        terms = sorted(set(terms))
-        if not terms:
-            return self.spark.createDataFrame([], out_schema)
-        buckets = self._buckets_for(terms)
-        postings = self._postings.where(
-            F.col("term_bucket").isin(list(set(buckets.values())))
-            & F.col("term").isin(terms)
-        )
-
-        def collect_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids_out: list[np.ndarray] = []
-            terms_out: list[np.ndarray] = []
-            for t, grp in pdf.groupby("term", sort=True):
-                blocks = [
-                    {"first_doc_id": int(f), "count": int(c),
-                     "doc_deltas": dd, "tfs": tf}
-                    for f, c, dd, tf in zip(
-                        grp["first_doc_id"], grp["count"],
-                        grp["doc_deltas"], grp["tfs"],
-                    )
-                ]
-                ids, _ = _decode_blocks_batch(blocks)
-                ids_out.append(ids)
-                terms_out.append(np.full(len(ids), t, dtype=object))
-            if not ids_out:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "term": pd.Series(dtype="object")}
-                )
-            return pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids_out).astype(np.int64),
-                    "term": np.concatenate(terms_out),
-                }
-            )
-
-        return self._strip_deleted(
-            self._by_segment(postings)
-            .groupBy("segment_id")
-            .applyInPandas(collect_pairs, out_schema)
-        )
-
     def term_freqs(self, terms: list[str]) -> DataFrame:
-        """(doc_id, term, tf) triples off one pruned postings pass — the
-        ``_docs_term_pairs`` primitive widened with term frequency; feeds
-        cross-field pseudo-frequency scoring (combined_fields/BM25F),
-        where tf must BLEND across fields before normalization instead of
-        scoring per-field."""
+        """(doc_id, term, tf) triples off one pruned postings pass
+        (``_per_segment``); feeds cross-field pseudo-frequency scoring
+        (combined_fields/BM25F), where tf must BLEND across fields before
+        normalization instead of scoring per-field, and
+        minimum_should_match clause counting in ``bool_docs``."""
         out_schema = T.StructType(
             [
                 T.StructField("doc_id", T.LongType(), False),
@@ -1027,51 +988,25 @@ class IndexReader:
                 T.StructField("tf", T.LongType(), False),
             ]
         )
-        terms = sorted(set(terms))
-        if not terms:
-            return self.spark.createDataFrame([], out_schema)
-        buckets = self._buckets_for(terms)
-        postings = self._postings.where(
-            F.col("term_bucket").isin(list(set(buckets.values())))
-            & F.col("term").isin(terms)
-        )
 
         def collect_tfs(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids_out: list[np.ndarray] = []
-            tfs_out: list[np.ndarray] = []
-            terms_out: list[np.ndarray] = []
-            for t, grp in pdf.groupby("term", sort=True):
-                blocks = [
-                    {"first_doc_id": int(f), "count": int(c),
-                     "doc_deltas": dd, "tfs": tf}
-                    for f, c, dd, tf in zip(
-                        grp["first_doc_id"], grp["count"],
-                        grp["doc_deltas"], grp["tfs"],
-                    )
-                ]
-                ids, tfs_ = _decode_blocks_batch(blocks)
-                ids_out.append(ids)
-                tfs_out.append(tfs_)
-                terms_out.append(np.full(len(ids), t, dtype=object))
-            if not ids_out:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "term": pd.Series(dtype="object"),
-                     "tf": pd.Series(dtype="int64")}
+            names, ids, tfs = zip(
+                *(
+                    (t, *_decode_blocks_batch(grp))
+                    for t, grp in pdf.groupby("term", sort=True)
                 )
+            )
             return pd.DataFrame(
                 {
-                    "doc_id": np.concatenate(ids_out).astype(np.int64),
-                    "term": np.concatenate(terms_out),
-                    "tf": np.concatenate(tfs_out).astype(np.int64),
+                    "doc_id": np.concatenate(ids),
+                    "term": np.repeat(
+                        np.array(names, dtype=object), [len(i) for i in ids]
+                    ),
+                    "tf": np.concatenate(tfs),
                 }
             )
 
-        return self._strip_deleted(
-            self._by_segment(postings)
-            .groupBy("segment_id")
-            .applyInPandas(collect_tfs, out_schema)
-        )
+        return self._per_segment(sorted(set(terms)), collect_tfs, out_schema)
 
     def bool_docs(
         self,
@@ -1090,13 +1025,12 @@ class IndexReader:
         the pruned posting reads; set algebra stays in Catalyst
         (left_semi / left_anti joins on doc_id, broadcast-sized by
         construction); clause counting is ONE pruned (doc_id, term)
-        pass + a count aggregate, never per-clause scans."""
+        pass (``term_freqs``) + a count aggregate, never per-clause
+        scans."""
         must, should, must_not = must or [], should or [], must_not or []
         msm = minimum_should_match
         if msm > len(should):
-            return self.spark.createDataFrame(
-                [], T.StructType([T.StructField("doc_id", T.LongType(), False)])
-            )
+            return _empty(self.spark, _DOC_IDS)
         base = None
         if must:
             base = self.match_docs(" ".join(must), "and")
@@ -1107,7 +1041,7 @@ class IndexReader:
             for i, clause in enumerate(should):
                 for t in tokenize_py(clause, self.profile):
                     clause_of.setdefault(t, i)
-            pairs = self._docs_term_pairs(list(clause_of))
+            pairs = self.term_freqs(list(clause_of)).select("doc_id", "term")
             clause_col = F.create_map(
                 *[F.lit(x) for kv in clause_of.items() for x in kv]
             )[F.col("term")]
@@ -1132,9 +1066,7 @@ class IndexReader:
                 # filter context it adds nothing — keep must as the filter
                 pass
         if base is None:
-            return self.spark.createDataFrame(
-                [], T.StructType([T.StructField("doc_id", T.LongType(), False)])
-            )
+            return _empty(self.spark, _DOC_IDS)
         if must_not:
             n_docs = self.match_docs(" ".join(must_not), "or")
             base = base.join(n_docs, "doc_id", "left_anti")
@@ -1189,7 +1121,7 @@ class IndexReader:
                 p for b in vb if (p := base / f"vbucket={b}").exists()
             ]
             if not paths:
-                return self.spark.createDataFrame([], "term string")
+                return _empty(self.spark, "term string")
             return (
                 self.spark.read.option("basePath", str(base))
                 .parquet(*[str(p) for p in paths])
@@ -1223,7 +1155,7 @@ class IndexReader:
                 .collect()
             ]
             if not cands:
-                return self.spark.createDataFrame([], "term string, df long")
+                return _empty(self.spark, "term string, df long")
             buckets = self._buckets_for(cands)
             return (
                 self._term_stats.where(
@@ -1395,12 +1327,7 @@ class IndexReader:
     def prefix_docs(self, prefix: str, max_terms: int = 1024) -> DataFrame:
         """Docs containing ANY term with the given prefix: dictionary
         expansion + the same pruned OR posting union as ``match_docs``."""
-        terms = self.expand_prefix(prefix, max_terms)
-        if not terms:
-            return self.spark.createDataFrame(
-                [], T.StructType([T.StructField("doc_id", T.LongType(), False)])
-            )
-        return self.match_docs(" ".join(terms), "or")
+        return self._docs_for_terms(self.expand_prefix(prefix, max_terms))
 
     def query_string_docs(self, q: str) -> DataFrame:
         """Execute a Lucene query-language string (the reference's saved
@@ -1436,9 +1363,7 @@ class IndexReader:
             for qid, q in sorted(queries.items())
         ]
         if not parts:
-            return self.spark.createDataFrame(
-                [], "query_id string, doc_id long"
-            )
+            return _empty(self.spark, "query_id string, doc_id long")
         return reduce(DataFrame.unionByName, parts)
 
     def query_string_search(self, q: str, k: int = 10) -> DataFrame:
@@ -1459,7 +1384,7 @@ class IndexReader:
         node = qs.parse_query_string(q)
         filt = self._eval_qs(node)
         if filt is None:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
 
         leaves: list = []
 
@@ -1521,7 +1446,7 @@ class IndexReader:
                         )
                     )
         if not parts:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         from functools import reduce
 
         allparts = reduce(DataFrame.unionByName, parts)
@@ -1547,7 +1472,7 @@ class IndexReader:
         union/groupBy plan computed the identical ladder values)."""
         terms = sorted(set(tokenize_py(query, self.profile)))
         if not terms:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         return self._scored_per_segment(
             terms, 1 << 62, None, per_term_round=True
         )
@@ -1562,7 +1487,7 @@ class IndexReader:
         (same plan, same ladder)."""
         toks = tokenize_py(text, self.profile)
         if not toks:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         q = " ".join(toks[:-1] + [toks[-1] + "*"])
         return self.query_string_search(q, k=k)
 
@@ -1587,7 +1512,7 @@ class IndexReader:
             if tokenize_py(c, self.profile)
         ]
         if not parts:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         allparts = reduce(DataFrame.unionByName, parts)
         scored = (
             allparts.groupBy("doc_id")
@@ -1684,11 +1609,6 @@ class IndexReader:
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
-    def _empty_ids(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], T.StructType([T.StructField("doc_id", T.LongType(), False)])
-        )
-
     def _eval_qs(self, node) -> DataFrame | None:
         """AST → DataFrame(doc_id); None = clause vacuous after analysis."""
         from functools import reduce
@@ -1733,7 +1653,7 @@ class IndexReader:
             elif should:
                 base = reduce(DataFrame.unionByName, should).distinct()
             else:
-                return self._empty_ids() if nots else None
+                return _empty(self.spark, _DOC_IDS) if nots else None
             if nots:
                 neg = reduce(DataFrame.unionByName, nots)
                 base = base.join(neg, "doc_id", "left_anti")
@@ -1869,43 +1789,21 @@ class IndexReader:
         )
         if len(toks) != 1:
             raise ValueError("term_positions takes exactly one analyzed term")
-        t = toks[0]
-        bucket = self._buckets_for([t])[t]
-        postings = self._postings.where(
-            (F.col("term_bucket") == bucket) & (F.col("term") == t)
-        ).select(
-            "segment_id", "first_doc_id", "count", "doc_deltas", "tfs",
-            "positions",
-        )
 
         def collect_pos(pdf: pd.DataFrame) -> pd.DataFrame:
-            blocks = [
-                {"first_doc_id": int(f), "count": int(c),
-                 "doc_deltas": dd, "tfs": tf, "positions": ps}
-                for f, c, dd, tf, ps in zip(
-                    pdf["first_doc_id"], pdf["count"], pdf["doc_deltas"],
-                    pdf["tfs"], pdf["positions"],
-                )
-            ]
-            ids, tfs_ = _decode_blocks_batch(blocks)
-            pos = _decode_positions_batch(blocks, tfs_)
-            starts = np.zeros(len(tfs_), dtype=np.int64)
-            np.cumsum(tfs_[:-1], out=starts[1:])
-            ends = starts + tfs_
+            ids, tfs = _decode_blocks_batch(pdf)
+            pos = _decode_positions_batch(pdf, tfs)
+            ends = np.cumsum(tfs)
             return pd.DataFrame(
                 {
-                    "doc_id": ids.astype(np.int64),
+                    "doc_id": ids,
                     "positions": [
-                        pos[s:e].tolist() for s, e in zip(starts, ends)
+                        pos[e - n : e].tolist() for n, e in zip(tfs, ends)
                     ],
                 }
             )
 
-        return self._strip_deleted(
-            self._by_segment(postings)
-            .groupBy("segment_id")
-            .applyInPandas(collect_pos, out_schema)
-        )
+        return self._per_segment(toks, collect_pos, out_schema, positions=True)
 
     def highlight(self, term: str, window: int = 5) -> DataFrame:
         """ES ``highlight``: per matching doc, a fragment of ``window``
@@ -2045,8 +1943,8 @@ class IndexReader:
         walk(node)
         filt = self.query_string_docs(q)
         if not terms:
-            return self.spark.createDataFrame(
-                [],
+            return _empty(
+                self.spark,
                 T.StructType(
                     [
                         T.StructField("doc_id", T.LongType(), False),
@@ -2152,7 +2050,7 @@ class IndexReader:
         if with_freq:
             fields.append(T.StructField("phrase_freq", T.LongType(), False))
         if not toks:
-            return self.spark.createDataFrame([], T.StructType(fields))
+            return _empty(self.spark, T.StructType(fields))
         # ES semantics: the FIRST max_expansions dictionary terms in term
         # order, silently capped (unlike prefix_docs' loud rewrite guard)
         exp = [
@@ -2166,7 +2064,7 @@ class IndexReader:
             .collect()
         ]
         if not exp:
-            return self.spark.createDataFrame([], T.StructType(fields))
+            return _empty(self.spark, T.StructType(fields))
         return self._phrase_slots_docs(
             [[t] for t in toks[:-1]] + [sorted(exp)],
             with_freq=with_freq,
@@ -2258,16 +2156,8 @@ class IndexReader:
             fields.append(T.StructField("phrase_freq", T.LongType(), False))
         out_schema = T.StructType(fields)
         if not slots or any(not s for s in slots):
-            return self.spark.createDataFrame([], out_schema)
+            return _empty(self.spark, out_schema)
         uniq = sorted({t for s in slots for t in s})
-        buckets = self._buckets_for(uniq)
-        postings = self._postings.where(
-            F.col("term_bucket").isin(list(set(buckets.values())))
-            & F.col("term").isin(uniq)
-        ).select(
-            "segment_id", "term", "first_doc_id", "last_doc_id", "count",
-            "doc_deltas", "tfs", "positions",
-        )
         seq = [sorted(set(s)) for s in slots]
 
         def collect_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2279,20 +2169,10 @@ class IndexReader:
             # AND intersection of the per-slot unions. Positions never
             # decode for docs that miss any slot (head-term phrases skip
             # most of their blocks).
-            per_term: dict[str, tuple[list[dict], np.ndarray, np.ndarray]] = {}
-            for t, grp in pdf.groupby("term", sort=True):
-                blocks = [
-                    {"first_doc_id": int(f), "last_doc_id": int(l),
-                     "count": int(c), "doc_deltas": dd, "tfs": tf,
-                     "positions": ps}
-                    for f, l, c, dd, tf, ps in zip(
-                        grp["first_doc_id"], grp["last_doc_id"],
-                        grp["count"], grp["doc_deltas"], grp["tfs"],
-                        grp["positions"],
-                    )
-                ]
-                ids, tfs_ = _decode_blocks_batch(blocks)
-                per_term[t] = (blocks, ids, tfs_)
+            per_term = {
+                t: (grp, *_decode_blocks_batch(grp))
+                for t, grp in pdf.groupby("term", sort=True)
+            }
             cand_docs = None
             for slot in seq:
                 present = [t for t in slot if t in per_term]
@@ -2315,29 +2195,25 @@ class IndexReader:
                     return empty
 
             # phase 2: decode positions ONLY for blocks whose doc range
-            # overlaps a candidate (block-max-style skipping), keep only
+            # overlaps a candidate (block-max-style skipping) — the
+            # phase-1 ids/tfs masked to those blocks' postings — keep only
             # candidate docs' tokens, then verify adjacency via shifted
             # (doc << POS_BITS | pos) key-set intersection
             keys: dict[str, np.ndarray] = {}
-            for t, (blocks, _, _) in per_term.items():
-                firsts = np.fromiter(
-                    (b["first_doc_id"] for b in blocks), np.int64, len(blocks)
-                )
-                lasts = np.fromiter(
-                    (b["last_doc_id"] for b in blocks), np.int64, len(blocks)
-                )
-                idx = np.searchsorted(cand_docs, firsts)
+            for t, (grp, ids, tfs_) in per_term.items():
+                idx = np.searchsorted(cand_docs, grp["first_doc_id"].to_numpy())
                 keep = (idx < len(cand_docs)) & (
-                    cand_docs[np.minimum(idx, len(cand_docs) - 1)] <= lasts
+                    cand_docs[np.minimum(idx, len(cand_docs) - 1)]
+                    <= grp["last_doc_id"].to_numpy()
                 )
-                kept = [b for b, k in zip(blocks, keep) if k]
-                if not kept:
+                if not keep.any():
                     # no candidate doc holds this term: fatal only for a
                     # singleton slot (checked via the slot-union below)
                     keys[t] = np.empty(0, dtype=np.int64)
                     continue
-                ids, tfs_ = _decode_blocks_batch(kept)
-                pos = _decode_positions_batch(kept, tfs_)
+                in_kept = np.repeat(keep, grp["count"].to_numpy())
+                ids, tfs_ = ids[in_kept], tfs_[in_kept]
+                pos = _decode_positions_batch(grp[keep], tfs_)
                 doc_per_tok = np.repeat(ids, tfs_)
                 m = np.isin(doc_per_tok, cand_docs, assume_unique=False)
                 keys[t] = np.sort((doc_per_tok[m] << POS_BITS) | pos[m])
@@ -2431,11 +2307,7 @@ class IndexReader:
                 out["phrase_freq"] = freqs.astype(np.int64)
             return pd.DataFrame(out)
 
-        return self._strip_deleted(
-            self._by_segment(postings)
-            .groupBy("segment_id")
-            .applyInPandas(collect_phrase, out_schema)
-        )
+        return self._per_segment(uniq, collect_phrase, out_schema, positions=True)
 
 
 def naive_bm25_topk(
@@ -2447,7 +2319,7 @@ def naive_bm25_topk(
     explode → two-phase aggs → window-free top-k via orderBy.limit."""
     terms = sorted(set(tokenize_py(query, profile)))
     if not terms:
-        return _empty_topk(docs.sparkSession)
+        return _empty(docs.sparkSession, TOPK_SCHEMA)
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         tokenize_col(text_col, profile).alias("toks"),

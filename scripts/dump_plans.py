@@ -28,6 +28,8 @@ ENTRIES = [
     "fulltext_term_positions",
     "fulltext_highlight",
     "fulltext_phrase_scored",
+    "fulltext_fuzzy_count",
+    "fulltext_query_string",
     "text_quality",
     "text_lang_id",
     "text_token_count",

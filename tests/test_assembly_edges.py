@@ -129,7 +129,10 @@ def test_positions_cross_block_boundary():
         i, t = decode_block(r["doc_deltas"], r["tfs"])
         ids.extend(i)
         tfs.extend(t)
-    pos = _decode_positions_batch(rows, np.asarray(tfs, dtype=np.int64))
+    pos = _decode_positions_batch(
+        {"positions": [r["positions"] for r in rows]},
+        np.asarray(tfs, dtype=np.int64),
+    )
     want = [
         [j for j, tok in enumerate(tokenize_py(texts[d])) if tok == "w"]
         for d in ids

@@ -211,3 +211,29 @@ def test_reader_operations_create_no_broadcast(spark, positional, monkeypatch):
         assert rd.or_scores("keta gera").collect(), which
         assert rd.phrase_scores(phrase).collect(), which
     assert calls == []
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["match_docs", "term_freqs", "bool_docs_msm", "bool_docs_none",
+     "phrase_docs", "span_near_docs", "percolate"],
+)
+def test_operators_without_terms_run_no_spark_job(spark, positional, op):
+    """An operator whose input yields no terms answers with an empty local
+    relation: planning and collecting it runs no Spark job, on a
+    tombstoned reader too (nothing left to strip)."""
+    rd = IndexReader(spark, positional["tomb"])
+    call = {
+        "match_docs": lambda: rd.match_docs(""),
+        "term_freqs": lambda: rd.term_freqs([]),
+        "bool_docs_msm": lambda: rd.bool_docs(
+            should=["keta"], minimum_should_match=2
+        ),
+        "bool_docs_none": lambda: rd.bool_docs(),
+        "phrase_docs": lambda: rd.phrase_docs(""),
+        "span_near_docs": lambda: rd.span_near_docs([]),
+        "percolate": lambda: rd.percolate({}),
+    }[op]
+    rows = []
+    assert _jobs_in(spark, lambda: rows.extend(call().collect())) == 0
+    assert rows == []

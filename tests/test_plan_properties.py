@@ -98,10 +98,40 @@ def test_driver_search_reads_only_query_buckets(spark, reader, tmp_path):
     assert want and rd.search(q, k=5).collect() == want
 
 
-def test_match_docs_plan_prunes(reader):
-    plan = _plan(reader.match_docs("keta gera", "or"))
+@pytest.fixture(scope="module")
+def pos_reader(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("planprops_pos")
+    IndexBuilder(
+        spark, str(root / "idx"), docs_per_segment=16, term_buckets=8,
+        with_positions=True,
+    ).build(webtext_df(spark, 300, partitions=4), fingerprint_extra="ppp")
+    return IndexReader(spark, str(root / "idx"))
+
+
+DECODE_OPS = {
+    "match_docs": lambda rd: rd.match_docs("keta gera", "or"),
+    "term_freqs": lambda rd: rd.term_freqs(["keta", "gera"]),
+    "term_positions": lambda rd: rd.term_positions("keta"),
+    "phrase_docs": lambda rd: rd.phrase_docs("keta gera", slop=1),
+    "bool_docs_msm": lambda rd: rd.bool_docs(
+        should=["keta", "gera", "the"], minimum_should_match=2
+    ),
+}
+
+
+@pytest.mark.parametrize("op", list(DECODE_OPS))
+def test_decode_plan_prunes_one_segment_exchange(pos_reader, op):
+    """Every posting-decode operator plans the one pruned scan (directory
+    pruning on term_bucket) and exactly one exchange by segment on a
+    clean reader (19 segments: a multi-task exchange width); only the
+    minimum_should_match clause count adds exchanges, for its own
+    count-distinct aggregate on top."""
+    plan = _plan(DECODE_OPS[op](pos_reader))
     assert "PartitionFilters" in plan
     assert "term_bucket" in plan.split("PartitionFilters")[1][:200]
+    assert plan.count("Exchange hashpartitioning(segment_id") == 1
+    if op != "bool_docs_msm":
+        assert plan.count("Exchange") == 1
 
 
 def test_bucket_pruning_reads_file_subset(reader):

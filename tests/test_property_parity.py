@@ -78,7 +78,5 @@ class TestPositionCodecProperty:
         is_start[starts] = True
         vals = np.where(is_start, flat, flat - prev - 1)
         buf, _ = varbyte_encode_with_lengths(vals)
-        got = _decode_positions_batch(
-            [{"positions": bytes(buf)}], tfs
-        )
+        got = _decode_positions_batch({"positions": [bytes(buf)]}, tfs)
         assert got.tolist() == flat.tolist()

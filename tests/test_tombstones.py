@@ -86,6 +86,69 @@ def test_deleted_never_surface_in_any_path(spark, tomb):
     assert ids and not (ids & dead)
 
 
+def _all_docs(spark, root) -> list[tuple[int, str]]:
+    return [
+        (r["doc_id"], r["text"])
+        for r in spark.read.parquet(str(root / "idx/docs/data"))
+        .select("doc_id", "text")
+        .collect()
+    ]
+
+
+def test_term_freqs_match_live_corpus(spark, tomb):
+    """term_freqs on a tombstoned reader: exactly the live corpus's
+    (doc_id, term, tf) triples, though deleted docs hold the terms too."""
+    from collections import Counter
+
+    from aether_elasticsearch_consumer_spark.functions.tokenizer import tokenize_py
+
+    root, rd, live = tomb
+    terms = ["keta", "gera", "the", "zzabsent"]
+
+    def triples(docs):
+        return sorted(
+            (i, t, c)
+            for i, text in docs
+            for t, c in Counter(tokenize_py(text, rd.profile)).items()
+            if t in terms
+        )
+
+    want = triples(live)
+    assert len(triples(_all_docs(spark, root))) > len(want) > 0
+    got = sorted(
+        (r["doc_id"], r["term"], r["tf"])
+        for r in rd.term_freqs(terms).collect()
+    )
+    assert got == want
+
+
+def test_bool_docs_minimum_should_match_live_corpus(spark, tomb):
+    """bool_docs with minimum_should_match=2 on a tombstoned reader: the
+    live docs matching at least two distinct should clauses (a clause that
+    analyzes to two terms counts once), never a deleted one."""
+    from aether_elasticsearch_consumer_spark.functions.tokenizer import tokenize_py
+
+    root, rd, live = tomb
+    should = ["gegege", "katolifu", "jitare chme"]
+    clauses = [set(tokenize_py(c, rd.profile)) for c in should]
+
+    def matching(docs):
+        return sorted(
+            i
+            for i, text in docs
+            if sum(bool(c & set(tokenize_py(text, rd.profile))) for c in clauses)
+            >= 2
+        )
+
+    want = matching(live)
+    assert set(matching(_all_docs(spark, root))) & set(DEAD)
+    got = sorted(
+        r["doc_id"]
+        for r in rd.bool_docs(should=should, minimum_should_match=2).collect()
+    )
+    assert want and got == want
+
+
 def test_term_dfs_post_delete_exact(spark, tomb):
     _, rd, live = tomb
     from collections import Counter

@@ -124,11 +124,6 @@ def geohash_grid_agg(
     )
 
 
-def doc_count_parity(src: DataFrame, dst: DataFrame) -> bool:
-    """A5 migration verification barrier (index_handler.py:179-218)."""
-    return src.count() == dst.count()
-
-
 # -- ES metric-aggregation family ---------------------------------------------
 # The reference's visStates declare `count` explicitly; the ES metric aggs
 # below are the rest of the metric surface its dashboards draw from

@@ -2,16 +2,12 @@
 quality scoring, token counting, document fingerprinting.
 
 All the bulk paths are JVM Column expressions (codegen, SQL-parity with
-the DuckDB oracle); the winnowing fingerprint is an Arrow UDF (numpy
-rolling hash)."""
+the DuckDB oracle)."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.tokenizer import tokenize_col
 
@@ -126,36 +122,6 @@ def content_fingerprint(text: Column | str, profile: str = "ascii") -> Column:
     stream — whitespace/punctuation/case-insensitive identity (F7-style
     content hashing applied to document text)."""
     return F.md5(F.concat_ws(" ", tokenize_col(text, profile)))
-
-
-WINNOW_SCHEMA = T.ArrayType(T.LongType())
-
-
-def make_winnow_udf(k: int = 5, window: int = 4):
-    """Winnowing fingerprints (Schleimer et al. 2003): k-gram rolling
-    hashes, per-window minimum selection — vectorized numpy."""
-
-    @F.pandas_udf(WINNOW_SCHEMA)
-    def winnow(token_arrays: pd.Series) -> pd.Series:
-        out = []
-        for toks in token_arrays:
-            toks = list(toks) if toks is not None else []
-            if len(toks) < k:
-                out.append([])
-                continue
-            import zlib
-
-            grams = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-            hs = np.array([zlib.crc32(g.encode()) for g in grams], dtype=np.int64)
-            if len(hs) <= window:
-                out.append([int(hs.min())])
-                continue
-            win = np.lib.stride_tricks.sliding_window_view(hs, window)
-            mins = win.min(axis=1)
-            out.append(sorted(set(int(m) for m in mins)))
-        return pd.Series(out)
-
-    return winnow
 
 
 def doc_stats(df: DataFrame, text_col: str = "text", profile: str = "ascii") -> DataFrame:

@@ -159,10 +159,6 @@ _SEGMENTS_PER_SCORE_TASK = 8
 # re-derive it with that script on other hardware.
 _DRIVER_SCORE_MAX_DF = 2_000_000
 
-# fallback when an old stats sidecar predates the docs_per_segment column
-DEFAULT_DOCS_PER_SEGMENT_HINT = 8192
-
-
 class MissingSidecarError(LookupError):
     """A matched doc_id has no doclens sidecar entry: its segment is absent
     from the sidecar, or the segment's lens array is too short for it."""
@@ -535,10 +531,8 @@ class IndexReader:
     queries."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        import pyarrow.compute as pc
-
+        from ..plans.index_stats import live_stats, read_stats
         from ..plans.live_pointer import resolve_live
-        from ..plans.tombstones import delete_stats, has_deletes
 
         self.spark = spark
         # a live-pointer file (or legacy symlink) resolves to the current
@@ -549,41 +543,18 @@ class IndexReader:
         # frames by sub-directory, each built on first use
         self._pa_cache: dict = {}
         self._frames: dict[str, DataFrame] = {}
-        st = self._pa("stats/data").to_table().to_pylist()[0]
-        self.N = int(st["N"])
-        self.avgdl = float(st["avgdl"])
-        build_avgdl = float(st.get("build_avgdl") or self.avgdl)
-        # conservative block-bound inflation for merged indexes (see
-        # _score_segment); exactly 1.0 for a freshly-built index
-        self.bound_scale = max(1.0, self.avgdl / build_avgdl)
-        self.term_buckets = int(st["term_buckets"])
-        self.dps = int(st.get("docs_per_segment") or DEFAULT_DOCS_PER_SEGMENT_HINT)
-        self.profile = st["profile"]
-        self.positions = bool(st.get("positions") or False)
-
-        # tombstones (plans/tombstones.py): adjust N/avgdl to the LIVE
-        # corpus exactly — n_deleted/deleted_len are exact integers from
-        # the delete sidecar; the index's total token count folds out of
-        # the per-segment doclens sidecar (N/docs_per_segment rows, one
-        # driver-side pyarrow sum, only when deletes exist). df adjusts
-        # per query term from the term_df delta sidecar (same term_bucket
-        # pruning as term_stats), so scoring matches an index built over
-        # the post-delete corpus — stricter than Lucene, which serves
-        # stale stats until a merge.
-        self.has_deletes = False
-        if has_deletes(self.dir):
-            ds_ = delete_stats(self.dir)
-            if ds_["n_deleted"]:
-                self.has_deletes = True
-                lens = self._pa("doclens/data").to_table(columns=["sum_len"])
-                total_len = int(pc.sum(lens["sum_len"]).as_py())
-                self.N -= ds_["n_deleted"]
-                self.avgdl = (
-                    (total_len - ds_["deleted_len"]) / self.N
-                    if self.N > 0
-                    else 1.0
-                )
-                self.bound_scale = max(1.0, self.avgdl / build_avgdl)
+        st = read_stats(self.dir)
+        self.term_buckets = st.term_buckets
+        self.dps = st.docs_per_segment
+        self.profile = st.profile
+        self.positions = st.positions
+        # N/avgdl exact over the LIVE corpus (df adjusts per query term
+        # from the term_df delta sidecar), so scoring matches an index
+        # built over the post-delete corpus — stricter than Lucene, which
+        # serves stale stats until a merge; bound_scale: see _score_segment
+        live = live_stats(self.dir, st, lambda: self._pa("doclens/data"))
+        self.N, self.avgdl, self.bound_scale = live.N, live.avgdl, live.bound_scale
+        self.has_deletes = live.n_deleted > 0
 
     def _pa(self, sub: str):
         """pyarrow dataset over an index sub-directory (hive partitions

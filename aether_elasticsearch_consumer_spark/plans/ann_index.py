@@ -47,6 +47,7 @@ from ..operators.similarity import (
     brute_force_topk,
     signature_bits,
 )
+from ..operators.topk import _empty
 
 
 def _hamming_ball(value: int, bits: int, radius: int) -> list[int]:
@@ -59,10 +60,6 @@ def _hamming_ball(value: int, bits: int, radius: int) -> list[int]:
                 v ^= 1 << b
             out.append(v)
     return out
-
-
-def _empty_topk(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], TOPK_SCHEMA)
 
 
 class LshAnnIndex:
@@ -206,7 +203,7 @@ class LshAnnIndex:
         pruning), never the corpus."""
         paths = self.probe_paths(query_vec, max_hamming, max_prefix_hamming)
         if not paths:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         q = np.asarray(query_vec, dtype=np.float64)
         q_sig = int(signature_bits(q[None, :], self.planes)[0])
         cand = (
@@ -367,7 +364,7 @@ class IvfAnnIndex:
         reads only those partition directories."""
         paths = self.probe_paths(query_vec, nprobe)
         if not paths:
-            return _empty_topk(self.spark)
+            return _empty(self.spark, TOPK_SCHEMA)
         cand = self.spark.read.option(
             "basePath", str(self.dir / "data")
         ).parquet(*paths)

@@ -12,16 +12,17 @@ engine's index layout: pure-metadata triggers, one physical rebuild
 (``compact_index``), one atomic live-pointer commit.
 
 Triggers (all O(metadata) — a stats row, the delete sidecar count, the
-doclens row count; no postings are read to DECIDE):
+doclens row count, read with pyarrow; no postings are read and no Spark
+job runs to DECIDE):
 
 - ``max_delete_ratio``: tombstoned/total docs — dead postings cost scan
   time and the delete anti-join on every query;
 - ``min_segment_fill``: live_docs / (n_segments × docs_per_segment) —
   repeated delta merges leave many under-filled segments (each segment is
   a scoring task: fill drives per-task efficiency);
-- ``max_bound_scale``: avgdl/build_avgdl — merged indexes inflate
-  block-max bounds by this factor (operators/topk.py), weakening MaxScore
-  pruning; compaction rebuilds exact bounds.
+- ``max_bound_scale``: live avgdl/build_avgdl — merged and tombstoned
+  indexes inflate block-max bounds by this factor (operators/topk.py),
+  weakening MaxScore pruning; compaction rebuilds exact bounds.
 
 At 100 TB the decision reads a handful of parquet footers; the rebuild
 itself is the standard index build over the live docs — the same one
@@ -35,10 +36,12 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
 
+from .index_stats import live_stats, read_stats
 from .live_pointer import commit_live_pointer, resolve_live
-from .tombstones import compact_index, delete_stats, has_deletes
+from .tombstones import compact_index
 
 
 @dataclass(frozen=True)
@@ -52,29 +55,24 @@ class CompactionPolicy:
 def index_health(spark: SparkSession, index_dir: str) -> dict:
     """The metadata a compaction decision needs — also a useful ops
     surface on its own (the reference exposes consumer healthchecks;
-    this is the index-side analogue)."""
+    this is the index-side analogue). Pyarrow only: ``spark`` goes unused."""
     d = Path(index_dir)
-    st = spark.read.parquet(str(d / "stats/data")).collect()[0]
-    n_total = int(st["N"])
-    n_deleted = delete_stats(d)["n_deleted"] if has_deletes(d) else 0
-    dps = int(st["docs_per_segment"])
-    n_segments = spark.read.parquet(str(d / "doclens/data")).count()
-    build_avgdl = (
-        float(st["build_avgdl"]) if "build_avgdl" in st.__fields__
-        else float(st["avgdl"])
-    )
-    live = n_total - n_deleted
+    st = read_stats(d)
+    doclens = ds.dataset(str(d / "doclens" / "data"), format="parquet")
+    live = live_stats(d, st, lambda: doclens)
+    n_segments = doclens.count_rows()
     return {
         "index_dir": str(d),
-        "total_docs": n_total,
-        "tombstoned": n_deleted,
-        "live_docs": live,
-        "delete_ratio": (n_deleted / n_total) if n_total else 0.0,
+        "total_docs": st.N,
+        "tombstoned": live.n_deleted,
+        "live_docs": live.N,
+        "delete_ratio": (live.n_deleted / st.N) if st.N else 0.0,
         "n_segments": n_segments,
-        "segment_fill": (live / (n_segments * dps)) if n_segments else 1.0,
-        "bound_scale": max(
-            1.0, float(st["avgdl"]) / build_avgdl
-        ) if build_avgdl else 1.0,
+        "segment_fill": (
+            live.N / (n_segments * st.docs_per_segment) if n_segments else 1.0
+        ),
+        # the factor the reader inflates block bounds by, over live docs
+        "bound_scale": live.bound_scale,
     }
 
 

@@ -58,6 +58,7 @@ from ..functions.html import extract_text
 from ..functions.tokenizer import tokenize_col
 from .checkpoint import content_hash, run_stage
 from .doc_ids import assign_doc_ids
+from .index_stats import IndexStats, read_stats, write_stats
 
 DEFAULT_DOCS_PER_SEGMENT = 8192
 DEFAULT_TERM_BUCKETS = 16
@@ -607,31 +608,17 @@ class IndexBuilder:
             )
             N = int(pc.sum(tbl["n_docs"]).as_py())
             avgdl = float(pc.sum(tbl["sum_len"]).as_py()) / N
-            import pyarrow.parquet as pq
-
-            out = pa.table(
-                {
-                    "N": pa.array([N], pa.int64()),
-                    "avgdl": pa.array([avgdl], pa.float64()),
-                    # the avgdl the block max_impacts were computed against;
-                    # a merge keeps the MIN over its inputs so the reader can
-                    # inflate stored bounds by avgdl/build_avgdl (worst-case
-                    # impact ratio as dl→∞) and stay exact after merges
-                    "build_avgdl": pa.array([avgdl], pa.float64()),
-                    "docs_per_segment": pa.array([self.dps], pa.int64()),
-                    "term_buckets": pa.array([self.term_buckets], pa.int32()),
-                    "profile": pa.array([self.profile], pa.string()),
-                    "positions": pa.array([self.with_positions], pa.bool_()),
-                }
-            )
-            Path(tmp, "data").mkdir(parents=True)
-            pq.write_table(out, str(Path(tmp, "data", "part-00000.parquet")))
+            write_stats(tmp, IndexStats(
+                N=N, avgdl=avgdl, build_avgdl=avgdl, docs_per_segment=self.dps,
+                term_buckets=self.term_buckets, profile=self.profile,
+                positions=self.with_positions,
+            ))
             return {"N": N, "avgdl": avgdl}
 
         check_pause()
         manifests["stats"] = run_stage("stats", self.dir / "stats", fp, stats_stage, force)
-        st = self.spark.read.parquet(str(self.dir / "stats/data")).collect()[0]
-        avgdl = float(st["avgdl"])
+        st = read_stats(self.dir)
+        avgdl = st.avgdl
 
         def postings_stage(tmp: str) -> dict:
             # ONE wide shuffle: the map side tokenizes, counts tf and
@@ -688,7 +675,7 @@ class IndexBuilder:
             # every Python task pays ~250 ms of set-up, even when empty.
             n_parts = max(
                 self.spark.sparkContext.defaultParallelism,
-                -(-int(st["N"] * avgdl) // _POSTINGS_TOKENS_PER_TASK),
+                -(-int(st.N * avgdl) // _POSTINGS_TOKENS_PER_TASK),
             )
             (
                 groups.repartition(n_parts, "segment_id", "term_bucket")

@@ -34,11 +34,6 @@ from pathlib import Path
 LIVE_POINTER_VERSION = 1
 
 
-def is_live_pointer(path: str | Path) -> bool:
-    p = Path(path)
-    return p.is_file() and not p.is_symlink()
-
-
 def resolve_live(path: str | Path) -> str | None:
     """Resolve a live-index location to the current committed index dir.
 

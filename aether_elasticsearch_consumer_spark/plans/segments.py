@@ -21,16 +21,14 @@ then merge — the base is never rewritten except term_stats.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import content_hash, run_stage
-
-
-def _read_stats(spark: SparkSession, d: Path):
-    return spark.read.parquet(str(d / "stats/data")).collect()[0]
+from .index_stats import read_stats, write_stats
 
 
 def merge_indexes(
@@ -45,17 +43,10 @@ def merge_indexes(
     both use the same docs_per_segment.
     """
     base, delta, out = Path(base_dir), Path(delta_dir), Path(out_dir)
-    sb, sd = _read_stats(spark, base), _read_stats(spark, delta)
-    def _pos(row):
-        return bool(row["positions"]) if "positions" in row.__fields__ else False
-
-    if (
-        sb["docs_per_segment"] != sd["docs_per_segment"]
-        or sb["term_buckets"] != sd["term_buckets"]
-        or sb["profile"] != sd["profile"]
-        or _pos(sb) != _pos(sd)
-    ):
-        raise ValueError("cannot merge indexes with different layouts")
+    sb, sd = read_stats(base), read_stats(delta)
+    if sb.layout() != sd.layout():
+        raise ValueError(f"cannot merge indexes with different layouts: "
+                         f"{base} has {sb.layout()}, {delta} has {sd.layout()}")
     from .tombstones import delete_stats, has_deletes, union_delete_sidecars
 
     # the fingerprint must track the inputs' tombstone state: the same
@@ -72,10 +63,10 @@ def merge_indexes(
         def stage(tmp: str) -> dict:
             a = spark.read.parquet(str(base / name / "data"))
             b = spark.read.parquet(str(delta / name / "data"))
-            # schema evolution across index format versions: a pre-v3 base
-            # has no `positions` column; missing columns fill NULL, which
-            # readers only touch when the positions flag is set (and the
-            # layout check above already rejects mixed-flag merges)
+            # docs carries the source's optional columns (warc_ts, lang)
+            # only when the source has them (build_docs_df), so a base and
+            # a delta built from different sources can differ in docs
+            # columns; the missing ones fill NULL
             w = a.unionByName(b, allowMissingColumns=True).write.mode("overwrite")
             if name == "postings":
                 w = w.partitionBy("term_bucket")
@@ -107,25 +98,15 @@ def merge_indexes(
     )
 
     def stats_stage(tmp: str) -> dict:
-        n = int(sb["N"]) + int(sd["N"])
-        avgdl = (
-            float(sb["avgdl"]) * int(sb["N"]) + float(sd["avgdl"]) * int(sd["N"])
-        ) / n
+        n = sb.N + sd.N
+        avgdl = (sb.avgdl * sb.N + sd.avgdl * sd.N) / n
         # each side's block max_impacts were computed against ITS build
         # avgdl; the merged reader prunes against the merged avgdl, which
         # can exceed either side's and make stored bounds underestimates.
         # Keep the MIN build avgdl so the reader's bound inflation
         # (avgdl / build_avgdl) stays conservative for every block.
-        def _bavg(row):
-            return float(row["build_avgdl"]) if "build_avgdl" in row.__fields__ else float(row["avgdl"])
-
-        build_avgdl = min(_bavg(sb), _bavg(sd))
-        spark.createDataFrame(
-            [(n, avgdl, build_avgdl, int(sb["docs_per_segment"]),
-              int(sb["term_buckets"]), sb["profile"], _pos(sb))],
-            "N long, avgdl double, build_avgdl double, docs_per_segment long,"
-            " term_buckets int, profile string, positions boolean",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp + "/data")
+        build_avgdl = min(sb.build_avgdl, sd.build_avgdl)
+        write_stats(tmp, replace(sb, N=n, avgdl=avgdl, build_avgdl=build_avgdl))
         return {"N": n, "avgdl": avgdl, "build_avgdl": build_avgdl}
 
     manifests["stats"] = run_stage("stats", out / "stats", fp, stats_stage, force)
@@ -148,8 +129,7 @@ def next_doc_id_offset(spark: SparkSession, base_dir: str) -> int:
     """Smallest docs_per_segment-aligned doc_id past the base index's max —
     the offset a delta build must use to keep segments disjoint."""
     base = Path(base_dir)
-    st = _read_stats(spark, base)
-    dps = int(st["docs_per_segment"])
+    dps = read_stats(base).docs_per_segment
     max_id = (
         spark.read.parquet(str(base / "docs/data"))
         .agg(F.max("doc_id").alias("m"))

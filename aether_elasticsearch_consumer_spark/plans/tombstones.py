@@ -52,6 +52,7 @@ from ..functions.codec import varbyte_decode, varbyte_encode
 from ..functions.tokenizer import tokenize_col
 from .checkpoint import content_hash, run_stage
 from .index_build import DL_MASK
+from .index_stats import read_stats
 
 DELETE_SEG_SCHEMA = T.StructType(
     [
@@ -147,8 +148,8 @@ def apply_deletes(
          "id_hash": int(agg["id_hash"]), "v": 1}
     )
 
-    st = spark.read.parquet(str(d / "stats/data")).collect()[0]
-    dps, profile = int(st["docs_per_segment"]), st["profile"]
+    st = read_stats(d)
+    dps, profile = st.docs_per_segment, st.profile
 
     def stage(tmp: str) -> dict:
         all_ids.write.mode("overwrite").parquet(tmp + "/doc_ids/data")
@@ -163,7 +164,7 @@ def apply_deletes(
             .write.mode("overwrite")
             .parquet(tmp + "/segments/data")
         )
-        B = int(st["term_buckets"])
+        B = st.term_buckets
         (
             dele.select(
                 F.explode(
@@ -295,9 +296,12 @@ def upsert_index(
     )
     off = next_doc_id_offset(spark, str(base))
     delta = work / f"upsert_delta_{batch_tag}"
-    IndexBuilder(
-        spark, str(delta), doc_id_offset=off, **builder_kwargs
-    ).build(new_docs, fingerprint_extra={"upsert": str(batch_tag)})
+    # the delta takes the base's layout unless the caller overrides it:
+    # a merge rejects any other
+    kw = {**read_stats(base).layout(), **builder_kwargs}
+    IndexBuilder(spark, str(delta), doc_id_offset=off, **kw).build(
+        new_docs, fingerprint_extra={"upsert": str(batch_tag)}
+    )
     merge_indexes(spark, str(base), str(delta), str(merged))
     apply_deletes(spark, str(merged), old_ids)
     commit_live_pointer(live, merged)
@@ -319,14 +323,7 @@ def compact_index(
     if has_deletes(d):
         dele = spark.read.parquet(str(d / "deletes/doc_ids/data"))
         docs = docs.join(dele, "doc_id", "left_anti")
-    st = spark.read.parquet(str(d / "stats/data")).collect()[0]
-    builder_kwargs.setdefault("docs_per_segment", int(st["docs_per_segment"]))
-    builder_kwargs.setdefault("term_buckets", int(st["term_buckets"]))
-    builder_kwargs.setdefault("profile", st["profile"])
-    builder_kwargs.setdefault(
-        "with_positions",
-        bool(st["positions"]) if "positions" in st.__fields__ else False,
-    )
-    return IndexBuilder(spark, out_dir, id_col="doc_id", **builder_kwargs).build(
+    kw = {**read_stats(d).layout(), **builder_kwargs}
+    return IndexBuilder(spark, out_dir, id_col="doc_id", **kw).build(
         docs, fingerprint_extra={"compact_of": str(d)}
     )

@@ -100,6 +100,7 @@ def stream_index(
     from pathlib import Path
 
     from ..plans.index_build import IndexBuilder
+    from ..plans.index_stats import read_stats
     from ..plans.live_pointer import commit_live_pointer, resolve_live
     from ..plans.segments import merge_indexes, next_doc_id_offset
     from ..plans.tombstones import upsert_index
@@ -165,9 +166,12 @@ def stream_index(
             tmpf = work / f".batch_{batch_id}.offset.tmp"
             tmpf.write_text(str(off))
             os.replace(tmpf, off_file)
-        IndexBuilder(
-            spark, str(delta), doc_id_offset=off, **builder_kwargs
-        ).build(batch_df, fingerprint_extra={"batch": batch_id})
+        # the delta takes the live index's layout unless the caller
+        # overrides it: a merge rejects any other
+        kw = {**read_stats(current).layout(), **builder_kwargs}
+        IndexBuilder(spark, str(delta), doc_id_offset=off, **kw).build(
+            batch_df, fingerprint_extra={"batch": batch_id}
+        )
         merge_indexes(spark, current, str(delta), str(merged))
         commit_live_pointer(live, merged)  # atomic repoint
         maybe_compact_after(batch_id)

@@ -23,6 +23,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from aether_elasticsearch_consumer_spark.plans.index_build import IndexBuilder
+from aether_elasticsearch_consumer_spark.plans.index_stats import read_stats
 from aether_elasticsearch_consumer_spark.plans.segments import (
     merge_indexes,
     next_doc_id_offset,
@@ -40,30 +41,25 @@ def main(argv=None):
     work = Path(args.work or (args.base.rstrip("/") + "__work"))
 
     spark = get_spark("ingest_incremental", cores=args.cores)
-    base_stats = spark.read.parquet(f"{args.base}/stats/data").collect()[0]
+    base_stats = read_stats(args.base)
     t0 = time.time()
     offset = next_doc_id_offset(spark, args.base)
     delta_dir = work / f"delta_{offset}"
+    # the delta takes the base's whole layout: a merge rejects any other
     builder = IndexBuilder(
-        spark,
-        str(delta_dir),
-        profile=base_stats["profile"],
-        docs_per_segment=int(base_stats["docs_per_segment"]),
-        term_buckets=int(base_stats["term_buckets"]),
-        doc_id_offset=offset,
+        spark, str(delta_dir), doc_id_offset=offset, **base_stats.layout()
     )
     incoming = spark.read.parquet(args.incoming)
     builder.build(incoming, fingerprint_extra={"incoming": args.incoming})
     merged_dir = work / f"merged_{offset}"
     merge_indexes(spark, args.base, str(delta_dir), str(merged_dir))
-    new_stats = spark.read.parquet(f"{merged_dir}/stats/data").collect()[0]
     print(
         json.dumps(
             {
                 "base": args.base,
                 "merged": str(merged_dir),
-                "docs_before": int(base_stats["N"]),
-                "docs_after": int(new_stats["N"]),
+                "docs_before": base_stats.N,
+                "docs_after": read_stats(merged_dir).N,
                 "doc_id_offset": offset,
                 "elapsed_sec": round(time.time() - t0, 2),
             }

@@ -31,14 +31,18 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from aether_elasticsearch_consumer_spark.plans.compaction import (
+    CompactionPolicy,
+    compaction_due,
+    index_health,
+    maybe_compact,
+)
 from aether_elasticsearch_consumer_spark.plans.live_pointer import (
     resolve_live,
 )
 from aether_elasticsearch_consumer_spark.plans.tombstones import (
     apply_deletes,
     compact_index,
-    delete_stats,
-    has_deletes,
     upsert_index,
 )
 from aether_elasticsearch_consumer_spark.session import get_spark
@@ -77,11 +81,6 @@ def main(argv=None):
     out: dict = {"live": args.live}
 
     if args.health:
-        from aether_elasticsearch_consumer_spark.plans.compaction import (
-            CompactionPolicy,
-            compaction_due,
-        )
-
         decision = compaction_due(
             spark, resolve_live(args.live),
             CompactionPolicy(
@@ -117,11 +116,6 @@ def main(argv=None):
         out["index"] = resolve_live(args.live)
 
     if args.auto_compact:
-        from aether_elasticsearch_consumer_spark.plans.compaction import (
-            CompactionPolicy,
-            maybe_compact,
-        )
-
         res = maybe_compact(
             spark, args.live, work,
             CompactionPolicy(
@@ -137,17 +131,9 @@ def main(argv=None):
         if res["compacted"]:
             out["index"] = res["new_index_dir"]
 
-    idx = out["index"]
-    st = spark.read.parquet(f"{idx}/stats/data").collect()[0]
-    n_del = delete_stats(idx)["n_deleted"] if has_deletes(idx) else 0
-    out.update(
-        {
-            "total_docs": int(st["N"]),
-            "tombstoned": n_del,
-            "live_docs": int(st["N"]) - n_del,
-            "elapsed_sec": round(time.time() - t0, 2),
-        }
-    )
+    health = index_health(spark, out["index"])
+    out.update({k: health[k] for k in ("total_docs", "tombstoned", "live_docs")})
+    out["elapsed_sec"] = round(time.time() - t0, 2)
     print(json.dumps(out))
     spark.stop()
 

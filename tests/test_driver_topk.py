@@ -18,6 +18,7 @@ from __future__ import annotations
 import itertools
 import shutil
 
+import numpy as np
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
@@ -30,6 +31,7 @@ from aether_elasticsearch_consumer_spark.oracle.engine import (
     build_oracle_index,
     score_query,
 )
+from aether_elasticsearch_consumer_spark.plans.ann_index import LshAnnIndex
 from aether_elasticsearch_consumer_spark.plans.index_build import IndexBuilder
 from aether_elasticsearch_consumer_spark.plans.tombstones import apply_deletes
 
@@ -213,16 +215,37 @@ def test_reader_operations_create_no_broadcast(spark, positional, monkeypatch):
     assert calls == []
 
 
+@pytest.fixture(scope="module")
+def ann_no_probe(spark, tmp_path_factory):
+    """A four-vector LSH index and a query vector whose prefix ball at
+    radius 0 holds no stored partition."""
+    rng = np.random.default_rng(7)
+    df = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(rng.normal(size=(4, 8)))],
+        "vec_id long, embedding array<double>",
+    )
+    idx = LshAnnIndex.build(
+        spark, df, str(tmp_path_factory.mktemp("ann") / "lsh"),
+        n_planes=16, prefix_bits=6,
+    )
+    q = next(v for v in rng.normal(size=(64, 8)) if not idx.probe_paths(v, 0))
+    return idx, q
+
+
 @pytest.mark.parametrize(
     "op",
     ["match_docs", "term_freqs", "bool_docs_msm", "bool_docs_none",
-     "phrase_docs", "span_near_docs", "percolate"],
+     "phrase_docs", "span_near_docs", "percolate", "ann_no_probe"],
 )
-def test_operators_without_terms_run_no_spark_job(spark, positional, op):
-    """An operator whose input yields no terms answers with an empty local
-    relation: planning and collecting it runs no Spark job, on a
-    tombstoned reader too (nothing left to strip)."""
+def test_operators_without_terms_run_no_spark_job(
+    spark, positional, ann_no_probe, op
+):
+    """An operator whose input yields no terms (or, for ANN, no probed
+    partition) answers with an empty local relation: planning and
+    collecting it runs no Spark job, on a tombstoned reader too (nothing
+    left to strip)."""
     rd = IndexReader(spark, positional["tomb"])
+    ann, q = ann_no_probe
     call = {
         "match_docs": lambda: rd.match_docs(""),
         "term_freqs": lambda: rd.term_freqs([]),
@@ -233,6 +256,7 @@ def test_operators_without_terms_run_no_spark_job(spark, positional, op):
         "phrase_docs": lambda: rd.phrase_docs(""),
         "span_near_docs": lambda: rd.span_near_docs([]),
         "percolate": lambda: rd.percolate({}),
+        "ann_no_probe": lambda: ann.query(q, k=5, max_hamming=0),
     }[op]
     rows = []
     assert _jobs_in(spark, lambda: rows.extend(call().collect())) == 0

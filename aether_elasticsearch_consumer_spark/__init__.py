@@ -21,3 +21,8 @@ __version__ = "0.1.0"
 K1 = 1.2
 B = 0.75
 BLOCK_SIZE = 128
+
+# Spark Python workers import the package to unpickle its functions, so
+# this makes their per-task zip-directory re-reads stat-checked (it does
+# nothing on the driver).
+from . import _worker  # noqa: E402,F401

@@ -143,11 +143,13 @@ def _decode_positions_batch(rows, tfs: np.ndarray) -> np.ndarray:
 POS_BITS = 20
 
 # scoring-exchange sizing (see IndexReader._by_segment): each task pays a
-# fixed python-worker round-trip (~0.1-0.3 s measured), so width derives
-# from WORK (segments / this) capped at the cluster width — a
-# width-32 plan for a 49-segment query measured p50 0.57 s vs 0.44 s at
-# the derived 7 (probe in OPTIMIZATION_r06.md); large corpora hit the
-# parallelism cap and scale out normally
+# fixed python-worker round-trip, so width derives from WORK (segments /
+# this) capped at the cluster width — a width-32 plan for a 49-segment
+# query measured p50 0.57 s vs 0.44 s at the derived 7 (probe in
+# OPTIMIZATION_r06.md); large corpora hit the parallelism cap and scale
+# out normally. Re-measured once reused workers stopped re-reading their
+# zips: on an 8-segment index one task still wins below Σdf ~100k and
+# four win above it (ROADMAP item 1)
 _SEGMENTS_PER_SCORE_TASK = 8
 
 # search() scores on the driver when the query terms' summed df is at or

@@ -88,6 +88,15 @@ POSTINGS_SCHEMA = T.StructType(
     ]
 )
 
+# per-term global df, partitioned by term_bucket (the term_stats stage)
+TERM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("term_bucket", T.IntegerType(), False),
+        T.StructField("term", T.StringType(), False),
+        T.StructField("df", T.LongType(), False),
+    ]
+)
+
 DOCLENS_SCHEMA = T.StructType(
     [
         T.StructField("segment_id", T.LongType(), False),
@@ -700,7 +709,11 @@ class IndexBuilder:
         )
 
         def term_stats_stage(tmp: str) -> dict:
-            postings = self.spark.read.parquet(str(self.dir / "postings/data"))
+            # the known schema, not inference: docs without tokens write
+            # no postings files, and inference would fail on them
+            postings = self.spark.read.schema(POSTINGS_SCHEMA).parquet(
+                str(self.dir / "postings/data")
+            )
             (
                 # sum block counts (df_seg repeats per block row of a term)
                 postings.groupBy("term_bucket", "term")

@@ -39,7 +39,8 @@ LiveStats = namedtuple("LiveStats", "N avgdl bound_scale n_deleted")
 
 
 class IndexFormatError(ValueError):
-    """An index directory whose stats row lacks a format-v4 column."""
+    """An index directory that lacks what format v4 requires: a stats-row
+    column, or the doc_id statistics in its docs footers."""
 
 
 @dataclass(frozen=True)

@@ -24,11 +24,13 @@ from __future__ import annotations
 from dataclasses import replace
 from pathlib import Path
 
+import pyarrow.dataset as ds
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .checkpoint import content_hash, run_stage
-from .index_stats import read_stats, write_stats
+from .index_build import DOCLENS_SCHEMA, POSTINGS_SCHEMA, TERM_STATS_SCHEMA
+from .index_stats import IndexFormatError, read_stats, write_stats
 
 
 def merge_indexes(
@@ -59,10 +61,21 @@ def merge_indexes(
     )
     manifests = {}
 
+    # every side but docs (its optional columns vary by source) is read
+    # with the build's schema: inference costs a job per read, and fails
+    # on postings and term_stats when the docs had no tokens (no files)
+    schemas = {"doclens": DOCLENS_SCHEMA, "postings": POSTINGS_SCHEMA,
+               "term_stats": TERM_STATS_SCHEMA}
+
+    def read(side: Path, name: str):
+        r = spark.read
+        if name in schemas:
+            r = r.schema(schemas[name])
+        return r.parquet(str(side / name / "data"))
+
     def union_stage(name: str):
         def stage(tmp: str) -> dict:
-            a = spark.read.parquet(str(base / name / "data"))
-            b = spark.read.parquet(str(delta / name / "data"))
+            a, b = read(base, name), read(delta, name)
             # docs carries the source's optional columns (warc_ts, lang)
             # only when the source has them (build_docs_df), so a base and
             # a delta built from different sources can differ in docs
@@ -79,10 +92,8 @@ def merge_indexes(
         manifests[name] = run_stage(name, out / name, fp, union_stage(name), force)
 
     def term_stats_stage(tmp: str) -> dict:
-        a = spark.read.parquet(str(base / "term_stats/data"))
-        b = spark.read.parquet(str(delta / "term_stats/data"))
         (
-            a.unionByName(b)
+            read(base, "term_stats").unionByName(read(delta, "term_stats"))
             .groupBy("term_bucket", "term")
             .agg(F.sum("df").alias("df"))
             .repartition("term_bucket")
@@ -125,14 +136,27 @@ def merge_indexes(
     return manifests
 
 
-def next_doc_id_offset(spark: SparkSession, base_dir: str) -> int:
+def next_doc_id_offset(base_dir: str) -> int:
     """Smallest docs_per_segment-aligned doc_id past the base index's max —
-    the offset a delta build must use to keep segments disjoint."""
+    the offset a delta build must use to keep segments disjoint. The max
+    comes from the ``docs/data`` footers' column statistics, so no Spark job
+    runs; tombstoned docs stay in ``docs/data``, so dead ids count."""
     base = Path(base_dir)
     dps = read_stats(base).docs_per_segment
-    max_id = (
-        spark.read.parquet(str(base / "docs/data"))
-        .agg(F.max("doc_id").alias("m"))
-        .collect()[0]["m"]
-    )
-    return (int(max_id) // dps + 1) * dps
+    max_id = -1
+    docs = ds.dataset(str(base / "docs/data"), format="parquet")
+    for frag in docs.get_fragments():
+        md = frag.metadata
+        col = md.schema.names.index("doc_id")
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            if not rg.num_rows:
+                continue
+            st = rg.column(col).statistics
+            if st is None or not st.has_min_max:
+                raise IndexFormatError(
+                    f"{frag.path}: row group {i} has no doc_id statistics; "
+                    "the delta offset cannot be read from the footers"
+                )
+            max_id = max(max_id, st.max)
+    return (max_id // dps + 1) * dps

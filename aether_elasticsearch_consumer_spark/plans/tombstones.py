@@ -294,7 +294,7 @@ def upsert_index(
         .select("doc_id")
         .localCheckpoint(eager=True)
     )
-    off = next_doc_id_offset(spark, str(base))
+    off = next_doc_id_offset(str(base))
     delta = work / f"upsert_delta_{batch_tag}"
     # the delta takes the base's layout unless the caller overrides it:
     # a merge rejects any other

@@ -162,7 +162,7 @@ def stream_index(
         if off_file.exists():
             off = int(off_file.read_text())
         else:
-            off = next_doc_id_offset(spark, current)
+            off = next_doc_id_offset(current)
             tmpf = work / f".batch_{batch_id}.offset.tmp"
             tmpf.write_text(str(off))
             os.replace(tmpf, off_file)

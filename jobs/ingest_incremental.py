@@ -43,7 +43,7 @@ def main(argv=None):
     spark = get_spark("ingest_incremental", cores=args.cores)
     base_stats = read_stats(args.base)
     t0 = time.time()
-    offset = next_doc_id_offset(spark, args.base)
+    offset = next_doc_id_offset(args.base)
     delta_dir = work / f"delta_{offset}"
     # the delta takes the base's whole layout: a merge rejects any other
     builder = IndexBuilder(

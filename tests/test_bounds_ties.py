@@ -68,7 +68,7 @@ def skewed_merge(spark, tmp_path_factory):
     long_ = full.where("length(text) >= 700")
     b = IndexBuilder(spark, str(root / "base"), docs_per_segment=128, term_buckets=8)
     b.build(short, fingerprint_extra="skew-short")
-    off = next_doc_id_offset(spark, str(root / "base"))
+    off = next_doc_id_offset(str(root / "base"))
     d = IndexBuilder(
         spark, str(root / "delta"), docs_per_segment=128, term_buckets=8,
         doc_id_offset=off,

@@ -15,7 +15,6 @@ Contracts:
 
 from __future__ import annotations
 
-import itertools
 import shutil
 
 import numpy as np
@@ -101,32 +100,19 @@ def test_search_after_page_matches_oracle(
     assert _rows(rd.search_after(q, s, d, k=15)) == want[10:25]
 
 
-_groups = itertools.count()
-
-
-def _jobs_in(spark, fn) -> int:
-    """Spark jobs run by ``fn()``, counted through a fresh job group."""
-    sc = spark.sparkContext
-    group = f"drvtopk-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("which", ["clean", "tomb"])
-def test_open_and_small_search_run_no_spark_job(spark, indexes, which):
+def test_open_and_small_search_run_no_spark_job(
+    spark, jobs_in, indexes, which
+):
     idx, oracle = indexes[which]
     readers = []
-    assert _jobs_in(spark, lambda: readers.append(IndexReader(spark, idx))) == 0
+    assert jobs_in(lambda: readers.append(IndexReader(spark, idx))) == 0
     rd = readers[0]
     cap = topk._DRIVER_SCORE_MAX_DF
     assert sum(rd.term_dfs(["keta", "gera"]).values()) <= cap
     for q, k in [("keta gera", 10), ("zzabsent", 10), ("", 10), ("keta", 0)]:
         rows = []
-        n_jobs = _jobs_in(spark, lambda: rows.extend(_rows(rd.search(q, k=k))))
+        n_jobs = jobs_in(lambda: rows.extend(_rows(rd.search(q, k=k))))
         assert n_jobs == 0, q
         assert rows == (score_query(oracle, q, k=k) if k else []), q
 
@@ -238,7 +224,7 @@ def ann_no_probe(spark, tmp_path_factory):
      "phrase_docs", "span_near_docs", "percolate", "ann_no_probe"],
 )
 def test_operators_without_terms_run_no_spark_job(
-    spark, positional, ann_no_probe, op
+    spark, jobs_in, positional, ann_no_probe, op
 ):
     """An operator whose input yields no terms (or, for ANN, no probed
     partition) answers with an empty local relation: planning and
@@ -259,5 +245,5 @@ def test_operators_without_terms_run_no_spark_job(
         "ann_no_probe": lambda: ann.query(q, k=5, max_hamming=0),
     }[op]
     rows = []
-    assert _jobs_in(spark, lambda: rows.extend(call().collect())) == 0
+    assert jobs_in(lambda: rows.extend(call().collect())) == 0
     assert rows == []

@@ -13,7 +13,6 @@ Contracts:
 
 from __future__ import annotations
 
-import itertools
 import shutil
 
 import pyarrow.dataset as ds
@@ -180,22 +179,7 @@ def test_health_bound_scale_is_the_readers(spark, tomb):
     assert h["n_segments"] == 5
 
 
-_groups = itertools.count()
-
-
-def _jobs_in(spark, fn) -> int:
-    """Spark jobs run by ``fn()``, counted through a fresh job group."""
-    sc = spark.sparkContext
-    group = f"idxstats-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_compaction_due_runs_no_spark_job(spark, tomb):
+def test_compaction_due_runs_no_spark_job(spark, jobs_in, tomb):
     out = []
-    assert _jobs_in(spark, lambda: out.append(compaction_due(spark, str(tomb)))) == 0
+    assert jobs_in(lambda: out.append(compaction_due(spark, str(tomb)))) == 0
     assert out[0]["delete_ratio"] == 0.2 and out[0]["due"]

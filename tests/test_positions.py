@@ -150,7 +150,7 @@ def test_phrase_after_positional_merge(spark, tmp_path_factory):
     delta_src = full.where(f"{page} >= 200")
     kw = dict(docs_per_segment=64, term_buckets=4, with_positions=True)
     IndexBuilder(spark, str(root / "b"), **kw).build(base_src, fingerprint_extra="pb")
-    off = next_doc_id_offset(spark, str(root / "b"))
+    off = next_doc_id_offset(str(root / "b"))
     IndexBuilder(spark, str(root / "d"), doc_id_offset=off, **kw).build(
         delta_src, fingerprint_extra="pd")
     merge_indexes(spark, str(root / "b"), str(root / "d"), str(root / "m"))

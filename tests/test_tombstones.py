@@ -181,7 +181,7 @@ def test_merge_carries_tombstones(spark, tomb, tmp_path):
     )
 
     root, _, live = tomb
-    off = next_doc_id_offset(spark, str(root / "idx"))
+    off = next_doc_id_offset(str(root / "idx"))
     src2 = webtext_df(spark, 430, partitions=2).where(
         "cast(substring(url, length(url) - 7, 8) as int) >= 400"
     )

@@ -26,7 +26,7 @@ STATS_SCHEMA = pa.schema(
         ("N", pa.int64()),
         ("avgdl", pa.float64()),
         # the avgdl the block max_impacts were computed against (a merge
-        # keeps the MIN over its inputs; see live_stats)
+        # keeps the MIN over its inputs that have tokens; see live_stats)
         ("build_avgdl", pa.float64()),
         ("docs_per_segment", pa.int64()),
         ("term_buckets", pa.int32()),

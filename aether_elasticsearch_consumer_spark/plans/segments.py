@@ -115,8 +115,12 @@ def merge_indexes(
         # avgdl; the merged reader prunes against the merged avgdl, which
         # can exceed either side's and make stored bounds underestimates.
         # Keep the MIN build avgdl so the reader's bound inflation
-        # (avgdl / build_avgdl) stays conservative for every block.
-        build_avgdl = min(sb.build_avgdl, sd.build_avgdl)
+        # (avgdl / build_avgdl) stays conservative for every block. A side
+        # with no tokens has no blocks and a build_avgdl of 0, which would
+        # read as "nothing to inflate" forever after: it takes no part.
+        build_avgdl = min(
+            (s.build_avgdl for s in (sb, sd) if s.build_avgdl), default=0.0
+        )
         write_stats(tmp, replace(sb, N=n, avgdl=avgdl, build_avgdl=build_avgdl))
         return {"N": n, "avgdl": avgdl, "build_avgdl": build_avgdl}
 

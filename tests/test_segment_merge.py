@@ -1,9 +1,10 @@
 """Incremental indexing: delta build at a doc-id offset + metadata-only
 segment merge (X6) must be search-equivalent to a monolithic rebuild.
 
-Also: a delta with no tokens at all merges; the delta offset is read from
-the docs footers (no Spark job), counts tombstoned ids, and a footer
-without doc_id statistics fails with ``IndexFormatError``."""
+Also: a delta with no tokens at all merges and leaves the base's bound
+inflation intact; the delta offset is read from the docs footers (no Spark
+job), counts tombstoned ids, and a footer without doc_id statistics fails
+with ``IndexFormatError``."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from aether_elasticsearch_consumer_spark.fixtures.webtext import webtext_df
+from aether_elasticsearch_consumer_spark.functions.tokenizer import tokenize_py
 from aether_elasticsearch_consumer_spark.operators.topk import IndexReader
 from aether_elasticsearch_consumer_spark.oracle.engine import (
     build_oracle_index,
@@ -22,6 +24,7 @@ from aether_elasticsearch_consumer_spark.oracle.engine import (
 from aether_elasticsearch_consumer_spark.plans.index_build import IndexBuilder
 from aether_elasticsearch_consumer_spark.plans.index_stats import (
     IndexFormatError,
+    read_stats,
 )
 from aether_elasticsearch_consumer_spark.plans.segments import (
     merge_indexes,
@@ -64,13 +67,15 @@ def test_merged_stats(spark, merged):
     assert st["N"] == 800
 
 
-def _assert_search_matches_oracle(spark, idx: str) -> None:
+def _assert_search_matches_oracle(spark, idx: str, dead=()) -> None:
     docs = (
         spark.read.parquet(f"{idx}/docs/data")
         .select("doc_id", "text")
         .toPandas()
     )
-    oracle = build_oracle_index(list(zip(docs["doc_id"], docs["text"])))
+    oracle = build_oracle_index(
+        [(i, t) for i, t in zip(docs["doc_id"], docs["text"]) if i not in dead]
+    )
     reader = IndexReader(spark, idx)
     for q in ["the", "ba ke", "keta gera rare", "zzznope"]:
         got = [(r["doc_id"], r["score"]) for r in reader.search(q, k=10).collect()]
@@ -123,6 +128,21 @@ def test_empty_text_delta_merges(spark, tmp_path):
     merge_indexes(spark, str(tmp_path / "base"), str(tmp_path / "delta"), out)
     assert spark.read.parquet(f"{out}/stats/data").collect()[0]["N"] == 103
     _assert_search_matches_oracle(spark, out)
+
+    # the empty side takes no part in the merged build_avgdl: once the
+    # shortest docs are deleted, the live avgdl exceeds the base's build
+    # avgdl and the reader must still inflate the base's stored bounds
+    base_build = read_stats(tmp_path / "base").build_avgdl
+    assert read_stats(out).build_avgdl == base_build > 0
+    docs = spark.read.parquet(f"{out}/docs/data").select("doc_id", "text").collect()
+    lens = {r["doc_id"]: len(tokenize_py(r["text"])) for r in docs}
+    dead = set(sorted(lens, key=lambda i: (lens[i], i))[:33])
+    apply_deletes(spark, out, sorted(dead))
+    live = [n for i, n in lens.items() if i not in dead]
+    rd = IndexReader(spark, out)
+    assert rd.bound_scale == pytest.approx(sum(live) / len(live) / base_build)
+    assert rd.bound_scale > 1.0
+    _assert_search_matches_oracle(spark, out, dead)
 
 
 def test_next_doc_id_offset_reads_footers(spark, jobs_in, merged, tmp_path):

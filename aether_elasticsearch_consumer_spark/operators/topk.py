@@ -29,17 +29,19 @@ terms (known after step 2, before any posting is read):
   scheduling and python-worker round-trip (~0.2 s even for one tiny
   task), which is most of a small query's latency;
 - **Spark side** (larger reads): the pruned postings scan fans out
-  across the cluster, one exchange groups rows by segment, and each
-  task scores its segments in a ``mapInPandas`` step — no join, the
-  same plan with and without tombstones.
-Both sides hand their postings to the same ``_score_segments``, which
-point-reads those segments' sidecar rows (doclens lens blob plus the
-tombstone blob) straight from the index files with pyarrow and calls
-``_score_segment`` per segment, with the same df, N, avgdl and bounds —
-so they are rank-identical; only where the work runs differs. Lens bytes
-never cross an exchange, a broadcast or a join. The executor-side read
-assumes the index dir is a POSIX path visible to the workers, as the
-driver-side reads already do.
+  across the cluster, one exchange groups rows by segment (its width
+  from Σdf), and each task scores its segments in a ``mapInArrow`` step
+  — no join, the same plan with and without tombstones.
+Both sides hand their postings to the same ``_score_segments`` as an
+Arrow table, with the query's df map: it orders the rows into (segment,
+term) runs with one lexsort, point-reads those segments' sidecar rows
+(doclens lens blob plus the tombstone blob) straight from the index
+files with pyarrow and calls ``_score_segment`` per segment on numpy
+column slices, with the same df, N, avgdl and bounds — so they are
+rank-identical; only where the work runs differs. No pandas frame is
+built on the scoring path. Lens bytes never cross an exchange, a
+broadcast or a join. The executor-side read assumes the index dir is a
+POSIX path visible to the workers, as the driver-side reads already do.
 
 The unscored posting operators (``match_docs``, ``term_freqs``,
 ``term_positions`` and the phrase/span verifier under ``phrase_docs``)
@@ -63,6 +65,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -142,23 +145,24 @@ def _decode_positions_batch(rows, tfs: np.ndarray) -> np.ndarray:
 # index layout.
 POS_BITS = 20
 
-# scoring-exchange sizing (see IndexReader._by_segment): each task pays a
-# fixed python-worker round-trip, so width derives from WORK (segments /
-# this) capped at the cluster width — a width-32 plan for a 49-segment
-# query measured p50 0.57 s vs 0.44 s at the derived 7 (probe in
-# OPTIMIZATION_r06.md); large corpora hit the parallelism cap and scale
-# out normally. Re-measured once reused workers stopped re-reading their
-# zips: on an 8-segment index one task still wins below Σdf ~100k and
-# four win above it (ROADMAP item 1)
-_SEGMENTS_PER_SCORE_TASK = 8
+# segment-exchange sizing (see IndexReader._by_segment): each task pays a
+# fixed python-worker round-trip, so width derives from WORK. The scorer
+# takes one task per this many postings of the query terms (Σdf); the
+# decode operators, which pay an applyInPandas group per segment, one per
+# this many segments. From in-session A/Bs on 8- and 25-segment indexes
+# at local[4]: Σdf sizing won the scorer's bands, and lost the decode
+# operators' on 25 segments (1.06× below Σdf 100k) (CHANGES.md)
+_DF_PER_SCORE_TASK = 100_000
+_SEGMENTS_PER_DECODE_TASK = 8
 
 # search() scores on the driver when the query terms' summed df is at or
 # under this many postings, and plans the Spark scorer above it. From the
 # driver-vs-Spark crossover scripts/topk_crossover.py measures (200k-doc
-# webtext index, local[4] on a 4-vCPU VM): the driver side is 0.2-0.3× the
-# Spark side's p50 up to Σdf 200k, 0.67× at 1-2M, and reaches parity at
-# 3-5M. The cap sits at the last band the driver still wins clearly;
-# re-derive it with that script on other hardware.
+# webtext index, local[4] on a 4-vCPU VM, both sides scoring Arrow
+# columns): the driver side is 0.2-0.3× the Spark side's p50 up to Σdf
+# 200k, 0.45-0.66× at 0.2-1M, 0.78× at 1-2M, and 1.0-1.08× at 2-5M. The
+# cap sits at the last band the driver still wins; re-derive it with that
+# script on other hardware.
 _DRIVER_SCORE_MAX_DF = 2_000_000
 
 class MissingSidecarError(LookupError):
@@ -174,9 +178,8 @@ def _empty(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame([], schema).limit(0)
 
 
-def _no_hits() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                         "score": pd.Series(dtype="float64")})
+def _no_hits() -> tuple[np.ndarray, np.ndarray]:
+    return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
 
 
 def _take(cols: dict, idx: np.ndarray) -> dict:
@@ -201,7 +204,7 @@ def _select_topk(
 
 
 def _score_segment(
-    pdf: pd.DataFrame,
+    runs: list[tuple[str, int, dict]],
     sidecar: tuple | None,
     N: int,
     avgdl: float,
@@ -211,11 +214,13 @@ def _score_segment(
     bound_scale: float = 1.0,
     after: tuple[float, int] | None = None,
     per_term_round: bool = False,
-) -> pd.DataFrame:
-    """Score one segment's query-term posting rows. ``pdf`` has one row per
-    posting block: term, df, block_no, first/last_doc_id, max_impact,
-    doc_deltas, tfs; each term's rows feed ``_decode_blocks_batch`` as
-    column arrays, block selections as index arrays. ``sidecar`` is the
+) -> tuple[np.ndarray, np.ndarray]:
+    """Score one segment's query-term posting rows → (doc_ids, scores).
+    ``runs`` holds one ``(term, df, cols)`` run per query term present in
+    the segment, in ascending term order: ``cols`` maps each of
+    ``_RUN_COLS`` to that term's posting blocks as a numpy array in
+    block_no order, fed to ``_decode_blocks_batch`` as is and block
+    selections as index arrays. ``sidecar`` is the
     segment's ``(start_doc_id, lens, deleted)`` from ``_sidecar_rows``
     (``deleted`` None without tombstones), or None when the segment is
     missing from the sidecar (the segment then yields no hits).
@@ -252,7 +257,7 @@ def _score_segment(
     page-2 hit. Deep paging therefore evaluates the query terms'
     postings exhaustively — the same cost profile as Lucene's
     searchAfter — and stays exact."""
-    if not len(pdf) or sidecar is None:
+    if not runs or sidecar is None:
         return _no_hits()
     start, lens_blob, deleted = sidecar
     lens_arr = varbyte_decode(lens_blob).astype(np.float64)
@@ -265,15 +270,11 @@ def _score_segment(
         dpos = decode_id_set(bytes(deleted)) - start
         alive[dpos[(dpos >= 0) & (dpos < n_docs)]] = False
 
-    # per term: its block columns as arrays and its scaled block bounds
+    # per term: its idf, σ bound, block columns and scaled block bounds
     terms = []
-    for t, grp in pdf.sort_values(["term", "block_no"]).groupby("term", sort=True):
-        cols = {
-            c: grp[c].to_numpy()
-            for c in ("first_doc_id", "last_doc_id", "count", "doc_deltas", "tfs")
-        }
-        bound = grp["max_impact"].to_numpy(np.float64) * bound_scale
-        idf = float(idf_np(N, float(grp["df"].iloc[0])))
+    for t, df, cols in runs:
+        bound = cols["max_impact"].astype(np.float64) * bound_scale
+        idf = float(idf_np(N, float(df)))
         terms.append((t, idf, idf * bound.max(), cols, bound))
 
     # single-term fast path: impact-ordered block traversal with exact
@@ -328,9 +329,7 @@ def _score_segment(
             )
             cand, scores = cand[keep], scores[keep]
         cand, scores = _select_topk(cand, scores, k)
-        return pd.DataFrame(
-            {"doc_id": (cand + start).astype(np.int64), "score": scores}
-        )
+        return (cand + start).astype(np.int64), scores
 
     # accumulator over the segment's dense doc range; acc_run tracks
     # partial sums in σ-processing order purely to tighten the pruning
@@ -409,7 +408,7 @@ def _score_segment(
         )
         cand, scores = cand[keep], scores[keep]
     cand, scores = _select_topk(cand, scores, k)
-    return pd.DataFrame({"doc_id": (cand + start).astype(np.int64), "score": scores})
+    return (cand + start).astype(np.int64), scores
 
 
 # the posting columns the scorer and the decode operators read (the
@@ -418,6 +417,8 @@ _SCORE_COLS = [
     "segment_id", "term", "block_no", "first_doc_id", "last_doc_id",
     "count", "max_impact", "doc_deltas", "tfs",
 ]
+# the per-block columns of one (segment, term) run handed to _score_segment
+_RUN_COLS = _SCORE_COLS[3:]
 
 
 def _sidecar_rows(doclens, deletes, segment_ids) -> dict[int, tuple]:
@@ -449,36 +450,59 @@ def _sidecar_rows(doclens, deletes, segment_ids) -> dict[int, tuple]:
 
 
 def _score_segments(
-    post: pd.DataFrame,
+    post: pa.Table,
     doclens,
     deletes,
     N: int,
     avgdl: float,
     k: int,
+    dfs: dict[str, int],
     bound_scale: float = 1.0,
     after: tuple[float, int] | None = None,
     per_term_round: bool = False,
-) -> pd.DataFrame:
-    """Score the pruned posting rows of any number of segments (the
-    ``_SCORE_COLS`` plus the query df as ``df``): one ``_sidecar_rows``
-    point read for all of them, then ``_score_segment`` per segment.
-    Returns every segment's hits, concatenated. Both sides of
-    ``IndexReader`` score through here — the driver in-process, the
-    Spark side once per task — so a segment missing from the sidecar
-    yields no hits on either."""
-    if not len(post):
+) -> tuple[np.ndarray, np.ndarray]:
+    """Score the pruned posting rows (the ``_SCORE_COLS``, in any row
+    order) of any number of segments, with the query's delete-adjusted
+    ``dfs``: one ``_sidecar_rows`` point read for all of them, then
+    ``_score_segment`` per segment → every segment's (doc_ids, scores),
+    concatenated. Both sides of ``IndexReader`` score through here — the
+    driver in-process, the Spark side once per task — so a segment
+    missing from the sidecar yields no hits on either.
+
+    The columns stay numpy arrays throughout: ``term`` is dictionary
+    encoded once and its dictionary ranked in string order, one lexsort
+    over (segment_id, term rank, block_no) orders the rows, and each
+    (segment, term) run goes to ``_score_segment`` as column slices."""
+    if not post.num_rows:
         return _no_hits()
-    side = _sidecar_rows(doclens, deletes, post["segment_id"].unique())
-    return pd.concat(
-        [
-            _score_segment(
-                grp, side.get(int(sid)), N, avgdl, k,
+    enc = post["term"].combine_chunks().dictionary_encode()
+    names = enc.dictionary.to_pylist()
+    words = sorted(names)
+    rank = {w: i for i, w in enumerate(words)}
+    tr = np.array([rank[w] for w in names])[enc.indices.to_numpy()]
+    seg = post["segment_id"].to_numpy()
+    order = np.lexsort((post["block_no"].to_numpy(), tr, seg))
+    seg, tr = seg[order], tr[order]
+    cols = {c: post[c].to_numpy()[order] for c in _RUN_COLS}
+    n = len(order)
+    starts = np.flatnonzero(
+        np.concatenate(([True], (seg[1:] != seg[:-1]) | (tr[1:] != tr[:-1])))
+    )
+    ends = np.append(starts[1:], n)
+    side = _sidecar_rows(doclens, deletes, np.unique(seg))
+    hits, runs = [], []
+    for s, e in zip(starts, ends):
+        t = words[tr[s]]
+        runs.append((t, dfs[t], {c: v[s:e] for c, v in cols.items()}))
+        if e == n or seg[e] != seg[s]:  # the segment's last run
+            hits.append(_score_segment(
+                runs, side.get(int(seg[s])), N, avgdl, k,
                 bound_scale=bound_scale, after=after,
                 per_term_round=per_term_round,
-            )
-            for sid, grp in post.groupby("segment_id")
-        ]
-    )
+            ))
+            runs = []
+    ids, scores = zip(*hits)
+    return np.concatenate(ids), np.concatenate(scores)
 
 
 def _doc_lens(doclens, ids: np.ndarray, dps: int) -> np.ndarray:
@@ -520,8 +544,8 @@ class IndexReader:
     queries whose summed df is at or under ``_DRIVER_SCORE_MAX_DF``, the
     pruned postings and their sidecar rows are pyarrow reads scored on
     the driver (see the module docstring). Larger queries plan the Spark
-    scorer: one exchange, the df as a literal map, and each task
-    point-reading its own segments' sidecar rows — the same plan on
+    scorer: one exchange, the df map in the scoring closure, and each
+    task point-reading its own segments' sidecar rows — the same plan on
     clean and tombstoned readers.
 
     Every Spark-side posting read starts from ``_postings_scan`` (the
@@ -585,23 +609,25 @@ class IndexReader:
     def _term_stats(self) -> DataFrame:
         return self._frame("term_stats/data")
 
-    def _by_segment(self, postings: DataFrame) -> DataFrame:
-        """Pin the per-segment decode exchange width: AQE's byte-based
+    def _by_segment(self, postings: DataFrame, sum_df: int | None = None):
+        """Pin the per-segment exchange width: AQE's byte-based
         coalescing folds the few-MB pruned posting shuffles to a single
-        partition, serializing every per-segment decode — but each task
-        also costs a python round-trip, so width derives from WORK
-        (segments / _SEGMENTS_PER_SCORE_TASK) capped at cluster width.
-        An explicit repartition on segment_id is exempt from AQE
-        coalescing, and a groupBy on the same key reuses it (no second
-        exchange). Execution width only, values unchanged."""
+        partition, serializing every per-segment step — but each task
+        also costs a python round-trip, so width derives from WORK: the
+        scorer's summed df ``sum_df`` / _DF_PER_SCORE_TASK, or (no
+        ``sum_df``, the decode operators) segments /
+        _SEGMENTS_PER_DECODE_TASK, capped at the segment count and the
+        cluster width. An explicit repartition on segment_id is exempt
+        from AQE coalescing, and a groupBy on the same key reuses it (no
+        second exchange). Execution width only, values unchanged."""
         n_segments = max(1, -(-self.N // self.dps))
-        width = max(
-            1,
-            min(
-                self.spark.sparkContext.defaultParallelism,
-                -(-n_segments // _SEGMENTS_PER_SCORE_TASK),
-            ),
+        tasks = (
+            -(-n_segments // _SEGMENTS_PER_DECODE_TASK)
+            if sum_df is None
+            else -(-sum_df // _DF_PER_SCORE_TASK)
         )
+        dop = self.spark.sparkContext.defaultParallelism
+        width = max(1, min(dop, n_segments, tasks))
         return postings.repartition(width, "segment_id")
 
     def _buckets_for(self, terms: list[str]) -> dict[str, int]:
@@ -696,22 +722,19 @@ class IndexReader:
         """The driver side of ``search``: one pyarrow read of the pruned
         postings, scored in-process by ``_score_segments``, then the
         per-segment top-k merged by (score desc, doc_id asc). The result
-        is a local relation: collecting it runs no Spark job."""
+        is a local relation built from an Arrow table: collecting it runs
+        no Spark job."""
         post = self._pa("postings/data").to_table(
             columns=_SCORE_COLS, filter=self._term_filter(terms)
-        ).to_pandas()
-        post["df"] = post["term"].map(dfs)
-        hits = _score_segments(
-            post, *self._sidecars(), self.N, self.avgdl, k,
+        )
+        ids, scores = _select_topk(*_score_segments(
+            post, *self._sidecars(), self.N, self.avgdl, k, dfs,
             bound_scale=self.bound_scale, after=after,
-        )
-        if not len(hits):
+        ), k)
+        if not len(ids):
             return _empty(self.spark, TOPK_SCHEMA)
-        ids, scores = _select_topk(
-            hits["doc_id"].to_numpy(), hits["score"].to_numpy(), k
-        )
         return self.spark.createDataFrame(
-            pd.DataFrame({"doc_id": ids, "score": scores}), TOPK_SCHEMA
+            pa.table({"doc_id": ids, "score": scores}), TOPK_SCHEMA
         )
 
     def _scored_per_segment(
@@ -723,37 +746,32 @@ class IndexReader:
         dfs: dict[str, int] | None = None,
     ) -> DataFrame:
         """The Spark scoring plan: pruned posting read (the ``_SCORE_COLS``)
-        → the delete-adjusted df as a literal map → one ``_by_segment``
-        exchange → ``_score_segments`` over each task's rows. Each task
-        point-reads its own segments' sidecar rows, so the plan is scan →
-        exchange → score on clean and tombstoned readers alike: no join,
-        no broadcast. No global sort/limit — callers add their own cut
-        (top-k, cursor page, or none for exhaustive scoring). ``dfs``:
-        the query's ``term_dfs``, when the caller already has it."""
+        → one ``_by_segment`` exchange → ``_score_segments`` over each
+        task's Arrow batches (``mapInArrow``), with the delete-adjusted df
+        map in the closure. Each task point-reads its own segments'
+        sidecar rows, so the plan is scan → exchange → score on clean and
+        tombstoned readers alike: no join, no broadcast. No global
+        sort/limit — callers add their own cut (top-k, cursor page, or
+        none for exhaustive scoring). ``dfs``: the query's ``term_dfs``,
+        when the caller already has it."""
         if dfs is None:
             dfs = self.term_dfs(terms)
-        if dfs:
-            df_col = F.create_map(
-                *[x for t in sorted(dfs) for x in (F.lit(t), F.lit(int(dfs[t])))]
-            )[F.col("term")].cast("long")
-        else:
-            # no query term exists in the index — the pruned scan yields
-            # zero rows anyway; a null literal keeps the plan shape
-            df_col = F.lit(None).cast("long")
-        postings = self._postings_scan(terms).withColumn("df", df_col)
         doclens, deletes = self._sidecars()
         N, avgdl, bscale = self.N, self.avgdl, self.bound_scale
 
         def score(it):
             batches = list(it)
             if batches:
-                yield _score_segments(
-                    pd.concat(batches), doclens, deletes, N, avgdl, k,
-                    bound_scale=bscale, after=after,
+                ids, scores = _score_segments(
+                    pa.Table.from_batches(batches), doclens, deletes, N,
+                    avgdl, k, dfs, bound_scale=bscale, after=after,
                     per_term_round=per_term_round,
                 )
+                yield pa.record_batch({"doc_id": ids, "score": scores})
 
-        return self._by_segment(postings).mapInPandas(score, TOPK_SCHEMA)
+        return self._by_segment(
+            self._postings_scan(terms), sum(dfs.values())
+        ).mapInArrow(score, TOPK_SCHEMA)
 
     def search(
         self,

@@ -13,8 +13,13 @@ so that constant can be re-derived on other hardware:
 3. times ``search(q, k).collect()`` on each side, interleaved query by
    query and repeat by repeat (the side that goes first alternates), and
    checks both sides return the same rows;
-4. prints one JSON line per Σdf band with both p50s, then the largest
-   band edge at which the driver is still no slower.
+4. times the driver side once more per query and repeat with its calls
+   wrapped, for the median of each phase: ``term_dfs``, the pruned
+   postings read, ``_score_segments`` (sidecar read included), the
+   local-relation create and ``collect``;
+5. prints one JSON line per Σdf band with both p50s and the driver
+   side's phase medians, then the largest band edge at which the driver
+   is still no slower.
 
 Usage:
     python scripts/topk_crossover.py [--docs 200000] [--index-dir DIR]
@@ -26,6 +31,7 @@ A reused ``--index-dir`` skips the build (checkpoint resume).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import statistics
 import sys
@@ -40,6 +46,43 @@ sys.path.insert(0, str(REPO))
 BANDS = [0, 1_000, 3_000, 10_000, 30_000, 100_000, 200_000, 300_000,
          500_000, 1_000_000, 1_500_000, 2_000_000, 3_000_000, 5_000_000,
          10_000_000]
+
+
+# the driver side's phases of one search, in call order
+PHASES = ["term_dfs", "postings_read", "score", "create", "collect"]
+
+
+@contextlib.contextmanager
+def _driver_phases(rd, topk):
+    """Wrap the calls the driver side of ``rd.search`` makes, so each
+    call's wall ms lands in the yielded {phase: [ms]} (``collect`` is the
+    caller's to time). Restores every wrapped call on exit."""
+    ms: dict[str, list[float]] = {p: [] for p in PHASES}
+
+    def timed(phase, fn):
+        def run(*args, **kw):
+            t0 = time.perf_counter()
+            try:
+                return fn(*args, **kw)
+            finally:
+                ms[phase].append((time.perf_counter() - t0) * 1e3)
+        return run
+
+    postings, real_pa = rd._pa("postings/data"), rd._pa
+
+    class TimedPostings:
+        to_table = staticmethod(timed("postings_read", postings.to_table))
+
+    real_score = topk._score_segments
+    rd.term_dfs = timed("term_dfs", rd.term_dfs)
+    rd._pa = lambda sub: TimedPostings if sub == "postings/data" else real_pa(sub)
+    rd.spark.createDataFrame = timed("create", rd.spark.createDataFrame)
+    topk._score_segments = timed("score", real_score)
+    try:
+        yield ms
+    finally:
+        del rd.term_dfs, rd._pa, rd.spark.createDataFrame
+        topk._score_segments = real_score
 
 
 def _queries(seed: int = 3) -> list[list[str]]:
@@ -122,8 +165,16 @@ def main() -> None:
                     lat[side].append(ms)
                 if got["driver"] != got["spark"]:
                     raise SystemExit(f"driver/spark answers differ for {q!r}")
+            topk._DRIVER_SCORE_MAX_DF = sides["driver"]
+            with _driver_phases(rd, topk) as ph:
+                for _ in range(args.repeats):
+                    df = rd.search(q, k=args.k)
+                    t = time.perf_counter()
+                    df.collect()
+                    ph["collect"].append((time.perf_counter() - t) * 1e3)
+            phases = {p: statistics.median(v) for p, v in ph.items() if v}
             rows_out.append((sdf, statistics.median(lat["driver"]),
-                             statistics.median(lat["spark"])))
+                             statistics.median(lat["spark"]), phases))
             print(json.dumps({"query": q, "sum_df": sdf,
                               "driver_p50_ms": round(rows_out[-1][1], 1),
                               "spark_p50_ms": round(rows_out[-1][2], 1)}),
@@ -139,10 +190,16 @@ def main() -> None:
             continue
         d = statistics.median(r[1] for r in band)
         s = statistics.median(r[2] for r in band)
+        phases = {
+            p: round(statistics.median(v), 1)
+            for p in PHASES
+            if (v := [r[3][p] for r in band if p in r[3]])
+        }
         print(json.dumps({"sum_df_band": [lo, hi], "n": len(band),
                           "driver_p50_ms": round(d, 1),
                           "spark_p50_ms": round(s, 1),
-                          "driver_over_spark": round(d / s, 2)}))
+                          "driver_over_spark": round(d / s, 2),
+                          "driver_phase_p50_ms": phases}))
         driver_wins = driver_wins and d <= s
         if driver_wins:
             crossover = hi

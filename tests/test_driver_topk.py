@@ -6,6 +6,9 @@ Contracts:
   under ``_DRIVER_SCORE_MAX_DF``) or in the Spark plan, on clean and
   tombstoned indexes, for k ∈ {1, 10, 10^6} and for cursor pages;
 - opening a reader and answering a small search run zero Spark jobs;
+- ``_score_segments`` gives the same hits whatever order and batching
+  the posting rows arrive in (an exchange delivers them as shuffled
+  record batches);
 - a segment missing from the doclens sidecar yields no hits on either
   side, and the phrase scorer's lens lookup raises a named error instead
   of reading a neighbouring segment's lengths;
@@ -18,6 +21,7 @@ from __future__ import annotations
 import shutil
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
@@ -115,6 +119,75 @@ def test_open_and_small_search_run_no_spark_job(
         n_jobs = jobs_in(lambda: rows.extend(_rows(rd.search(q, k=k))))
         assert n_jobs == 0, q
         assert rows == (score_query(oracle, q, k=k) if k else []), q
+
+
+def _arrived(post: pa.Table, rng, n_batches: int = 5) -> pa.Table:
+    """``post``'s rows in shuffled order, cut into ``n_batches`` record
+    batches, as an exchange hands them to a scoring task."""
+    n = post.num_rows
+    cuts = np.sort(rng.choice(np.arange(1, n), n_batches - 1, replace=False))
+    rows = post.take(rng.permutation(n))
+    return pa.Table.from_batches(
+        [
+            b
+            for s, e in zip([0, *cuts], [*cuts, n])
+            for b in rows.slice(s, e - s).to_batches()
+        ]
+    )
+
+
+ARRIVAL_QUERY = "the keta for and"
+
+
+@pytest.mark.parametrize("which", ["clean", "tomb"])
+@pytest.mark.parametrize("mode", ["top10", "after", "per_term_round"])
+def test_score_segments_ignores_arrival_order(spark, indexes, which, mode):
+    """A multi-segment, multi-term pruned table scored as shuffled record
+    batches gives exactly the hits of the sorted whole table, and the
+    oracle's: the scorer orders the rows itself."""
+    idx, oracle = indexes[which]
+    rd = IndexReader(spark, idx)
+    terms = sorted(set(tokenize_py(ARRIVAL_QUERY, rd.profile)))
+    dfs = rd.term_dfs(terms)
+    post = rd._pa("postings/data").to_table(
+        columns=topk._SCORE_COLS, filter=rd._term_filter(terms)
+    )
+    assert len(set(post["segment_id"].to_pylist())) > 1
+    assert len(set(post["term"].to_pylist())) == len(terms) > 1
+    whole = post.sort_by(
+        [(c, "ascending") for c in ("segment_id", "term", "block_no")]
+    )
+    arrived = _arrived(post, np.random.default_rng(7))
+    assert arrived["term"].num_chunks == 5
+
+    k, after = 10, None
+    want = score_query(oracle, ARRIVAL_QUERY, k=k)
+    if mode == "after":
+        page = score_query(oracle, ARRIVAL_QUERY, k=25)
+        k, after, want = 15, (page[9][1], page[9][0]), page[10:25]
+    elif mode == "per_term_round":
+        # the or_scores clause ladder, every match: round(Σ round(s_t, 9), 9)
+        k, ladder = 10**6, {}
+        for t in terms:
+            for d, sc in score_query(oracle, t, k=k):
+                ladder[d] = ladder.get(d, 0.0) + sc
+        want = {d: round(sc, 9) for d, sc in ladder.items()}
+
+    def score(tbl):
+        return topk._score_segments(
+            tbl, *rd._sidecars(), rd.N, rd.avgdl, k, dfs,
+            bound_scale=rd.bound_scale, after=after,
+            per_term_round=mode == "per_term_round",
+        )
+
+    got = score(arrived)
+    for a, w in zip(got, score(whole)):
+        np.testing.assert_array_equal(a, w)
+    top = list(zip(*(a.tolist() for a in topk._select_topk(*got, k))))
+    if mode == "per_term_round":
+        assert dict(top) == pytest.approx(want, abs=1e-9)
+    else:
+        assert top == want
 
 
 def _drop_doclens_row(idx, segment_id: int) -> None:

@@ -7,12 +7,14 @@ story depends on, asserted on the actual executed plans (not docstrings).
   the Spark side (forced past the driver-side Σdf cap), and the driver
   side's pyarrow reads must open only the query's term_bucket dirs;
 - a search() plan is one exchange and no join, on clean and tombstoned
-  readers alike (the df is a literal map, the sidecar a per-task point
-  read);
+  readers alike (the df map rides the scoring closure, the sidecar is a
+  per-task point read);
 - ANN index queries list only the probed partition directories.
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -55,8 +57,9 @@ def tomb_reader(spark, tmp_path_factory):
 def test_search_plan_prunes_one_exchange_no_join(request, monkeypatch, which):
     """The Spark side of search() (forced past the driver-side cap) has
     one plan shape with and without tombstones: a pruned postings scan,
-    the df as a literal map, one pinned-width exchange by segment, and
-    the per-task scorer reading its own sidecar rows — no join."""
+    one pinned-width exchange by segment, and the per-task Arrow scorer
+    (the df map in its closure) reading its own sidecar rows — no
+    join."""
     monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
     rd = request.getfixturevalue("reader" if which == "clean" else "tomb_reader")
     assert rd.has_deletes == (which == "tomb")
@@ -132,6 +135,34 @@ def test_decode_plan_prunes_one_segment_exchange(pos_reader, op):
     assert plan.count("Exchange hashpartitioning(segment_id") == 1
     if op != "bool_docs_msm":
         assert plan.count("Exchange") == 1
+
+
+def _exchange_width(df) -> int:
+    """Task count of a plan's one segment exchange (1 = SinglePartition)."""
+    m = re.search(
+        r"Exchange (?:SinglePartition|hashpartitioning\(segment_id#\w+, (\d+)\))",
+        _plan(df),
+    )
+    return int(m[1] or 1)
+
+
+def test_segment_exchange_width_follows_work(spark, pos_reader, monkeypatch):
+    """The scorer's segment exchange takes one task per
+    ``_DF_PER_SCORE_TASK`` postings of the query terms; the decode
+    operators' one per ``_SEGMENTS_PER_DECODE_TASK`` segments; both
+    capped at the segment count (19 here) and the cluster width."""
+    monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
+    rd = pos_reader
+    n_seg = -(-rd.N // rd.dps)
+    cap = min(spark.sparkContext.defaultParallelism, n_seg)
+    sum_df = sum(rd.term_dfs(["the", "keta"]).values())
+    assert n_seg == 19 and sum_df > cap
+    for per, want in [(sum_df, 1), (-(-sum_df // 2), 2), (1, cap)]:
+        monkeypatch.setattr(topk, "_DF_PER_SCORE_TASK", per)
+        assert _exchange_width(rd.search("the keta", k=5)) == want, per
+        assert _exchange_width(rd.score_matches("the keta")) == want, per
+    want = min(cap, -(-n_seg // topk._SEGMENTS_PER_DECODE_TASK))
+    assert _exchange_width(rd.match_docs("the keta", "or")) == want
 
 
 def test_bucket_pruning_reads_file_subset(reader):

@@ -145,13 +145,18 @@ def _decode_positions_batch(rows, tfs: np.ndarray) -> np.ndarray:
 # index layout.
 POS_BITS = 20
 
-# segment-exchange sizing (see IndexReader._by_segment): each task pays a
-# fixed python-worker round-trip, so width derives from WORK. The scorer
-# takes one task per this many postings of the query terms (Σdf); the
-# decode operators, which pay an applyInPandas group per segment, one per
-# this many segments. From in-session A/Bs on 8- and 25-segment indexes
-# at local[4]: Σdf sizing won the scorer's bands, and lost the decode
-# operators' on 25 segments (1.06× below Σdf 100k) (CHANGES.md)
+# segment-exchange widths (see IndexReader._by_segment), capped there at
+# the segment count and the cluster width: each task pays a fixed
+# python-worker round-trip, so width follows work. The scorer takes one
+# task per this many postings of the query terms (Σdf). search() reaches
+# it only above _DRIVER_SCORE_MAX_DF, i.e. above 20 tasks, the cap on any
+# cluster up to 20 wide; so the constant sizes the exhaustive scorers
+# (score_matches, or_scores and their callers). Against the cap alone,
+# in-session A/Bs of score_matches/or_scores at local[4] on 8 and 25
+# segments measured 0.80× and 0.88× p50 below Σdf 100k, and 0.95× and
+# 1.00× at 0.1-0.5M (CHANGES.md). The decode operators, which pay an
+# applyInPandas group per segment, take one task per this many segments;
+# Σdf sizing made match_docs 1.06× slower below Σdf 100k on 25 segments.
 _DF_PER_SCORE_TASK = 100_000
 _SEGMENTS_PER_DECODE_TASK = 8
 
@@ -609,25 +614,20 @@ class IndexReader:
     def _term_stats(self) -> DataFrame:
         return self._frame("term_stats/data")
 
-    def _by_segment(self, postings: DataFrame, sum_df: int | None = None):
-        """Pin the per-segment exchange width: AQE's byte-based
+    @property
+    def _n_segments(self) -> int:
+        return max(1, -(-self.N // self.dps))
+
+    def _by_segment(self, postings: DataFrame, tasks: int) -> DataFrame:
+        """Pin the per-segment exchange at the caller's ``tasks``, capped
+        at the segment count and the cluster width: AQE's byte-based
         coalescing folds the few-MB pruned posting shuffles to a single
-        partition, serializing every per-segment step — but each task
-        also costs a python round-trip, so width derives from WORK: the
-        scorer's summed df ``sum_df`` / _DF_PER_SCORE_TASK, or (no
-        ``sum_df``, the decode operators) segments /
-        _SEGMENTS_PER_DECODE_TASK, capped at the segment count and the
-        cluster width. An explicit repartition on segment_id is exempt
-        from AQE coalescing, and a groupBy on the same key reuses it (no
-        second exchange). Execution width only, values unchanged."""
-        n_segments = max(1, -(-self.N // self.dps))
-        tasks = (
-            -(-n_segments // _SEGMENTS_PER_DECODE_TASK)
-            if sum_df is None
-            else -(-sum_df // _DF_PER_SCORE_TASK)
-        )
+        partition, serializing every per-segment step. An explicit
+        repartition on segment_id is exempt from AQE coalescing, and a
+        groupBy on the same key reuses it (no second exchange).
+        Execution width only, values unchanged."""
         dop = self.spark.sparkContext.defaultParallelism
-        width = max(1, min(dop, n_segments, tasks))
+        width = max(1, min(dop, self._n_segments, tasks))
         return postings.repartition(width, "segment_id")
 
     def _buckets_for(self, terms: list[str]) -> dict[str, int]:
@@ -678,7 +678,10 @@ class IndexReader:
         if not terms:
             return _empty(self.spark, schema)
         out = (
-            self._by_segment(self._postings_scan(terms, positions))
+            self._by_segment(
+                self._postings_scan(terms, positions),
+                -(-self._n_segments // _SEGMENTS_PER_DECODE_TASK),
+            )
             .groupBy("segment_id")
             .applyInPandas(fn, schema)
         )
@@ -770,7 +773,7 @@ class IndexReader:
                 yield pa.record_batch({"doc_id": ids, "score": scores})
 
         return self._by_segment(
-            self._postings_scan(terms), sum(dfs.values())
+            self._postings_scan(terms), -(-sum(dfs.values()) // _DF_PER_SCORE_TASK)
         ).mapInArrow(score, TOPK_SCHEMA)
 
     def search(

@@ -33,26 +33,30 @@ terms (known after step 2, before any posting is read):
   from Σdf), and each task scores its segments in a ``mapInArrow`` step
   — no join, the same plan with and without tombstones.
 Both sides hand their postings to the same ``_score_segments`` as an
-Arrow table, with the query's df map: it orders the rows into (segment,
-term) runs with one lexsort, point-reads those segments' sidecar rows
-(doclens lens blob plus the tombstone blob) straight from the index
-files with pyarrow and calls ``_score_segment`` per segment on numpy
-column slices, with the same df, N, avgdl and bounds — so they are
-rank-identical; only where the work runs differs. No pandas frame is
-built on the scoring path. Lens bytes never cross an exchange, a
-broadcast or a join. The executor-side read assumes the index dir is a
-POSIX path visible to the workers, as the driver-side reads already do.
+Arrow table, with the query's df map: ``_segment_runs`` orders the rows
+into (segment, term) runs with one lexsort, ``_sidecar_rows`` point-reads
+those segments' sidecar rows (doclens lens blob plus the tombstone blob)
+straight from the index files with pyarrow, and ``_score_segment`` runs
+per segment on numpy column slices, with the same df, N, avgdl and
+bounds — so they are rank-identical; only where the work runs differs.
+Lens bytes never cross an exchange, a broadcast or a join. The
+executor-side read assumes the index dir is a POSIX path visible to the
+workers, as the driver-side reads already do.
 
 The unscored posting operators (``match_docs``, ``term_freqs``,
 ``term_positions`` and the phrase/span verifier under ``phrase_docs``)
-share one plan, built by ``IndexReader._per_segment``: the same pruned
-scan as the Spark scorer (``_postings_scan``), one ``_by_segment``
-exchange, then the operator's set-algebra function per segment, with
-tombstoned ids stripped once at the end. Every site — the scorer
-included — decodes through the same two column-fed decoders,
-``_decode_blocks_batch`` and ``_decode_positions_batch``, which read the
-posting rows' columns directly. An operator whose input yields no terms
-returns an empty local relation that runs no Spark job (``_empty``).
+run on the Spark scorer's plan and data shape, built by
+``IndexReader._per_segment``: the same pruned scan (``_postings_scan``),
+one ``_by_segment`` exchange, then ``mapInArrow``. Each task cuts its
+rows with the same ``_segment_runs``, hands each segment's runs to the
+operator's set-algebra function and masks the segment's tombstoned ids
+out of its output with the ``deleted`` blob of the scorer's point read
+(``_deleted_blobs``) — no join, no sort, the same plan on clean and
+tombstoned readers. Every site decodes through the same two column-fed
+decoders, ``_decode_blocks_batch`` and ``_decode_positions_batch``. An
+operator whose input yields no terms returns an empty local relation
+that runs no Spark job (``_empty``). No pandas frame is built anywhere
+in this module.
 
 Determinism contract: per-term contributions accumulate in ascending-term
 order in float64 and final scores round to 9 decimals — identical to the
@@ -61,11 +65,12 @@ oracle — so ranking is reproducible across parallelism levels.
 
 from __future__ import annotations
 
+from collections import Counter
 from pathlib import Path
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -88,10 +93,9 @@ _DOC_IDS = T.StructType([T.StructField("doc_id", T.LongType(), False)])
 
 def _decode_blocks_batch(rows) -> tuple[np.ndarray, np.ndarray]:
     """Decode MANY posting blocks in one shot → (doc_ids, tfs), block by
-    block in row order. ``rows`` holds the posting rows' columns — a
-    pandas frame, or any mapping of column name → per-block sequence —
-    of which this reads ``first_doc_id``, ``count``, ``doc_deltas`` and
-    ``tfs``.
+    block in row order. ``rows`` maps posting column names to per-block
+    sequences (a run's numpy column slices); this reads
+    ``first_doc_id``, ``count``, ``doc_deltas`` and ``tfs``.
 
     Per-block Python loops cost ~1 ms/block, which dominates latency for
     mid-frequency terms (thousands of blocks). Here the concatenated
@@ -154,9 +158,10 @@ POS_BITS = 20
 # (score_matches, or_scores and their callers). Against the cap alone,
 # in-session A/Bs of score_matches/or_scores at local[4] on 8 and 25
 # segments measured 0.80× and 0.88× p50 below Σdf 100k, and 0.95× and
-# 1.00× at 0.1-0.5M (CHANGES.md). The decode operators, which pay an
-# applyInPandas group per segment, take one task per this many segments;
-# Σdf sizing made match_docs 1.06× slower below Σdf 100k on 25 segments.
+# 1.00× at 0.1-0.5M (CHANGES.md). The decode operators take one task per
+# this many segments: on their mapInArrow plan, Σdf sizing (its term_dfs
+# read included) measured 1.03× and 1.07× p50 below and above Σdf 100k on
+# 8 segments, and 0.82× and 1.01× on 25 (match_docs/term_positions).
 _DF_PER_SCORE_TASK = 100_000
 _SEGMENTS_PER_DECODE_TASK = 8
 
@@ -426,32 +431,64 @@ _SCORE_COLS = [
 _RUN_COLS = _SCORE_COLS[3:]
 
 
+def _deleted_blobs(deletes, segment_ids) -> dict[int, bytes]:
+    """Point read of the given segments' tombstone blobs from the reader's
+    ``deletes/segments/data`` dataset → {segment_id: deleted}; a segment
+    without tombstones has no entry. Datasets pickle with their file
+    listing, so executors read the files the reader listed."""
+    filt = ds.field("segment_id").isin(np.asarray(segment_ids, np.int64))
+    d = deletes.to_table(columns=["segment_id", "deleted"], filter=filt)
+    return dict(zip(d["segment_id"].to_pylist(), d["deleted"].to_pylist()))
+
+
 def _sidecar_rows(doclens, deletes, segment_ids) -> dict[int, tuple]:
     """Point read of the given segments' sidecar rows from the reader's
     ``doclens/data`` dataset → {segment_id: (start_doc_id, lens, deleted)}:
-    ``deleted`` is the segment's tombstone blob, looked up by segment id
-    in ``deletes/segments/data`` when that dataset is given, else None.
-    A segment missing from the doclens files has no entry. The datasets
-    pickle with their file listing, so executors read the same files the
-    reader listed without listing again."""
-    import pyarrow.dataset as ds
-
+    ``deleted`` is the segment's ``_deleted_blobs`` entry, None without
+    one or without a ``deletes`` dataset. A segment missing from the
+    doclens files has no entry."""
     filt = ds.field("segment_id").isin(np.asarray(segment_ids, np.int64))
     side = doclens.to_table(
         columns=["segment_id", "start_doc_id", "lens"], filter=filt
     ).to_pydict()
-    dele = {}
-    if deletes is not None:
-        d = deletes.to_table(
-            columns=["segment_id", "deleted"], filter=filt
-        ).to_pydict()
-        dele = dict(zip(d["segment_id"], d["deleted"]))
+    dele = {} if deletes is None else _deleted_blobs(deletes, segment_ids)
     return {
         sid: (start, lens, dele.get(sid))
         for sid, start, lens in zip(
             side["segment_id"], side["start_doc_id"], side["lens"]
         )
     }
+
+
+def _segment_runs(post: pa.Table, cols: list[str]):
+    """The one run-cut of the scorer and every decode operator: pruned
+    posting rows in any order and batching → ``(segment_id, runs)`` per
+    segment, ascending; ``runs`` = one ``(term, cols)`` per term,
+    ascending, ``cols`` = the ``cols`` columns of that term's blocks as
+    numpy slices in block_no order. ``term`` is dictionary encoded and
+    ranked once; one lexsort over (segment_id, term rank, block_no)."""
+    if not post.num_rows:
+        return
+    enc = post["term"].combine_chunks().dictionary_encode()
+    names = enc.dictionary.to_pylist()
+    words = sorted(names)
+    rank = {w: i for i, w in enumerate(words)}
+    tr = np.array([rank[w] for w in names])[enc.indices.to_numpy()]
+    seg = post["segment_id"].to_numpy()
+    order = np.lexsort((post["block_no"].to_numpy(), tr, seg))
+    seg, tr = seg[order], tr[order]
+    arrs = {c: post[c].to_numpy()[order] for c in cols}
+    n = len(order)
+    starts = np.flatnonzero(
+        np.concatenate(([True], (seg[1:] != seg[:-1]) | (tr[1:] != tr[:-1])))
+    )
+    ends = np.append(starts[1:], n)
+    runs = []
+    for s, e in zip(starts, ends):
+        runs.append((words[tr[s]], {c: v[s:e] for c, v in arrs.items()}))
+        if e == n or seg[e] != seg[s]:  # the segment's last run
+            yield int(seg[s]), runs
+            runs = []
 
 
 def _score_segments(
@@ -469,45 +506,59 @@ def _score_segments(
     """Score the pruned posting rows (the ``_SCORE_COLS``, in any row
     order) of any number of segments, with the query's delete-adjusted
     ``dfs``: one ``_sidecar_rows`` point read for all of them, then
-    ``_score_segment`` per segment → every segment's (doc_ids, scores),
-    concatenated. Both sides of ``IndexReader`` score through here — the
-    driver in-process, the Spark side once per task — so a segment
-    missing from the sidecar yields no hits on either.
-
-    The columns stay numpy arrays throughout: ``term`` is dictionary
-    encoded once and its dictionary ranked in string order, one lexsort
-    over (segment_id, term rank, block_no) orders the rows, and each
-    (segment, term) run goes to ``_score_segment`` as column slices."""
+    ``_score_segment`` per segment on the ``_segment_runs`` cut, each run
+    with its df → every segment's (doc_ids, scores), concatenated. Both
+    sides of ``IndexReader`` score through here — the driver in-process,
+    the Spark side once per task — so a segment missing from the sidecar
+    yields no hits on either."""
     if not post.num_rows:
         return _no_hits()
-    enc = post["term"].combine_chunks().dictionary_encode()
-    names = enc.dictionary.to_pylist()
-    words = sorted(names)
-    rank = {w: i for i, w in enumerate(words)}
-    tr = np.array([rank[w] for w in names])[enc.indices.to_numpy()]
-    seg = post["segment_id"].to_numpy()
-    order = np.lexsort((post["block_no"].to_numpy(), tr, seg))
-    seg, tr = seg[order], tr[order]
-    cols = {c: post[c].to_numpy()[order] for c in _RUN_COLS}
-    n = len(order)
-    starts = np.flatnonzero(
-        np.concatenate(([True], (seg[1:] != seg[:-1]) | (tr[1:] != tr[:-1])))
+    side = _sidecar_rows(
+        doclens, deletes, np.unique(post["segment_id"].to_numpy())
     )
-    ends = np.append(starts[1:], n)
-    side = _sidecar_rows(doclens, deletes, np.unique(seg))
-    hits, runs = [], []
-    for s, e in zip(starts, ends):
-        t = words[tr[s]]
-        runs.append((t, dfs[t], {c: v[s:e] for c, v in cols.items()}))
-        if e == n or seg[e] != seg[s]:  # the segment's last run
-            hits.append(_score_segment(
-                runs, side.get(int(seg[s])), N, avgdl, k,
-                bound_scale=bound_scale, after=after,
-                per_term_round=per_term_round,
-            ))
-            runs = []
-    ids, scores = zip(*hits)
+    ids, scores = zip(*(
+        _score_segment(
+            [(t, dfs[t], cols) for t, cols in runs], side.get(seg), N,
+            avgdl, k, bound_scale=bound_scale, after=after,
+            per_term_round=per_term_round,
+        )
+        for seg, runs in _segment_runs(post, _RUN_COLS)
+    ))
     return np.concatenate(ids), np.concatenate(scores)
+
+
+def _decode_task(fn, schema: T.StructType, deletes, positions: bool):
+    """The per-task function of every unscored posting operator (see
+    ``IndexReader._per_segment``): pruned posting batches in any order →
+    one record batch of ``schema`` per segment, holding ``fn(runs)``
+    (None: no rows). With a ``deletes`` dataset each segment's output
+    loses the ids of its ``_deleted_blobs`` entry."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from ..plans.tombstones import decode_id_set
+
+    out_schema = to_arrow_schema(schema)
+    cols = _RUN_COLS + ["positions"] if positions else _RUN_COLS
+
+    def task(it):
+        batches = list(it)
+        if not batches:
+            return
+        post = pa.Table.from_batches(batches)
+        dead = {} if deletes is None else _deleted_blobs(
+            deletes, np.unique(post["segment_id"].to_numpy())
+        )
+        for seg, runs in _segment_runs(post, cols):
+            out = fn(runs)
+            if out is None:
+                continue
+            batch = pa.record_batch(out, schema=out_schema)
+            if seg in dead:
+                dead_ids = decode_id_set(bytes(dead[seg]))
+                batch = batch.filter(~np.isin(out["doc_id"], dead_ids))
+            yield batch
+
+    return task
 
 
 def _doc_lens(doclens, ids: np.ndarray, dps: int) -> np.ndarray:
@@ -555,8 +606,9 @@ class IndexReader:
 
     Every Spark-side posting read starts from ``_postings_scan`` (the
     pruning predicate lives there and, for pyarrow, in ``_term_filter``);
-    the unscored operators all plan through ``_per_segment``, the one
-    place that groups by segment and strips tombstoned ids. The Spark
+    the unscored operators all plan through ``_per_segment``, the
+    scorer's plan (scan → exchange → ``mapInArrow``) with each segment's
+    tombstoned ids masked in-task, as the scorer masks them. The Spark
     source DataFrames and the pyarrow dataset handles are built on first
     use and kept per reader, so file listings are reused across
     queries."""
@@ -591,8 +643,6 @@ class IndexReader:
         """pyarrow dataset over an index sub-directory (hive partitions
         become columns), listed once per reader."""
         if sub not in self._pa_cache:
-            import pyarrow.dataset as ds
-
             self._pa_cache[sub] = ds.dataset(
                 str(self.dir / sub), format="parquet", partitioning="hive"
             )
@@ -634,17 +684,18 @@ class IndexReader:
         # driver-side, bit-exact with F.pmod(F.xxhash64(term), B)
         return {t: spark_pmod_bucket(t, self.term_buckets) for t in terms}
 
+    @property
+    def _deletes(self):
+        """Tombstone blobs' dataset on a tombstoned reader, else None."""
+        return self._pa("deletes/segments/data") if self.has_deletes else None
+
     def _sidecars(self):
-        """The ``_sidecar_rows`` datasets: doclens, and the per-segment
-        tombstone blobs on a tombstoned reader (else None)."""
-        deletes = self._pa("deletes/segments/data") if self.has_deletes else None
-        return self._pa("doclens/data"), deletes
+        """The ``_sidecar_rows`` datasets: doclens and ``_deletes``."""
+        return self._pa("doclens/data"), self._deletes
 
     def _term_filter(self, terms: list[str]):
         """pyarrow filter mirroring the Spark scans' pushdown: term_bucket
         partition pruning plus the row-group min/max term predicate."""
-        import pyarrow.dataset as ds
-
         buckets = sorted(set(self._buckets_for(terms).values()))
         return ds.field("term_bucket").isin(buckets) & ds.field("term").isin(terms)
 
@@ -663,31 +714,25 @@ class IndexReader:
     def _per_segment(
         self, terms: list[str], fn, schema, positions: bool = False
     ) -> DataFrame:
-        """The one plan of every unscored posting operator: the pruned scan
-        of ``terms`` → one ``_by_segment`` exchange → ``fn`` per segment
-        (``groupBy("segment_id").applyInPandas``) → tombstoned ids
-        stripped. ``fn`` gets one segment's posting rows (all its query
-        terms — a doc's postings for every term live in one segment, so
-        set algebra never crosses segments), decodes them through
+        """The one plan of every unscored posting operator, the Spark
+        scorer's: the pruned scan of ``terms`` → one ``_by_segment``
+        exchange → ``mapInArrow(_decode_task)``, no join and no sort, with
+        or without tombstones. ``fn`` gets one segment's ``(term, cols)``
+        runs (a doc's postings for every term live in one segment, so set
+        algebra never crosses segments), decodes them through
         ``_decode_blocks_batch`` / ``_decode_positions_batch`` and returns
-        rows of ``schema``. One segment per call keeps peak memory per
-        segment when positions blobs are large. Tombstoned ids leave by
-        one anti-join on the delete set (AQE broadcasts it when small,
-        shuffle-joins when genuinely large). No terms → an empty frame
-        that runs no Spark job."""
+        a dict of ``schema``'s columns as arrays, or None. Memory: a task
+        holds its segments' encoded posting rows, as the scorer's does,
+        and decodes one segment at a time, each leaving as its own record
+        batch, so decoded positions never exceed one segment's. No terms
+        → an empty frame that runs no Spark job."""
         if not terms:
             return _empty(self.spark, schema)
-        out = (
-            self._by_segment(
-                self._postings_scan(terms, positions),
-                -(-self._n_segments // _SEGMENTS_PER_DECODE_TASK),
-            )
-            .groupBy("segment_id")
-            .applyInPandas(fn, schema)
-        )
-        if not self.has_deletes:
-            return out
-        return out.join(self._frame("deletes/doc_ids/data"), "doc_id", "left_anti")
+        task = _decode_task(fn, schema, self._deletes, positions)
+        return self._by_segment(
+            self._postings_scan(terms, positions),
+            -(-self._n_segments // _SEGMENTS_PER_DECODE_TASK),
+        ).mapInArrow(task, schema)
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Per-term global df, delete-adjusted on tombstoned readers.
@@ -866,6 +911,29 @@ class IndexReader:
             .drop("_rn")
         )
 
+    def _doc_terms(self, doc_id: int) -> Counter:
+        """Analyzed term counts of one indexed doc (tombstoned docs
+        included): a pyarrow point read of the doc_id-sorted ``docs/data``
+        files (row-group min/max pruning on doc_id), no Spark job. An id
+        the index never held raises ``ValueError``."""
+        tbl = self._pa("docs/data").to_table(
+            columns=["text"], filter=ds.field("doc_id") == doc_id
+        )
+        if not tbl.num_rows:
+            raise ValueError(f"doc_id {doc_id} not in index")
+        return Counter(tokenize_py(tbl["text"][0].as_py(), self.profile))
+
+    def _top_tfidf(self, tf: dict[str, int], n: int) -> list[str]:
+        """The ``n`` terms of ``tf`` with the highest tf·idf (idf from the
+        live index stats): 6-dp round, then term-asc tie-break, so a SQL
+        oracle reproduces the selection."""
+        dfs = self.term_dfs(sorted(tf))
+        ranked = sorted(
+            (-round(c * float(idf_np(self.N, dfs.get(t, 0))), 6), t)
+            for t, c in tf.items()
+        )
+        return [t for _, t in ranked[:n]]
+
     def more_like_this(
         self,
         doc_id: int,
@@ -877,32 +945,15 @@ class IndexReader:
         ``max_query_terms`` most characteristic terms by tf·idf (idf from
         the live index stats; 6-dp round then term-asc tie-break, so the
         selection is reproducible by a SQL oracle), then BM25-search their
-        OR and drop the seed doc. The seed text is ONE pruned row off the
-        docs sidecar; the tf·idf ranking is driver-side arithmetic over
-        ≤ a few hundred (term, df) rows."""
-        from collections import Counter
-
-        row = (
-            self.spark.read.parquet(str(self.dir / "docs/data"))
-            .where(F.col("doc_id") == doc_id)
-            .select("text")
-            .collect()
+        OR and drop the seed doc. The seed text is ONE pyarrow point read
+        off the docs sidecar (``_doc_terms``); the tf·idf ranking
+        (``_top_tfidf``) is driver-side arithmetic over ≤ a few hundred
+        (term, df) rows."""
+        tf = self._doc_terms(doc_id)
+        terms = self._top_tfidf(
+            {t: c for t, c in tf.items() if len(t) >= min_term_len},
+            max_query_terms,
         )
-        if not row:
-            raise ValueError(f"doc_id {doc_id} not in index")
-        tf = Counter(
-            t
-            for t in tokenize_py(row[0]["text"], self.profile)
-            if len(t) >= min_term_len
-        )
-        dfs = self.term_dfs(sorted(tf))
-        ranked = sorted(
-            (
-                (-round(c * float(idf_np(self.N, dfs.get(t, 0))), 6), t)
-                for t, c in tf.items()
-            ),
-        )[:max_query_terms]
-        terms = [t for _, t in ranked]
         if not terms:
             return _empty(self.spark, TOPK_SCHEMA)
         hits = self.search(" ".join(terms), k=k + 1)
@@ -926,22 +977,19 @@ class IndexReader:
         n_terms = len(terms)
         conj = mode == "and"
 
-        def collect_ids(pdf: pd.DataFrame) -> pd.DataFrame:
+        def collect_ids(runs):
             # AND: a segment missing any query term can't satisfy the
             # conjunction — check BEFORE decoding the terms it does have
-            if conj and pdf["term"].nunique() < n_terms:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-            per_term = [
-                _decode_blocks_batch(grp)[0]
-                for _, grp in pdf.groupby("term", sort=True)
-            ]
+            if conj and len(runs) < n_terms:
+                return None
+            per_term = [_decode_blocks_batch(cols)[0] for _, cols in runs]
             if conj:
                 acc = per_term[0]
                 for ids in per_term[1:]:
                     acc = np.intersect1d(acc, ids, assume_unique=True)
             else:
                 acc = np.unique(np.concatenate(per_term))
-            return pd.DataFrame({"doc_id": acc})
+            return {"doc_id": acc}
 
         return self._per_segment(terms, collect_ids, _DOC_IDS)
 
@@ -951,17 +999,22 @@ class IndexReader:
         and sorted by term within each bucket file, so the LIKE scan is a
         metadata read, never a corpus scan. ``max_terms`` mirrors ES's
         ``index.max_terms_count`` rewrite guard."""
-        rows = (
-            self._term_stats.where(F.col("term").startswith(prefix))
-            .select("term")
-            .limit(max_terms + 1)
-            .collect()
+        return self._expand(
+            self._term_stats.where(F.col("term").startswith(prefix)),
+            max_terms,
+            f"prefix {prefix!r} expands to more than {max_terms} terms "
+            "(raise max_terms, or use a longer prefix)",
         )
+
+    def _expand(
+        self, terms: DataFrame, max_terms: int, guard: str
+    ) -> list[str]:
+        """The sorted dictionary terms of a term-expansion frame, with the
+        rewrite guard: more than ``max_terms`` raises ``ValueError(guard)``
+        (reading at most one term past the cap)."""
+        rows = terms.select("term").limit(max_terms + 1).collect()
         if len(rows) > max_terms:
-            raise ValueError(
-                f"prefix {prefix!r} expands to more than {max_terms} terms "
-                "(raise max_terms, or use a longer prefix)"
-            )
+            raise ValueError(guard)
         return sorted(r["term"] for r in rows)
 
     def _docs_for_terms(self, terms: list[str]) -> DataFrame:
@@ -983,22 +1036,17 @@ class IndexReader:
             ]
         )
 
-        def collect_tfs(pdf: pd.DataFrame) -> pd.DataFrame:
+        def collect_tfs(runs):
             names, ids, tfs = zip(
-                *(
-                    (t, *_decode_blocks_batch(grp))
-                    for t, grp in pdf.groupby("term", sort=True)
-                )
+                *((t, *_decode_blocks_batch(cols)) for t, cols in runs)
             )
-            return pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(ids),
-                    "term": np.repeat(
-                        np.array(names, dtype=object), [len(i) for i in ids]
-                    ),
-                    "tf": np.concatenate(tfs),
-                }
-            )
+            return {
+                "doc_id": np.concatenate(ids),
+                "term": np.repeat(
+                    np.array(names, dtype=object), [len(i) for i in ids]
+                ),
+                "tf": np.concatenate(tfs),
+            }
 
         return self._per_segment(sorted(set(terms)), collect_tfs, out_schema)
 
@@ -1051,14 +1099,10 @@ class IndexReader:
                 if base is None
                 else base.join(s_docs, "doc_id", "left_semi")
             )
-        elif should:
-            s_docs = self.match_docs(" ".join(should), "or")
-            if base is None:
-                base = s_docs
-            else:
-                # should only boosts scoring in ES when must exists; in
-                # filter context it adds nothing — keep must as the filter
-                pass
+        elif should and base is None:
+            # should only boosts scoring in ES when must exists; in filter
+            # context it adds nothing there — must stays the filter
+            base = self.match_docs(" ".join(should), "or")
         if base is None:
             return _empty(self.spark, _DOC_IDS)
         if must_not:
@@ -1204,12 +1248,11 @@ class IndexReader:
         deletion-neighborhood read when the sidecar exists, else a
         length-window-prefiltered Levenshtein scan of the term
         dictionary (see ``_fuzzy_candidates``)."""
-        rows = self._fuzzy_candidates(term, max_edits).limit(
-            max_terms + 1
-        ).collect()
-        if len(rows) > max_terms:
-            raise ValueError(f"fuzzy {term!r} expands past {max_terms} terms")
-        return sorted(r["term"] for r in rows)
+        return self._expand(
+            self._fuzzy_candidates(term, max_edits),
+            max_terms,
+            f"fuzzy {term!r} expands past {max_terms} terms",
+        )
 
     def fuzzy_docs(self, term: str, max_edits: int = 1,
                    max_terms: int = 1024) -> DataFrame:
@@ -1224,15 +1267,11 @@ class IndexReader:
             pattern.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
             .replace("*", "%").replace("?", "_")
         )
-        rows = (
-            self._term_stats.where(F.col("term").like(like))
-            .select("term")
-            .limit(max_terms + 1)
-            .collect()
+        return self._expand(
+            self._term_stats.where(F.col("term").like(like)),
+            max_terms,
+            f"wildcard {pattern!r} expands past {max_terms} terms",
         )
-        if len(rows) > max_terms:
-            raise ValueError(f"wildcard {pattern!r} expands past {max_terms} terms")
-        return sorted(r["term"] for r in rows)
 
     def wildcard_docs(self, pattern: str, max_terms: int = 1024) -> DataFrame:
         return self._docs_for_terms(self.expand_wildcard(pattern, max_terms))
@@ -1245,15 +1284,11 @@ class IndexReader:
         note: the registered oracle uses DuckDB regexp_full_match — stick
         to the POSIX-common subset (classes, dots, quantifiers,
         alternation) that Java and RE2 agree on."""
-        rows = (
-            self._term_stats.where(F.col("term").rlike(f"^(?:{pattern})$"))
-            .select("term")
-            .limit(max_terms + 1)
-            .collect()
+        return self._expand(
+            self._term_stats.where(F.col("term").rlike(f"^(?:{pattern})$")),
+            max_terms,
+            f"regexp {pattern!r} expands past {max_terms} terms",
         )
-        if len(rows) > max_terms:
-            raise ValueError(f"regexp {pattern!r} expands past {max_terms} terms")
-        return sorted(r["term"] for r in rows)
 
     def regexp_docs(self, pattern: str, max_terms: int = 1024) -> DataFrame:
         """Docs containing any dictionary term full-matching ``pattern``
@@ -1282,26 +1317,9 @@ class IndexReader:
         through the pruned posting union — the seed doc itself stays in
         the result (unlike more_like_this, which is a ranking API and
         drops it)."""
-        from collections import Counter
-
-        rows = (
-            self.spark.read.parquet(str(self.dir / "docs/data"))
-            .where(F.col("doc_id") == doc_id)
-            .select("text")
-            .collect()
+        return self._docs_for_terms(
+            self._top_tfidf(self._doc_terms(doc_id), max_terms)
         )
-        if not rows:
-            raise ValueError(f"doc_id {doc_id} not in index")
-        tf = Counter(tokenize_py(rows[0]["text"], self.profile))
-        dfs = self.term_dfs(sorted(tf))
-        ranked = sorted(
-            (
-                (-round(c * float(idf_np(self.N, dfs.get(t, 0))), 6), t)
-                for t, c in tf.items()
-            ),
-        )[:max_terms]
-        terms = [t for _, t in ranked]
-        return self._docs_for_terms(terms)
 
     def rare_terms(self, max_doc_count: int, size: int = 10) -> DataFrame:
         """ES ``rare_terms`` aggregation over the analyzed text field:
@@ -1679,8 +1697,6 @@ class IndexReader:
         scorer's ``_sidecar_rows`` read) for doc_len; N and avgdl are the
         reader's live values. The checkpoint is not released when the
         result is dropped."""
-        from ..functions.bm25 import bm25_cols
-
         m = self.phrase_docs(phrase, with_freq=True, slop=slop).localCheckpoint(
             eager=True
         )
@@ -1690,12 +1706,12 @@ class IndexReader:
         def attach_len(it):
             batches = list(it)
             if batches:
-                pdf = pd.concat(batches)
-                yield pdf.assign(
-                    doc_len=_doc_lens(doclens, pdf["doc_id"].to_numpy(), dps)
-                )
+                tbl = pa.Table.from_batches(batches)
+                lens = _doc_lens(doclens, tbl["doc_id"].to_numpy(), dps)
+                tbl = tbl.append_column("doc_len", pa.array(lens))
+                yield from tbl.to_batches()
 
-        return m.mapInPandas(
+        return m.mapInArrow(
             attach_len, "doc_id long, phrase_freq long, doc_len long"
         ).select(
             "doc_id",
@@ -1750,17 +1766,7 @@ class IndexReader:
         sidecar row; dfs come from the pruned term_stats read
         (delete-adjusted when tombstones exist) — everything is
         metadata-sized."""
-        rows = (
-            self.spark.read.parquet(str(self.dir / "docs/data"))
-            .where(F.col("doc_id") == doc_id)
-            .select("text")
-            .collect()
-        )
-        if not rows:
-            raise ValueError(f"doc_id {doc_id} not in index")
-        from collections import Counter
-
-        tf = Counter(tokenize_py(rows[0]["text"], self.profile))
+        tf = self._doc_terms(doc_id)
         dfs = self.term_dfs(sorted(tf))
         return self.spark.createDataFrame(
             [(t, int(c), int(dfs.get(t, 0))) for t, c in sorted(tf.items())],
@@ -1784,18 +1790,15 @@ class IndexReader:
         if len(toks) != 1:
             raise ValueError("term_positions takes exactly one analyzed term")
 
-        def collect_pos(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids, tfs = _decode_blocks_batch(pdf)
-            pos = _decode_positions_batch(pdf, tfs)
-            ends = np.cumsum(tfs)
-            return pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "positions": [
-                        pos[e - n : e].tolist() for n, e in zip(tfs, ends)
-                    ],
-                }
-            )
+        def collect_pos(runs):
+            ((_, cols),) = runs
+            ids, tfs = _decode_blocks_batch(cols)
+            pos = _decode_positions_batch(cols, tfs)
+            offsets = np.concatenate(([0], np.cumsum(tfs))).astype(np.int32)
+            return {
+                "doc_id": ids,
+                "positions": pa.ListArray.from_arrays(offsets, pos),
+            }
 
         return self._per_segment(toks, collect_pos, out_schema, positions=True)
 
@@ -2154,25 +2157,20 @@ class IndexReader:
         uniq = sorted({t for s in slots for t in s})
         seq = [sorted(set(s)) for s in slots]
 
-        def collect_phrase(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty_cols = {"doc_id": pd.Series(dtype="int64")}
-            if with_freq:
-                empty_cols["phrase_freq"] = pd.Series(dtype="int64")
-            empty = pd.DataFrame(empty_cols)
+        def collect_phrase(runs):
             # phase 1: doc-id-only decode per term → candidate docs =
             # AND intersection of the per-slot unions. Positions never
             # decode for docs that miss any slot (head-term phrases skip
             # most of their blocks).
             per_term = {
-                t: (grp, *_decode_blocks_batch(grp))
-                for t, grp in pdf.groupby("term", sort=True)
+                t: (cols, *_decode_blocks_batch(cols)) for t, cols in runs
             }
             cand_docs = None
             for slot in seq:
                 present = [t for t in slot if t in per_term]
                 if not present:
                     # a segment missing every term of a slot can't match
-                    return empty
+                    return None
                 slot_ids = (
                     np.unique(per_term[present[0]][1])
                     if len(present) == 1
@@ -2186,7 +2184,7 @@ class IndexReader:
                     else np.intersect1d(cand_docs, slot_ids, assume_unique=True)
                 )
                 if not len(cand_docs):
-                    return empty
+                    return None
 
             # phase 2: decode positions ONLY for blocks whose doc range
             # overlaps a candidate (block-max-style skipping) — the
@@ -2194,20 +2192,20 @@ class IndexReader:
             # candidate docs' tokens, then verify adjacency via shifted
             # (doc << POS_BITS | pos) key-set intersection
             keys: dict[str, np.ndarray] = {}
-            for t, (grp, ids, tfs_) in per_term.items():
-                idx = np.searchsorted(cand_docs, grp["first_doc_id"].to_numpy())
+            for t, (cols, ids, tfs_) in per_term.items():
+                idx = np.searchsorted(cand_docs, cols["first_doc_id"])
                 keep = (idx < len(cand_docs)) & (
                     cand_docs[np.minimum(idx, len(cand_docs) - 1)]
-                    <= grp["last_doc_id"].to_numpy()
+                    <= cols["last_doc_id"]
                 )
                 if not keep.any():
                     # no candidate doc holds this term: fatal only for a
                     # singleton slot (checked via the slot-union below)
                     keys[t] = np.empty(0, dtype=np.int64)
                     continue
-                in_kept = np.repeat(keep, grp["count"].to_numpy())
+                in_kept = np.repeat(keep, cols["count"])
                 ids, tfs_ = ids[in_kept], tfs_[in_kept]
-                pos = _decode_positions_batch(grp[keep], tfs_)
+                pos = _decode_positions_batch(_take(cols, keep), tfs_)
                 doc_per_tok = np.repeat(ids, tfs_)
                 m = np.isin(doc_per_tok, cand_docs, assume_unique=False)
                 keys[t] = np.sort((doc_per_tok[m] << POS_BITS) | pos[m])
@@ -2222,7 +2220,7 @@ class IndexReader:
 
             sks = [slot_keys(s) for s in seq]
             if any(not len(k) for k in sks):
-                return empty
+                return None
             starts = sks[0]
             # slop=0 is the exact phrase in BOTH phrase modes (an
             # unordered shifted window of span 0 forces consecutive
@@ -2266,7 +2264,7 @@ class IndexReader:
                     ok &= inb & (v <= U)
                 valid = U[ok]
                 if not len(valid):
-                    return empty
+                    return None
                 ranks, freqs = np.unique(valid >> POS2, return_counts=True)
                 out = {"doc_id": cand_docs[ranks].astype(np.int64)}
                 if with_freq:
@@ -2274,7 +2272,7 @@ class IndexReader:
                     # valid window-end elements, the unordered analogue
                     # of ordered mode's count of match starts
                     out["phrase_freq"] = freqs.astype(np.int64)
-                return pd.DataFrame(out)
+                return out
             else:
                 # greedy in-order walk, all starts at once: per slot, jump
                 # to its smallest key strictly after the current one; a
@@ -2290,16 +2288,16 @@ class IndexReader:
                     alive &= ok & ((nxt >> POS_BITS) == start_doc)
                     cur = np.where(alive, nxt, cur)
                     if not alive.any():
-                        return empty
+                        return None
                 alive &= (cur - starts) <= (len(seq) - 1 + slop)
                 cand = starts[alive]
             if not len(cand):
-                return empty
+                return None
             match_docs_arr, freqs = np.unique(cand >> POS_BITS, return_counts=True)
             out = {"doc_id": match_docs_arr.astype(np.int64)}
             if with_freq:
                 out["phrase_freq"] = freqs.astype(np.int64)
-            return pd.DataFrame(out)
+            return out
 
         return self._per_segment(uniq, collect_phrase, out_schema, positions=True)
 

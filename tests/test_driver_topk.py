@@ -140,11 +140,18 @@ ARRIVAL_QUERY = "the keta for and"
 
 
 @pytest.mark.parametrize("which", ["clean", "tomb"])
-@pytest.mark.parametrize("mode", ["top10", "after", "per_term_round"])
-def test_score_segments_ignores_arrival_order(spark, indexes, which, mode):
+@pytest.mark.parametrize(
+    "mode", ["top10", "after", "per_term_round", "match_docs_or"]
+)
+def test_score_segments_ignores_arrival_order(
+    spark, indexes, monkeypatch, which, mode
+):
     """A multi-segment, multi-term pruned table scored as shuffled record
     batches gives exactly the hits of the sorted whole table, and the
-    oracle's: the scorer orders the rows itself."""
+    oracle's: the scorer orders the rows itself. ``match_docs_or`` feeds
+    the same tables to a decode operator's per-task function (the one
+    ``match_docs`` hands to ``mapInArrow``), which must give the doc set
+    of the sorted table and of the live corpus."""
     idx, oracle = indexes[which]
     rd = IndexReader(spark, idx)
     terms = sorted(set(tokenize_py(ARRIVAL_QUERY, rd.profile)))
@@ -159,6 +166,25 @@ def test_score_segments_ignores_arrival_order(spark, indexes, which, mode):
     )
     arrived = _arrived(post, np.random.default_rng(7))
     assert arrived["term"].num_chunks == 5
+
+    if mode == "match_docs_or":
+        tasks = []
+        real = topk._decode_task
+        monkeypatch.setattr(
+            topk, "_decode_task", lambda *a: tasks.append(real(*a)) or tasks[-1]
+        )
+        rd.match_docs(ARRIVAL_QUERY, "or")
+
+        def doc_ids(tbl):
+            out = list(tasks[0](iter(tbl.to_batches())))
+            assert len(out) == len(set(tbl["segment_id"].to_pylist()))
+            return np.concatenate([b["doc_id"].to_numpy() for b in out])
+
+        got = np.sort(doc_ids(arrived))
+        np.testing.assert_array_equal(got, np.sort(doc_ids(whole)))
+        live = set().union(*(oracle.postings[t][0].tolist() for t in terms))
+        assert got.tolist() == sorted(live)
+        return
 
     k, after = 10, None
     want = score_query(oracle, ARRIVAL_QUERY, k=k)

@@ -9,6 +9,9 @@ story depends on, asserted on the actual executed plans (not docstrings).
 - a search() plan is one exchange and no join, on clean and tombstoned
   readers alike (the df map rides the scoring closure, the sidecar is a
   per-task point read);
+- every posting-decode operator plans the same scan → one segment
+  exchange → per-task Arrow step, with no join and no sort, on clean and
+  tombstoned readers alike;
 - ANN index queries list only the probed partition directories.
 """
 
@@ -122,17 +125,43 @@ DECODE_OPS = {
 }
 
 
-@pytest.mark.parametrize("op", list(DECODE_OPS))
-def test_decode_plan_prunes_one_segment_exchange(pos_reader, op):
+@pytest.fixture(scope="module")
+def tomb_pos_reader(spark, pos_reader, tmp_path_factory):
+    """A copy of ``pos_reader``'s index with docs in several segments
+    tombstoned."""
+    import shutil
+
+    from aether_elasticsearch_consumer_spark.plans.tombstones import (
+        apply_deletes,
+    )
+
+    idx = tmp_path_factory.mktemp("planprops_pos_del") / "idx"
+    shutil.copytree(pos_reader.dir, idx)
+    apply_deletes(spark, str(idx), [0, 17, 40, 41, 150, 299])
+    return IndexReader(spark, str(idx))
+
+
+@pytest.mark.parametrize(
+    "case", list(DECODE_OPS) + [f"{op}-tomb" for op in DECODE_OPS]
+)
+def test_decode_plan_prunes_one_segment_exchange(request, case):
     """Every posting-decode operator plans the one pruned scan (directory
-    pruning on term_bucket) and exactly one exchange by segment on a
-    clean reader (19 segments: a multi-task exchange width); only the
-    minimum_should_match clause count adds exchanges, for its own
-    count-distinct aggregate on top."""
-    plan = _plan(DECODE_OPS[op](pos_reader))
+    pruning on term_bucket) and exactly one exchange by segment, then the
+    per-task Arrow step (19 segments: a multi-task exchange width). A
+    tombstoned reader plans the same: dead ids are masked per segment in
+    the task, so no plan joins or sorts. Only the minimum_should_match
+    clause count adds exchanges, for its own count-distinct aggregate on
+    top."""
+    op, _, tomb = case.partition("-")
+    rd = request.getfixturevalue("tomb_pos_reader" if tomb else "pos_reader")
+    assert rd.has_deletes == bool(tomb)
+    plan = _plan(DECODE_OPS[op](rd))
     assert "PartitionFilters" in plan
     assert "term_bucket" in plan.split("PartitionFilters")[1][:200]
     assert plan.count("Exchange hashpartitioning(segment_id") == 1
+    assert "MapInArrow" in plan
+    for node in ("Join", "FlatMapGroupsInPandas", "Sort"):
+        assert node not in plan, node
     if op != "bool_docs_msm":
         assert plan.count("Exchange") == 1
 
@@ -148,9 +177,10 @@ def _exchange_width(df) -> int:
 
 def test_segment_exchange_width_follows_work(spark, pos_reader, monkeypatch):
     """The scorer's segment exchange takes one task per
-    ``_DF_PER_SCORE_TASK`` postings of the query terms; the decode
-    operators' one per ``_SEGMENTS_PER_DECODE_TASK`` segments; both
-    capped at the segment count (19 here) and the cluster width."""
+    ``_DF_PER_SCORE_TASK`` postings of the query terms; every decode
+    operator's one per ``_SEGMENTS_PER_DECODE_TASK`` segments, whatever
+    its terms' df; both capped at the segment count (19 here) and the
+    cluster width."""
     monkeypatch.setattr(topk, "_DRIVER_SCORE_MAX_DF", 0)
     rd = pos_reader
     n_seg = -(-rd.N // rd.dps)
@@ -161,8 +191,14 @@ def test_segment_exchange_width_follows_work(spark, pos_reader, monkeypatch):
         monkeypatch.setattr(topk, "_DF_PER_SCORE_TASK", per)
         assert _exchange_width(rd.search("the keta", k=5)) == want, per
         assert _exchange_width(rd.score_matches("the keta")) == want, per
-    want = min(cap, -(-n_seg // topk._SEGMENTS_PER_DECODE_TASK))
-    assert _exchange_width(rd.match_docs("the keta", "or")) == want
+    per_decode = topk._SEGMENTS_PER_DECODE_TASK
+    for per, want in [
+        (per_decode, min(cap, -(-n_seg // per_decode))), (n_seg, 1), (1, cap)
+    ]:
+        monkeypatch.setattr(topk, "_SEGMENTS_PER_DECODE_TASK", per)
+        assert _exchange_width(rd.match_docs("the keta", "or")) == want
+        assert _exchange_width(rd.term_positions("keta")) == want
+        assert _exchange_width(rd.phrase_docs("the keta")) == want
 
 
 def test_bucket_pruning_reads_file_subset(reader):

@@ -6,7 +6,7 @@ Contracts:
   score ties;
 - collapse returns the per-key leaders of the EXHAUSTIVE match set;
 - more_like_this term selection follows the documented tf·idf rule and
-  retrieval drops the seed.
+  retrieval drops the seed; the seed doc's read starts no Spark job.
 All verified against direct python evaluation over the same corpus.
 """
 
@@ -19,6 +19,7 @@ import pytest
 
 from aether_elasticsearch_consumer_spark.fixtures.webtext import webtext_df
 from aether_elasticsearch_consumer_spark.functions.bm25 import idf_np
+from aether_elasticsearch_consumer_spark.functions.tokenizer import tokenize_py
 from aether_elasticsearch_consumer_spark.operators.topk import IndexReader
 from aether_elasticsearch_consumer_spark.oracle.engine import (
     build_oracle_index,
@@ -128,6 +129,24 @@ def test_more_like_this_matches_python(xidx):
         for r in rd.more_like_this(seed, max_query_terms=10, k=10).collect()
     ]
     assert got == want and got
+
+
+def test_seed_doc_read_runs_no_spark_job(jobs_in, xidx):
+    """The seed doc's terms are a pyarrow point read of the docs sidecar:
+    building ``more_like_this`` (seed read, tf·idf selection and a search
+    under the driver-side cap) and ``term_vectors`` starts no Spark job,
+    and an id the index never held is still a named error."""
+    rd, docs, _ = xidx
+    seed, text, _ = docs[5]
+    frames = []
+    assert jobs_in(lambda: frames.append(rd.more_like_this(seed))) == 0
+    assert jobs_in(lambda: frames.append(rd.term_vectors(seed))) == 0
+    tf = Counter(tokenize_py(text))
+    assert [(r["term"], r["tf"]) for r in frames[1].collect()] == sorted(
+        tf.items()
+    )
+    with pytest.raises(ValueError, match="not in index"):
+        rd.more_like_this(10**9)
 
 
 def test_boosting_and_function_score_match_python(spark, xidx):

@@ -64,103 +64,6 @@ def varbyte_decode(buf: bytes | bytearray | memoryview) -> np.ndarray:
     return np.add.reduceat(contrib, starts)
 
 
-# -- PForDelta (NewPFD) — the alternative block coding -----------------------
-# The north-star names "varbyte/PForDelta"; both are implemented and
-# measured (BENCH/BASELINE.md round 4). NewPFD packs each 128-value block
-# at a fixed bit-width b chosen to minimize size, with values ≥ 2^b stored
-# as exceptions (position + overflow bits, varbyte'd). Fully vectorized:
-# the only Python loop in the codec runs over candidate bit-widths.
-# Varbyte remains the wire format — see the measurement for why.
-
-
-def pfor_encode(values: np.ndarray) -> bytes:
-    """NewPFD-encode a non-negative uint64 array → bytes.
-
-    Layout: [b:1][n:2][n_exc:2][packed low bits][varbyte exc positions
-    (delta-1)][varbyte exc overflow (value >> b)]."""
-    v = np.asarray(values, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
-        return b"\x00\x00\x00\x00\x00"
-    if n > 0xFFFF:
-        raise ValueError("pfor block too large")
-    maxbits = int(v.max()).bit_length()
-    best_b, best_cost = maxbits, None
-    for b in range(maxbits + 1):
-        n_exc = int((v >= (np.uint64(1) << np.uint64(b))).sum()) if b < 64 else 0
-        if b == 0 and n_exc:
-            exc_cost = n_exc * 3
-        else:
-            exc_cost = n_exc * 3  # ~1-2 bytes position delta + ~1+ overflow
-        cost = (n * b + 7) // 8 + exc_cost
-        if best_cost is None or cost < best_cost:
-            best_b, best_cost = b, cost
-    b = best_b
-    if b >= 64:
-        lows = v
-        exc_idx = np.empty(0, dtype=np.int64)
-    else:
-        thresh = np.uint64(1) << np.uint64(b)
-        exc_mask = v >= thresh
-        exc_idx = np.flatnonzero(exc_mask)
-        lows = v & (thresh - np.uint64(1)) if b else np.zeros(n, np.uint64)
-    if b:
-        bits = (
-            (lows[:, None] >> np.arange(b, dtype=np.uint64)) & np.uint64(1)
-        ).astype(np.uint8)
-        packed = np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-    else:
-        packed = b""
-    if len(exc_idx):
-        pos_deltas = np.empty(len(exc_idx), dtype=np.uint64)
-        pos_deltas[0] = exc_idx[0]
-        pos_deltas[1:] = np.diff(exc_idx) - 1
-        exc_pos = varbyte_encode(pos_deltas)
-        exc_val = varbyte_encode(v[exc_idx] >> np.uint64(b))
-    else:
-        exc_pos = exc_val = b""
-    head = bytes([b]) + n.to_bytes(2, "little") + len(exc_idx).to_bytes(2, "little")
-    return (
-        head
-        + len(exc_pos).to_bytes(2, "little")
-        + packed
-        + exc_pos
-        + exc_val
-    )
-
-
-def pfor_decode(buf: bytes | bytearray | memoryview) -> np.ndarray:
-    """Decode a ``pfor_encode`` buffer → uint64 array."""
-    mv = memoryview(buf)
-    b = mv[0]
-    n = int.from_bytes(mv[1:3], "little")
-    n_exc = int.from_bytes(mv[3:5], "little")
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    exc_pos_len = int.from_bytes(mv[5:7], "little")
-    off = 7
-    packed_len = (n * b + 7) // 8
-    if b:
-        bits = np.unpackbits(
-            np.frombuffer(mv[off:off + packed_len], dtype=np.uint8),
-            bitorder="little",
-        )[: n * b].reshape(n, b)
-        out = (
-            bits.astype(np.uint64)
-            << np.arange(b, dtype=np.uint64)[None, :]
-        ).sum(axis=1, dtype=np.uint64)
-    else:
-        out = np.zeros(n, dtype=np.uint64)
-    off += packed_len
-    if n_exc:
-        pos_deltas = varbyte_decode(mv[off:off + exc_pos_len]).astype(np.int64)
-        pos_deltas[1:] += 1
-        idx = np.cumsum(pos_deltas)
-        overflow = varbyte_decode(mv[off + exc_pos_len:])[:n_exc]
-        out[idx] |= overflow << np.uint64(b)
-    return out
-
-
 def delta_encode(doc_ids: np.ndarray) -> np.ndarray:
     """Strictly-increasing doc_ids → first-value + gaps-1 (denser varbytes)."""
     d = np.asarray(doc_ids, dtype=np.int64)

@@ -3,17 +3,24 @@
 Beyond the reference surface (its idempotent doc-id upsert, S4, is exact
 dedup by key); these cover content-level dedup at corpus scale:
 
-- ``exact_dedup``        — hash-groupBy on normalized content (one shuffle,
-                           map-side partial agg)
-- ``minhash_lsh``        — shingle → minhash signature → banded LSH
-                           bucket-join; all JVM-side Column ops (no Python
-                           in the hot path), candidate pairs verified with
-                           true Jaccard. The scale path: cost is
-                           O(docs × bands) shuffle, never O(n²).
-- ``simhash``            — 64-bit weighted bit-vote fingerprint (Arrow UDF,
-                           vectorized bit ops), hamming-distance buckets
-- ``ngram_jaccard_pairs``— exact n-gram Jaccard within blocking keys
-- ``embedding_neardup``  — cosine near-duplicate pairs within blocks
+- ``exact_dedup``          — hash-keyed window min on normalized content
+                             (one shuffle)
+- ``minhash_lsh_pairs``    — shingle (JVM Column ops) → minhash signature
+                             (a pandas UDF over 31-bit gram folds) → band
+                             buckets; candidates verified with exact
+                             Jaccard on the raw grams
+- ``simhash_neardup_pairs``— 64-bit weighted bit-vote fingerprint (pandas
+                             UDF, vectorized bit ops), pigeonhole chunks as
+                             buckets, verified by hamming distance
+- ``embedding_neardup_lsh``— random-hyperplane bits as buckets, verified
+                             by exact cosine
+- ``ngram_jaccard_pairs``  — exact n-gram Jaccard within blocking keys
+- ``embedding_neardup_pairs`` — exact cosine pairs within blocks
+
+The three LSH operators share ONE band → candidate → verify path,
+``_lsh_pairs``: each supplies only its payload, its per-band bucket
+Columns and its verify Column. The cost is O(docs × bands) shuffle,
+never O(n²).
 
 Determinism: all hash coefficients derive from a fixed seed; minhash uses
 universal hashing (a·x+b mod p) over 31-bit folds of xxhash64 so products
@@ -64,13 +71,11 @@ def exact_dedup(
     )
 
 
-def shingle_hashes(
-    text: Column, n: int = 3, profile: str = "ascii", hashed: bool = True
-) -> Column:
-    """Word n-gram shingles, all Column ops: tokenize → sliding window via
-    transform(sequence) → (optionally) xxhash64 folded to 31 bits.
-    hashed=False keeps raw gram strings (SQL-oracle-comparable); hashed=True
-    is the scale path (fixed-width ints shuffle ~5× lighter than strings).
+def shingle_hashes(text: Column, n: int = 3, profile: str = "ascii") -> Column:
+    """Distinct word n-gram shingles as raw gram strings (what the SQL
+    oracle compares), all Column ops: tokenize → sliding window via
+    transform(sequence). A doc shorter than ``n`` tokens yields one gram
+    of all its tokens, as the oracle's ``greatest(len - 2, 1)`` does.
 
     The token array is BOUND as a lambda variable before the sliding
     window runs: a free tokenize expression inside a higher-order-function
@@ -83,14 +88,15 @@ def shingle_hashes(
 
     # transform over a 1-element array evaluates tokenize ONCE and exposes
     # the result as a bound variable for the nested lambda
-    grams = F.element_at(
-        F.transform(F.array(tokenize_col(text, profile)), grams_of), 1
-    )
-    if not hashed:
-        return F.array_distinct(grams)
     return F.array_distinct(
-        F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit(MERSENNE_P)))
+        F.element_at(F.transform(F.array(tokenize_col(text, profile)), grams_of), 1)
     )
+
+
+def fold31(grams: Column) -> Column:
+    """Each gram's xxhash64 folded to 31 bits — the minhash input, so
+    a·x+b of the universal hash stays in int64."""
+    return F.transform(grams, lambda g: F.pmod(F.xxhash64(g), F.lit(MERSENNE_P)))
 
 
 def minhash_signature(
@@ -150,6 +156,107 @@ def minhash_signature_arrow(n_hashes: int = 64, seed: int = 42):
     return sig_udf
 
 
+def _lsh_candidates(base: DataFrame, buckets: list[Column]) -> DataFrame:
+    """The one band → candidate step of the LSH pair operators: the
+    deduped ``(id_a, id_b)`` pairs, id_a < id_b, of ``base`` rows that
+    share a bucket in some band. ``base`` is a persisted ``(id, p)``
+    frame and ``buckets`` holds one bucket Column per band over it. Only
+    docs sharing a band bucket are ever paired, so the cost is
+    O(docs × bands) shuffle plus the bucket sizes, never O(n²).
+
+    - The band rows are ``(id, band, bucket)`` ONLY, checkpointed eagerly:
+      the payload never rides the ×bands explode, both self-join sides
+      read the one materialized table instead of each re-running the
+      signature branch, and the truncated lineage stops the signature
+      plan re-serializing into every later stage (round 6: ~0.9 s of
+      driver time per join-side job on the minhash pandas UDF)."""
+    banded = (
+        base.select(
+            "id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(i).alias("band"), b.alias("bucket"))
+                        for i, b in enumerate(buckets)
+                    ]
+                )
+            ).alias("bb"),
+        )
+        .select("id", "bb.band", "bb.bucket")
+        .localCheckpoint(eager=True)
+    )
+    left, right = banded.alias("l"), banded.alias("r")
+    return (
+        left.join(
+            right,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l.id") < F.col("r.id")),
+        )
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _lsh_pairs(
+    base: DataFrame, buckets: list[Column], verify: Column, keep: Column
+) -> DataFrame:
+    """:func:`_lsh_candidates`, then verification of the candidates with
+    their payloads re-attached by id. ``verify`` is an aliased Column over
+    the pair's payloads ``p_a`` / ``p_b`` and ``keep`` its threshold
+    predicate. Returns the verified ``(id_a, id_b, <verify>)`` rows,
+    ordered and checkpointed; ``base`` is unpersisted on every exit.
+
+    - The candidates are checkpointed: they feed two id projections and
+      the join spine.
+    - The payload re-attaches to the candidates only (guide §8 "move big
+      rows once"): id semi-joins prune ``base`` first, so the payload of
+      non-candidates never moves; the verify exchanges are pinned to
+      defaultParallelism (AQE otherwise folds the small candidate shuffle
+      to ~4 tasks, serializing verification) and hash-joined (a
+      sort-merge join would sort the payload arrays). Round 6 measured
+      this shape on minhash at 2.76× with an identical pair set.
+    - ``base`` is a persist, not a checkpoint: a checkpointed LogicalRDD
+      pins all columns and loses per-consumer column pruning. The
+      verified pair set is small, so it is materialized before ``base``
+      is released; the checkpoint blocks free with their frames via the
+      ContextCleaner."""
+    try:
+        cand = _lsh_candidates(base, buckets).localCheckpoint(eager=True)
+        par = base.sparkSession.sparkContext.defaultParallelism
+
+        def side(s: str) -> DataFrame:
+            ids = cand.select(F.col(f"id_{s}").alias("id")).distinct()
+            return (
+                base.join(ids, "id", "left_semi")
+                .select(F.col("id").alias(f"id_{s}"), F.col("p").alias(f"p_{s}"))
+                .repartition(par, f"id_{s}")
+                .hint("SHUFFLE_HASH")
+            )
+
+        pairs = (
+            cand.repartition(par, "id_a")
+            .join(side("a"), "id_a")
+            .repartition(par, "id_b")
+            .join(side("b"), "id_b")
+        )
+        return (
+            pairs.select("id_a", "id_b", verify)
+            .where(keep)
+            .orderBy("id_a", "id_b")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        base.unpersist()
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact Jaccard of two gram sets, rounded to 6 dp as the oracle does."""
+    return F.round(
+        F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b)), 6
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -159,167 +266,26 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
     profile: str = "ascii",
-    max_bucket_size: int | None = None,
-    hashed: bool = True,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
+    """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold): the raw
+    gram sets persist as the payload, the pandas-UDF minhash signature of
+    their 31-bit folds cuts into ``bands`` bucket hashes, and
+    :func:`_lsh_pairs` verifies candidates with exact Jaccard on the raw
+    grams (what a SQL oracle computes — a hash fold's collisions could
+    perturb the 6-dp value).
 
-    Stages: signature (narrow) → explode bands (×bands) → self-join on
-    (band, bucket) (shuffle on band hash — uniform by construction) →
-    candidate-id dedup → re-attach shingle sets by two id joins → exact
-    Jaccard verification. Only docs sharing a band bucket are ever paired,
-    so worst case is bounded by bucket sizes, not n².
-
-    Scale notes:
-    - band rows are (id, band, bucket) ONLY — the shingle arrays never
-      ride the ×bands explode through the shuffle (they re-attach to the
-      small deduped pair set afterwards);
-    - ``max_bucket_size``: a bucket of m near-identical docs still emits
-      m²/2 pairs; at corpus scale set a cap so degenerate buckets
-      (boilerplate pages) are skipped instead of strangling one task —
-      members of a skipped bucket still pair through their other bands.
-    - default 32 bands × 2 rows: candidate recall at jaccard j is
-      1-(1-j²)^32 (≥0.9999 at j=0.5), so verified output is in practice
-      the full jaccard_threshold pair set.
-    - ``hashed=False`` verifies Jaccard on RAW gram strings (exactly what a
-      SQL oracle computes — 31-bit hash-fold collisions can perturb the
-      6-dp jaccard); ``hashed=True`` is the scale path (fixed-width int
-      shingles join ~5× lighter). Signatures always use hashed shingles.
-    """
+    The default 32 bands × 2 rows give candidate recall 1-(1-j²)^32 at
+    jaccard j (≥0.9999 at j=0.5), so the verified output is in practice
+    the full threshold pair set."""
     r = n_hashes // bands
-    # the shingle table feeds three consumers (banding + two candidate
-    # re-attach joins); persist it so tokenize+shingle runs once — at
-    # corpus scale this is the materialized build artifact. persist, NOT
-    # localCheckpoint: a checkpointed LogicalRDD pins ALL columns and
-    # loses per-consumer column pruning (the banding branch reads only
-    # (id, shi), the re-attach joins only (id, sh) — measured 3× slower
-    # checkpointed). The cache is explicitly unpersisted below once the
-    # (tiny) verified pair set is materialized, closing the round-2
-    # advisor's storage-leak finding. The hashed int shingles ("shi", the
-    # minhash input) persist alongside the raw grams: computed inline
-    # they would re-evaluate the per-gram hash fold inside each of the
-    # n_hashes minhash expressions after project collapse.
-    grams = shingle_hashes(F.col(text_col), shingle_n, profile, hashed)
-    # bind the gram expression ONCE: referencing it from both the sh and
-    # shi output columns re-evaluated the whole tokenize+shingle HOF tree
-    # per column (round 6, measured ~92 → ~55 core-s on the base stage)
-    bound = F.element_at(
-        F.transform(
-            F.array(grams),
-            lambda g: F.struct(
-                g.alias("sh"),
-                (
-                    g
-                    if hashed
-                    else F.transform(
-                        g, lambda x: F.pmod(F.xxhash64(x), F.lit(MERSENNE_P))
-                    )
-                ).alias("shi"),
-            ),
-        ),
-        1,
-    )
-    base = (
-        df.select(F.col(id_col).alias("id"), bound.alias("_b"))
-        .select("id", F.col("_b.sh").alias("sh"), F.col("_b.shi").alias("shi"))
-        .persist()
-    )
-    sig = base.select(
-        "id", minhash_signature_arrow(n_hashes)(F.col("shi")).alias("sig")
-    )
-    banded = sig.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(
-                            F.lit(i), F.slice("sig", i * r + 1, r)
-                        ).alias("bucket"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    # materialize the band table once: the self-join's two sides (plus
-    # the optional bucket-size semijoin) otherwise EACH re-execute the
-    # whole signature branch — the pandas-UDF minhash ran ~5× per query
-    # (measured 11.7 s → ~1 s at sf0.1). Round 6: eager localCheckpoint
-    # instead of lazy persist — the banded lineage (sig UDF + 32-struct
-    # band explode) re-serialized into every downstream stage's task
-    # closure and re-planned per AQE stage, costing ~0.9 s of driver
-    # time per join-side job; the checkpoint truncates it to a trivial
-    # scan. Rows are (id, band, bucket) only — memory is bounded the
-    # same as the persist was.
-    banded = banded.localCheckpoint(eager=True)
-    if max_bucket_size is not None:
-        ok = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("_n"))
-            .where(F.col("_n") <= max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(ok, ["band", "bucket"], "left_semi")
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        # reused three times below (two id projections + the join spine);
-        # checkpointing the tiny pair set stops each use re-running the
-        # band self-join
-        .localCheckpoint(eager=True)
-    )
-    # candidate re-attach (round 6, guide §8 "move big rows once"): prune
-    # base to the CANDIDATE docs with id-only semi-joins first — AQE
-    # broadcasts the id set when small, shuffles two int64 columns when
-    # not — so the multi-KB gram arrays of non-candidates never move;
-    # then pin the verify exchange width (AQE's byte-based coalescing
-    # otherwise folds the small candidate shuffle to ~4 tasks,
-    # serializing the exact-jaccard verification) and hash-join (a
-    # sort-merge join would SORT the gram arrays; hashing touches only
-    # the int key). Measured: 2 × 2.5 s verify stages → sub-second, and
-    # shuffle volume drops from 2 × full-corpus grams to candidates only.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    sh_a = (
-        base.join(cand.select(F.col("id_a").alias("id")).distinct(), "id", "left_semi")
-        .select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    )
-    sh_b = (
-        base.join(cand.select(F.col("id_b").alias("id")).distinct(), "id", "left_semi")
-        .select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    )
-    pairs = cand.repartition(par, "id_a").join(
-        sh_a.repartition(par, "id_a").hint("SHUFFLE_HASH"), "id_a"
-    ).repartition(par, "id_b").join(
-        sh_b.repartition(par, "id_b").hint("SHUFFLE_HASH"), "id_b"
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    result = (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-        .orderBy("id_a", "id_b")
-    )
-    # materialize the verified pair set (tiny relative to the corpus —
-    # its checkpoint blocks free with the returned plan via the
-    # ContextCleaner) so the shingle cache can be released NOW instead of
-    # leaking across calls
-    out = result.localCheckpoint(eager=True)
-    base.unpersist()
-    # banded's checkpoint blocks free with its RDD via the ContextCleaner
-    # once this frame returns (same lifecycle as `out`'s blocks)
-    return out
+    base = df.select(
+        F.col(id_col).alias("id"),
+        shingle_hashes(F.col(text_col), shingle_n, profile).alias("p"),
+    ).persist()
+    sig = minhash_signature_arrow(n_hashes)(fold31(F.col("p")))
+    buckets = [F.xxhash64(F.lit(i), F.slice(sig, i * r + 1, r)) for i in range(bands)]
+    jaccard = _jaccard(F.col("p_a"), F.col("p_b")).alias("jaccard")
+    return _lsh_pairs(base, buckets, jaccard, F.col("jaccard") >= jaccard_threshold)
 
 
 def ngram_jaccard_pairs(
@@ -330,34 +296,31 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     profile: str = "ascii",
-    hashed: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs within blocking keys (the small-block
     exact variant; use minhash_lsh_pairs when blocks are unbounded)."""
     base = df.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in block_cols],
-        shingle_hashes(F.col(text_col), n, profile, hashed).alias("sh"),
+        shingle_hashes(F.col(text_col), n, profile).alias("sh"),
     ).persist()  # tokenize+shingle once, not once per self-join side
     left, right = base.alias("l"), base.alias("r")
     on = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in block_cols]
     on.append(F.col("l.id") < F.col("r.id"))
-    jac = F.size(F.array_intersect(F.col("l.sh"), F.col("r.sh"))) / F.size(
-        F.array_union(F.col("l.sh"), F.col("r.sh"))
-    )
-    result = (
-        left.join(right, on)
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            F.round(jac, 6).alias("jaccard"),
+    try:
+        return (
+            left.join(right, on)
+            .select(
+                F.col("l.id").alias("id_a"),
+                F.col("r.id").alias("id_b"),
+                _jaccard(F.col("l.sh"), F.col("r.sh")).alias("jaccard"),
+            )
+            .where(F.col("jaccard") >= threshold)
+            .orderBy("id_a", "id_b")
+            .localCheckpoint(eager=True)
         )
-        .where(F.col("jaccard") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-    out = result.localCheckpoint(eager=True)
-    base.unpersist()
-    return out
+    finally:
+        base.unpersist()
 
 
 # -- SimHash ----------------------------------------------------------------
@@ -441,9 +404,9 @@ def simhash_neardup_pairs(
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming, using the
     pigeonhole block trick: split 64 bits into (max_hamming+1) chunks —
-    any qualifying pair collides on ≥1 exact chunk → bucket-join on chunk
-    value, verify hamming via bit_count(xor). Scale: shuffle on chunk
-    values, never n²."""
+    any qualifying pair collides on ≥1 exact chunk, so the chunk values
+    are the band buckets of :func:`_lsh_candidates` (recall 1 by
+    construction) and bit_count(xor) verifies."""
     chunks = max_hamming + 1
     # chunk boundaries must cover ALL 64 bits (pigeonhole requires a full
     # partition): distribute the remainder across the first chunks
@@ -454,51 +417,38 @@ def simhash_neardup_pairs(
         w = base_w + (1 if i < rem else 0)
         bounds.append((start, w))
         start += w
-    sh = df.select(
-        F.col(id_col).alias("id"), simhash_col(F.col(text_col), profile).alias("sim")
-    )
-    banded = sh.select(
-        "id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftrightunsigned(F.col("sim"), off)
-                        .bitwiseAND(F.lit(-1 if w >= 64 else (1 << w) - 1))
-                        .alias("val"),
-                    )
-                    for i, (off, w) in enumerate(bounds)
-                ]
+    base = df.select(
+        F.col(id_col).alias("id"), simhash_col(F.col(text_col), profile).alias("p")
+    ).persist()
+    buckets = [
+        F.shiftrightunsigned(F.col("p"), off).bitwiseAND(
+            F.lit(-1 if w >= 64 else (1 << w) - 1)
+        )
+        for off, w in bounds
+    ]
+    # its own verify: the candidates are read once, and the 8-byte
+    # fingerprints join back whole, which AQE broadcasts. Through
+    # _lsh_pairs' checkpointed, pruned and pinned re-attach, the later
+    # calls of dedup_simhash at sf0.1 took 1.4× as long (5/5 pairs).
+    try:
+        cand = _lsh_candidates(base, buckets)
+        sim = lambda s: base.select(  # noqa: E731
+            F.col("id").alias(f"id_{s}"), F.col("p").alias(f"p_{s}")
+        )
+        return (
+            cand.join(sim("a"), "id_a")
+            .join(sim("b"), "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.bit_count(F.col("p_a").bitwiseXOR(F.col("p_b"))).alias("hamming"),
             )
-        ).alias("cv"),
-    ).select("id", "sim", "cv.chunk", "cv.val")
-    # cache across the self-join: each side would otherwise re-run the
-    # simhash UDF (same lineage-dedup fix as minhash_lsh_pairs — lazy
-    # persist, no extra barrier; released once the pair set materializes)
-    banded = banded.persist()
-    l, r = banded.alias("l"), banded.alias("r")
-    ham = F.bit_count(F.col("l.sim").bitwiseXOR(F.col("r.sim")))
-    result = (
-        l.join(
-            r,
-            (F.col("l.chunk") == F.col("r.chunk"))
-            & (F.col("l.val") == F.col("r.val"))
-            & (F.col("l.id") < F.col("r.id")),
+            .where(F.col("hamming") <= max_hamming)
+            .orderBy("id_a", "id_b")
+            .localCheckpoint(eager=True)
         )
-        .select(
-            F.col("l.id").alias("id_a"),
-            F.col("r.id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .where(F.col("hamming") <= max_hamming)
-        .orderBy("id_a", "id_b")
-    )
-    out = result.localCheckpoint(eager=True)
-    banded.unpersist()
-    return out
+    finally:
+        base.unpersist()
 
 
 # -- embedding near-dup ------------------------------------------------------
@@ -567,8 +517,8 @@ def embedding_neardup_lsh(
     seed: int = 42,
 ) -> DataFrame:
     """Cosine near-dup pairs WITHOUT a blocking column, at scale: random-
-    hyperplane signature → banded bucket join (same LSH shape as
-    minhash_lsh_pairs) → exact cosine verification of candidates only.
+    hyperplane signature bits cut into band buckets → :func:`_lsh_pairs`
+    → exact cosine verification of candidates only.
 
     High-cosine pairs agree on most signature bits (P[bit differs] =
     angle/π ≈ 0.10 at cos 0.95), so with ``bands`` bands of
@@ -592,62 +542,19 @@ def embedding_neardup_lsh(
         )
         return (dot >= 0).cast("int")
 
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
     # plane dim = embedding dim (probe one row; arrays carry no static
     # length in the schema) — planes are fully determined by (seed, dim)
     first = df.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
     dim = int(first[0]["d"]) if first else 0
     planes = _planes(dim, n_planes, seed)
-    bits = [sig_bit(F.col("v"), planes[i].tolist()) for i in range(n_planes)]
-    banded = base.select(
-        "id",
-        "v",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.lit(b), *bits[b * r : (b + 1) * r]
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "v", "bb.band", "bb.bucket")
-    # cache across the self-join: the per-plane dot-product HOFs would
-    # otherwise evaluate once per join side (same lineage-dedup fix as
-    # minhash_lsh_pairs)
-    ids_only = banded.select("id", "band", "bucket").persist()
-    l, r_ = ids_only.alias("l"), ids_only.alias("r")
-    cand = (
-        l.join(
-            r_,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    pairs = cand.join(
-        base.select(F.col("id").alias("id_a"), F.col("v").alias("v_a")), "id_a"
-    ).join(base.select(F.col("id").alias("id_b"), F.col("v").alias("v_b")), "id_b")
-    cos = _cosine_pair_cols(F.col("v_a"), F.col("v_b"))
-    result = (
-        pairs.select(
-            "id_a", "id_b", F.round(cos, 6).alias("cosine")
-        )
-        .where(F.col("cosine") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-    out = result.localCheckpoint(eager=True)
-    ids_only.unpersist()
-    return out
+    bits = [sig_bit(F.col("p"), planes[i].tolist()) for i in range(n_planes)]
+    base = df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).cast("array<double>").alias("p"),
+    ).persist()
+    buckets = [F.xxhash64(F.lit(b), *bits[b * r : (b + 1) * r]) for b in range(bands)]
+    cosine = F.round(_cosine_pair_cols(F.col("p_a"), F.col("p_b")), 6).alias("cosine")
+    return _lsh_pairs(base, buckets, cosine, F.col("cosine") >= threshold)
 
 
 def connected_components(

@@ -1825,9 +1825,7 @@ class IndexReader:
         # the explicit repartition pins the join width: AQE otherwise
         # coalesces the small exchanges to one partition and the
         # per-matching-doc tokenize+slice projection runs serially
-        docs = self.spark.read.parquet(str(self.dir / "docs/data")).select(
-            "doc_id", "text"
-        )
+        docs = self._frame("docs/data").select("doc_id", "text")
         toks = tokenize_col("text", self.profile)
         mid = F.array(F.concat(F.lit("<em>"), F.lit(term), F.lit("</em>")))
 
@@ -1879,9 +1877,7 @@ class IndexReader:
             (F.col("_i") + 1).cast("long").alias("frag_no"),
             (F.col("_p") + 1).alias("p"),  # 1-based
         )
-        docs = self.spark.read.parquet(str(self.dir / "docs/data")).select(
-            "doc_id", "text"
-        )
+        docs = self._frame("docs/data").select("doc_id", "text")
         toks = tokenize_col("text", self.profile)
         start = F.greatest(F.lit(1), F.col("p") - window)
         prefix = F.when(
@@ -1958,9 +1954,7 @@ class IndexReader:
             .groupBy("doc_id")
             .agg((F.min(F.array_min("positions")) + 1).alias("p"))  # 1-based
         )
-        docs = self.spark.read.parquet(str(self.dir / "docs/data")).select(
-            "doc_id", "text"
-        )
+        docs = self._frame("docs/data").select("doc_id", "text")
         toks = tokenize_col("text", self.profile)
         start = F.greatest(F.lit(1), F.col("p") - window)
         frag = F.slice(toks, start, F.col("p") - start + 1 + window)

@@ -400,7 +400,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs blocked by (lang, source)."""
     return ngram_jaccard_pairs(
         _docs(spark, sf_dir), "doc_id", "text", ["lang", "source"],
-        n=3, threshold=0.01, hashed=False,
+        n=3, threshold=0.01,
     ).withColumnsRenamed({"id_a": "id_a", "id_b": "id_b"})
 
 
@@ -410,7 +410,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH output is candidate-pruned + exactly verified; at 32 bands × 2
     # rows candidate recall at j=0.5 is 1-(1-0.25)^32 ≈ 1-1e-4 per pair, so
     # the verified pair set equals the exact set on the test corpora
-    # (asserted across sf dirs in tests/test_dedup_similarity.py).
+    # (asserted at sf0.001 against a Python all-pairs brute force in
+    # tests/test_dedup_similarity.py::test_minhash_lsh_matches_exact_jaccard).
     f"""
     WITH sh AS (
       SELECT doc_id,
@@ -432,12 +433,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs (verified Jaccard ≥ 0.5). Verification
-    runs on raw gram strings (hashed=False) so the 6-dp jaccard matches
-    the SQL oracle bit-for-bit; the banded shuffle carries only
-    (id, band, bucket) rows either way."""
+    runs on the raw gram strings, so the 6-dp jaccard matches the SQL
+    oracle bit-for-bit; the banded shuffle carries only (id, band,
+    bucket) rows, and the grams re-attach to the candidate pairs only."""
     return minhash_lsh_pairs(
         _docs(spark, sf_dir), "doc_id", "text",
-        n_hashes=64, bands=32, jaccard_threshold=0.5, hashed=False,
+        n_hashes=64, bands=32, jaccard_threshold=0.5,
     )
 
 
@@ -1146,7 +1147,7 @@ def pipeline_training_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = exact_dedup(keep, ["text"], "doc_id")
     pairs = minhash_lsh_pairs(
         survivors, "doc_id", "text",
-        n_hashes=64, bands=32, jaccard_threshold=0.5, hashed=False,
+        n_hashes=64, bands=32, jaccard_threshold=0.5,
     )
     return (
         survivors.join(
@@ -2925,7 +2926,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_lsh_pairs(
         _docs(spark, sf_dir), "doc_id", "text",
-        n_hashes=64, bands=32, jaccard_threshold=0.5, hashed=False,
+        n_hashes=64, bands=32, jaccard_threshold=0.5,
     )
     return connected_components(pairs).orderBy("id")
 

@@ -35,6 +35,8 @@ ENTRIES = [
     "text_token_count",
     "dedup_exact",
     "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_ngram_jaccard",
     "ingest_filter_isin",
 ]
 

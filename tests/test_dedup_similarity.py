@@ -62,6 +62,7 @@ def test_minhash_arrow_matches_column_spec(spark, sf001_dir):
     # the vectorized Arrow signature must be bit-identical to the Column
     # expression spec (same coefficients, int64 arithmetic, sentinel p)
     from aether_elasticsearch_consumer_spark.operators.dedup import (
+        fold31,
         minhash_signature,
         minhash_signature_arrow,
         shingle_hashes,
@@ -72,7 +73,7 @@ def test_minhash_arrow_matches_column_spec(spark, sf001_dir):
         .limit(200)
         .select(
             "doc_id",
-            shingle_hashes(F.col("text"), 3, "ascii", True).alias("shi"),
+            fold31(shingle_hashes(F.col("text"), 3, "ascii")).alias("shi"),
         )
         # an empty doc exercises the sentinel path
         .union(
@@ -89,6 +90,92 @@ def test_minhash_arrow_matches_column_spec(spark, sf001_dir):
     assert both
     for r in both:
         assert list(r["spec"]) == list(r["arrow"]), r["doc_id"]
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs", "ngram_jaccard_pairs"])
+def test_minhash_lsh_matches_exact_jaccard(spark, sf001_dir, op):
+    """At the registry settings, the verified pair set and its 6-dp
+    Jaccard equal a Python all-pairs brute force over ``tokenize_py``
+    3-grams: for minhash the LSH candidates miss no pair, for both the
+    shared Jaccard Column matches the oracle. A doc of fewer than 3
+    tokens is one gram of all its tokens, as in the SQL oracle."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from aether_elasticsearch_consumer_spark.functions.tokenizer import (
+        tokenize_py,
+    )
+
+    docs = spark.read.parquet(f"{sf001_dir}/documents.parquet")
+    if op == "minhash_lsh_pairs":
+        blocks, threshold = [], 0.5
+        pairs = minhash_lsh_pairs(
+            docs, "doc_id", "text", n_hashes=64, bands=32, jaccard_threshold=0.5
+        )
+    else:
+        blocks, threshold = ["lang", "source"], 0.01
+        pairs = ngram_jaccard_pairs(
+            docs, "doc_id", "text", blocks, n=3, threshold=0.01
+        )
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+
+    def grams(text):
+        ts = tokenize_py(text)
+        return {" ".join(ts[i:i + 3]) for i in range(max(len(ts) - 3, 0) + 1)}
+
+    def r6(x):  # Spark F.round: HALF_UP on the shortest-repr decimal
+        return float(Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+
+    rows = sorted(
+        (r["doc_id"], grams(r["text"]), tuple(r[c] for c in blocks))
+        for r in docs.select("doc_id", "text", *blocks).collect()
+    )
+    assert len(rows) == 500
+    want = {}
+    for i, (a, ga, ka) in enumerate(rows):
+        for b, gb, kb in rows[i + 1:]:
+            if ka != kb or None in ka:
+                continue
+            j = r6(len(ga & gb) / len(ga | gb))
+            if j >= threshold:
+                want[(a, b)] = j
+    assert want
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "minhash_lsh_pairs",
+        "simhash_neardup_pairs",
+        "embedding_neardup_lsh",
+        "ngram_jaccard_pairs",
+    ],
+)
+def test_pair_operators_leave_no_cached_data(spark, dup_docs, op):
+    """Each pair operator returns a materialized result and releases what
+    it persisted: Spark's cache manager is left as it was found."""
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0]), (2, [0.999, 0.01, 0.0]), (3, [0.0, 1.0, 0.0])],
+        "id long, v array<double>",
+    )
+    run = {
+        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(
+            dup_docs, "id", "text", jaccard_threshold=0.5
+        ),
+        "simhash_neardup_pairs": lambda: simhash_neardup_pairs(
+            dup_docs, "id", "text", max_hamming=8
+        ),
+        "embedding_neardup_lsh": lambda: embedding_neardup_lsh(
+            vecs, "id", "v", threshold=0.95
+        ),
+        "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(
+            dup_docs.withColumn("blk", F.lit(1)), "id", "text", ["blk"]
+        ),
+    }[op]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    assert run().collect()
+    assert cache.numCachedEntries() == before
 
 
 def test_ngram_jaccard_pairs(spark, dup_docs):

@@ -139,35 +139,3 @@ class TestXxHash64:
         ).collect()[0]
         for i, w in enumerate(words):
             assert row[f"h{i}"] == xxhash64_signed(w), repr(w)
-
-
-def test_pfor_roundtrip_hypothesis():
-    """NewPFD round-trip over adversarial value distributions (zeros,
-    64-bit extremes, exception-heavy mixes)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    import numpy as np
-
-    from aether_elasticsearch_consumer_spark.functions.codec import (
-        pfor_decode,
-        pfor_encode,
-    )
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(
-            st.one_of(
-                st.integers(0, 7),
-                st.integers(0, 2**20),
-                st.integers(2**40, 2**64 - 1),
-            ),
-            min_size=0,
-            max_size=300,
-        )
-    )
-    def rt(vals):
-        v = np.array(vals, dtype=np.uint64)
-        assert np.array_equal(pfor_decode(pfor_encode(v)), v)
-
-    rt()

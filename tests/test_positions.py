@@ -302,6 +302,16 @@ def test_highlight_query_matches_python(pos_index):
     assert got == want and got
 
 
+def test_highlight_reuses_the_reader_docs_frame(jobs_in, pos_index):
+    """The highlighters read the docs sidecar through the reader's cached
+    frame: its schema-inference job runs once per reader, so building a
+    second highlight on the same reader runs no Spark job."""
+    reader, _ = pos_index
+    reader.highlight("keta")
+    assert jobs_in(lambda: reader.highlight("keta")) == 0
+    assert jobs_in(lambda: reader.highlight_fragments("keta")) == 0
+
+
 def test_highlight_edge_positions(spark, tmp_path):
     src = spark.createDataFrame(
         [
